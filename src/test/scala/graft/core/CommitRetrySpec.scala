@@ -119,6 +119,34 @@ class CommitRetrySpec extends AnyFunSuite {
     }
   }
 
+  test("a corrupt base metadata file fails the commit at once, not as a lost CAS") {
+    val cat = new HadoopCatalog(Files.createTempDirectory("graft-corrupt").toString)
+    val t0 = cat.createTable(Seq("db"), "t", schema, properties = Map(
+      CommitRetry.MinWaitKey -> "1", CommitRetry.MaxWaitKey -> "2"))
+    val good = t0.meta
+    // a handle whose reads are served from a cache (as a caching catalog
+    // would) sees the old, valid metadata; only the CAS reads the file
+    val real = t0.ops
+    val calls = new AtomicInteger(0)
+    val stale = new TableOps {
+      def location: String = real.location
+      def currentVersion(): Int = real.currentVersion()
+      def current(): Option[TableMetadata] = Some(good)
+      def commit(baseVersion: Int, updated: TableMetadata): Boolean = {
+        calls.incrementAndGet(); real.commit(baseVersion, updated)
+      }
+    }
+    val base = java.nio.file.Paths.get(s"${real.location}/metadata/v1.metadata.json")
+    Files.write(base, "{ not json".getBytes("UTF-8"))
+    val e = intercept[Exception] {
+      new GTable(stale).newAppend().appendFile(dataFile("a.parquet")).commit()
+    }
+    assert(!e.isInstanceOf[CommitConflictException], s"reported as a conflict: $e")
+    assert(e.isInstanceOf[com.fasterxml.jackson.core.JsonProcessingException], e.toString)
+    assert(calls.get === 1)
+    assert(real.currentVersion() === 1, "nothing was published")
+  }
+
   test("transactions honor the same budget") {
     val (t, ops) = tableWith(Map(
       CommitRetry.NumRetriesKey -> "1", CommitRetry.MinWaitKey -> "1",

@@ -11,8 +11,9 @@ import graft.core.types._
   * graft must load genuine Apache-Iceberg metadata.json documents —
   * v1 singular schema / bare partition-spec, operation-in-summary,
   * optional sequence-number, embedded v1 manifests, absent optional
-  * sections. The second half runs directly against the reference's own
-  * committed fixture files when the checkout is present. */
+  * sections. The second half runs against the reference's own committed
+  * fixture files when the checkout is present, else against hand-written
+  * spec documents of the same names bundled with the tests. */
 class IcebergMetadataSpec extends AnyFunSuite {
 
   // -------------------------------------------------- hand-written spec JSON
@@ -186,81 +187,82 @@ class IcebergMetadataSpec extends AnyFunSuite {
   // -------------------------------------------------- reference fixtures
 
   private val fixtureDir = "/root/reference/core/src/test/resources"
-  private def fixture(name: String): Option[String] = {
+  // the reference checkout's own file when it is present, else the
+  // hand-written spec document of the same name bundled under
+  // src/test/resources/iceberg-spec
+  private def fixture(name: String): String = {
     val p = java.nio.file.Paths.get(fixtureDir, name)
     if (java.nio.file.Files.isReadable(p))
-      Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-    else None
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    else {
+      val in = getClass.getResourceAsStream(s"/iceberg-spec/$name")
+      assert(in != null, s"bundled fixture $name is missing")
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
   }
 
   test("reference fixture: TableMetadataV2ValidMinimal") {
-    fixture("TableMetadataV2ValidMinimal.json").foreach { json =>
-      val m = MetaJson.readMetadata(json)
-      assert(m.formatVersion === 2)
-      assert(m.lastSequenceNumber === 34L)
-      assert(m.schema.struct.fields.map(_.name) === Seq("x", "y", "z"))
-      assert(m.spec.fields.head.name === "x")
-      assert(m.defaultSortOrderId === 3)
-      assert(m.currentSnapshotId === None)
-    }
+    val json = fixture("TableMetadataV2ValidMinimal.json")
+    val m = MetaJson.readMetadata(json)
+    assert(m.formatVersion === 2)
+    assert(m.lastSequenceNumber === 34L)
+    assert(m.schema.struct.fields.map(_.name) === Seq("x", "y", "z"))
+    assert(m.spec.fields.head.name === "x")
+    assert(m.defaultSortOrderId === 3)
+    assert(m.currentSnapshotId === None)
   }
 
   test("reference fixture: TableMetadataV2Valid") {
-    fixture("TableMetadataV2Valid.json").foreach { json =>
-      val m = MetaJson.readMetadata(json)
-      assert(m.currentSchemaId === 1)
-      assert(m.schemas.size === 2)
-      assert(m.schema.identifierFieldIds === Set(1, 2))
-      assert(m.currentSnapshotId === Some(3055729675574597004L))
-      assert(m.currentSnapshot.get.operation === "append")
-      assert(m.currentSnapshot.get.parentId === Some(3051729675574597004L))
-      assert(m.currentSnapshot.get.schemaId === Some(1))
-      assert(m.snapshotLog.size === 2)
-      // manifest-list paths stay absolute (s3 scheme)
-      assert(m.currentSnapshot.get.manifestListPath === "s3://a/b/2.avro")
-    }
+    val json = fixture("TableMetadataV2Valid.json")
+    val m = MetaJson.readMetadata(json)
+    assert(m.currentSchemaId === 1)
+    assert(m.schemas.size === 2)
+    assert(m.schema.identifierFieldIds === Set(1, 2))
+    assert(m.currentSnapshotId === Some(3055729675574597004L))
+    assert(m.currentSnapshot.get.operation === "append")
+    assert(m.currentSnapshot.get.parentId === Some(3051729675574597004L))
+    assert(m.currentSnapshot.get.schemaId === Some(1))
+    assert(m.snapshotLog.size === 2)
+    // manifest-list paths stay absolute (s3 scheme)
+    assert(m.currentSnapshot.get.manifestListPath === "s3://a/b/2.avro")
   }
 
   test("reference fixture: TableMetadataV1Valid") {
-    fixture("TableMetadataV1Valid.json").foreach { json =>
-      val m = MetaJson.readMetadata(json)
-      assert(m.formatVersion === 1)
-      assert(m.schema.struct.fields.map(_.id) === Seq(1, 2, 3))
-      assert(m.spec.fields.map(_.fieldId) === Seq(1000))
-      assert(m.currentSnapshotId === None)
-      assert(m.snapshots.isEmpty)
-    }
+    val json = fixture("TableMetadataV1Valid.json")
+    val m = MetaJson.readMetadata(json)
+    assert(m.formatVersion === 1)
+    assert(m.schema.struct.fields.map(_.id) === Seq(1, 2, 3))
+    assert(m.spec.fields.map(_.fieldId) === Seq(1000))
+    assert(m.currentSnapshotId === None)
+    assert(m.snapshots.isEmpty)
   }
 
   test("reference fixture: TableMetadataV3ValidMinimal") {
-    fixture("TableMetadataV3ValidMinimal.json").foreach { json =>
-      val m = MetaJson.readMetadata(json)
-      assert(m.formatVersion === 3)
-      assert(m.schemas.nonEmpty)
-    }
+    val json = fixture("TableMetadataV3ValidMinimal.json")
+    val m = MetaJson.readMetadata(json)
+    assert(m.formatVersion === 3)
+    assert(m.schemas.nonEmpty)
   }
 
   test("reference fixture: TableMetadataStatisticsFiles") {
-    fixture("TableMetadataStatisticsFiles.json").foreach { json =>
-      val m = MetaJson.readMetadata(json)
-      val sf = m.statistics.head
-      assert(sf.path === "s3://a/b/stats.puffin")
-      assert(sf.fileSizeBytes === 413L)
-      assert(sf.fileFooterSizeBytes === 42L)
-      assert(sf.blobMetadata ===
-        Seq(StatBlobMeta("ndv", 3055729675574597004L, 1L, Seq(1))))
-    }
+    val json = fixture("TableMetadataStatisticsFiles.json")
+    val m = MetaJson.readMetadata(json)
+    val sf = m.statistics.head
+    assert(sf.path === "s3://a/b/stats.puffin")
+    assert(sf.fileSizeBytes === 413L)
+    assert(sf.fileFooterSizeBytes === 42L)
+    assert(sf.blobMetadata ===
+      Seq(StatBlobMeta("ndv", 3055729675574597004L, 1L, Seq(1))))
   }
 
   test("reference fixture: invalid documents are rejected") {
     // reference TestTableMetadata expectations: unsupported versions and
     // v2 docs missing spec-required sections must fail with a clear
     // error, not be silently guessed at
-    def rejects(name: String): Unit =
-      fixture(name).foreach { json =>
-        val e = intercept[Exception](MetaJson.readMetadata(json))
-        assert(e.isInstanceOf[IllegalArgumentException], s"$name: $e")
-      }
+    def rejects(name: String): Unit = {
+      val e = intercept[Exception](MetaJson.readMetadata(fixture(name)))
+      assert(e.isInstanceOf[IllegalArgumentException], s"$name: $e")
+    }
     rejects("TableMetadataUnsupportedVersion.json")
     rejects("TableMetadataV2MissingSchemas.json")
     rejects("TableMetadataV2MissingPartitionSpecs.json")
@@ -271,11 +273,10 @@ class IcebergMetadataSpec extends AnyFunSuite {
   }
 
   test("reference fixture: TableMetadataPartitionStatisticsFiles") {
-    fixture("TableMetadataPartitionStatisticsFiles.json").foreach { json =>
-      val m = MetaJson.readMetadata(json)
-      assert(m.partitionStatistics.nonEmpty)
-      assert(m.partitionStatistics.head.snapshotId > 0)
-      assert(m.partitionStatistics.head.fileSizeBytes > 0)
-    }
+    val json = fixture("TableMetadataPartitionStatisticsFiles.json")
+    val m = MetaJson.readMetadata(json)
+    assert(m.partitionStatistics.nonEmpty)
+    assert(m.partitionStatistics.head.snapshotId > 0)
+    assert(m.partitionStatistics.head.fileSizeBytes > 0)
   }
 }

@@ -7,46 +7,52 @@ import org.scalatest.funsuite.AnyFunSuite
   * graft must load genuine Apache-Iceberg view metadata documents —
   * representations, Iceberg-typed schemas referenced by schema-id,
   * optional default-catalog — and reject the malformed shapes the
-  * reference rejects. Runs directly against the reference's committed
-  * view fixtures when the checkout is present. */
+  * reference rejects. Runs against the reference's committed view
+  * fixtures when the checkout is present, else against hand-written
+  * spec documents of the same names bundled with the tests. */
 class IcebergViewMetadataSpec extends AnyFunSuite {
 
   private val fixtureDir =
     "/root/reference/core/src/test/resources/org/apache/iceberg/view"
-  private def fixture(name: String): Option[String] = {
+  // the reference checkout's own file when it is present, else the
+  // hand-written spec document of the same name bundled under
+  // src/test/resources/iceberg-spec/view
+  private def fixture(name: String): String = {
     val p = java.nio.file.Paths.get(fixtureDir, name)
     if (java.nio.file.Files.isReadable(p))
-      Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-    else None
-  }
-
-  test("reference fixture: ValidViewMetadata") {
-    fixture("ValidViewMetadata.json").foreach { json =>
-      val v = GraftViewStore.fromJson(json, "eventsview")
-      assert(v.viewName === "eventsview") // spec docs carry no name
-      assert(v.viewUuid === "fa6506c3-7681-40c8-86dc-e36561f83385")
-      assert(v.currentVersionId === 2)
-      assert(v.versions.map(_.versionId) === Seq(1, 2))
-      assert(v.current.sql === "select 1 id, 'abc' data")
-      assert(v.current.catalogName === "some-catalog")
-      assert(v.current.namespaceParts === Nil)
-      assert(v.current.summary === Map("user" -> "some-user"))
-      // Iceberg schema (x,y,z longs) converted to a Spark schema
-      assert(v.schema().fieldNames.toSeq === Seq("x", "y", "z"))
-      assert(v.schema().fields.forall(
-        _.dataType === org.apache.spark.sql.types.LongType))
-      assert(v.versionLog === Seq((4353L, 1), (5555L, 2)))
-      assert(v.props === Map("some-key" -> "some-value",
-        "comment" -> "some-comment"))
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    else {
+      val in = getClass.getResourceAsStream(s"/iceberg-spec/view/$name")
+      assert(in != null, s"bundled fixture $name is missing")
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
     }
   }
 
+  test("reference fixture: ValidViewMetadata") {
+    val json = fixture("ValidViewMetadata.json")
+    val v = GraftViewStore.fromJson(json, "eventsview")
+    assert(v.viewName === "eventsview") // spec docs carry no name
+    assert(v.viewUuid === "fa6506c3-7681-40c8-86dc-e36561f83385")
+    assert(v.currentVersionId === 2)
+    assert(v.versions.map(_.versionId) === Seq(1, 2))
+    assert(v.current.sql === "select 1 id, 'abc' data")
+    assert(v.current.catalogName === "some-catalog")
+    assert(v.current.namespaceParts === Nil)
+    assert(v.current.summary === Map("user" -> "some-user"))
+    // Iceberg schema (x,y,z longs) converted to a Spark schema
+    assert(v.schema().fieldNames.toSeq === Seq("x", "y", "z"))
+    assert(v.schema().fields.forall(
+      _.dataType === org.apache.spark.sql.types.LongType))
+    assert(v.versionLog === Seq((4353L, 1), (5555L, 2)))
+    assert(v.props === Map("some-key" -> "some-value",
+      "comment" -> "some-comment"))
+  }
+
   test("reference fixture: invalid documents are rejected") {
-    def rejects(name: String): Unit =
-      fixture(name).foreach { json =>
-        val e = intercept[Exception](GraftViewStore.fromJson(json, "v"))
-        assert(e.isInstanceOf[IllegalArgumentException], s"$name: $e")
-      }
+    def rejects(name: String): Unit = {
+      val e = intercept[Exception](GraftViewStore.fromJson(fixture(name), "v"))
+      assert(e.isInstanceOf[IllegalArgumentException], s"$name: $e")
+    }
     rejects("ViewMetadataMissingCurrentVersion.json")
     rejects("ViewMetadataInvalidCurrentVersion.json")
     rejects("ViewMetadataMultipleSQLsForDialect.json")
