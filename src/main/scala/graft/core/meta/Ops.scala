@@ -193,49 +193,87 @@ object GraftIO {
   }
 }
 
-/** Bounded parse cache, shared by every thread of the JVM. Metadata
-  * JSON, manifest lists and manifests are written once under unique
-  * names (UUID-suffixed), so a parsed value never goes stale.
+/** Bounded load-on-miss cache, shared by every thread of the JVM: the
+  * metadata parse caches (metadata JSON, manifest lists, manifests,
+  * stored UDFs) and the executor cache of parsed delete files and
+  * footers. Every value it holds is immutable content under a name that
+  * is never rewritten (UUID-suffixed metadata, delete files), so a
+  * cached value never goes stale.
   *
   * Eviction is per entry, least recently used first, until the total
-  * weight is within `budget`. Each value's weight is `weigh(v)`,
-  * computed once on insert and stored beside it (the default weight 1
-  * makes the budget a key count). A value heavier than the whole budget
-  * is returned but not kept, so one huge read cannot flush the cache.
-  * Whole-map clears are wrong here: a stream of small values would
-  * evict the few large hot ones every few dozen inserts, and each of
-  * those costs a full re-parse (reference CachingCatalog.java; the
-  * manifest content cache in ManifestFiles.java is bounded in bytes).
+  * weight is within `budget`. Each value's weight is computed once on
+  * insert and stored beside it: by the constructor's `weigh` (the
+  * default weight 1 makes the budget a key count), or by the weigher
+  * passed with `get`, so one cache can hold several kinds of value under
+  * one budget, each weighed its own way. A value heavier than `entryCap`
+  * or than the whole budget is returned but not kept, so one huge read
+  * cannot flush the cache. Whole-map clears are wrong here: a stream of
+  * small values would evict the few large hot ones every few dozen
+  * inserts, and each of those costs a full re-parse (reference
+  * CachingCatalog.java; the manifest content cache in ManifestFiles.java
+  * is bounded in bytes; SparkExecutorCache.java caps each entry).
   *
-  * An access-ordered map mutates on read, so every map access holds one
-  * lock; `load` runs outside it. Two threads missing the same key both
-  * parse, and the second insert replaces the first. The bound holds per
-  * JVM: the driver and each executor doing distributed planning keep
-  * one cache each under the same budget. */
-private[graft] final class BoundedCache[V <: AnyRef](budget: Long,
-    weigh: V => Long = (_: V) => 1L) {
+  * Loads are single-flight per key. The first thread to miss a key
+  * loads it outside the lock; threads that miss the same key meanwhile
+  * wait for that load and get its value, or its failure with the
+  * original cause. Loads of distinct keys run in parallel. A failed
+  * load leaves nothing behind, so the next `get` loads again. An
+  * access-ordered map mutates on read, so every map access holds one
+  * lock. The bound holds per JVM: the driver and each executor keep one
+  * instance each under the same budget. */
+private[graft] final class BoundedCache[K, V <: AnyRef](budget: Long,
+    weigh: V => Long = (_: V) => 1L, entryCap: Long = Long.MaxValue) {
   private final class Weighted(val value: V, val weight: Long)
-  private val m = new java.util.LinkedHashMap[String, Weighted](16, 0.75f, true)
+  private val m = new java.util.LinkedHashMap[K, Weighted](16, 0.75f, true)
+  private val loading =
+    new java.util.HashMap[K, java.util.concurrent.CompletableFuture[V]]
   private var total = 0L
 
-  def get(key: String)(load: => V): V = {
-    val hit = synchronized(m.get(key))
-    if (hit != null) hit.value
-    else {
-      val v = load
-      val w = weigh(v)
-      if (w <= budget) synchronized {
-        val old = m.put(key, new Weighted(v, w))
-        total += w - (if (old == null) 0L else old.weight)
-        val it = m.values.iterator
-        while (total > budget) { total -= it.next().weight; it.remove() }
+  def get(key: K)(load: => V): V = get[V](key, weigh)(load)
+
+  def get[W <: V](key: K, weighW: W => Long)(load: => W): W = {
+    var pending: java.util.concurrent.CompletableFuture[V] = null
+    var owner = false
+    val hit = synchronized {
+      val e = m.get(key)
+      if (e == null) {
+        pending = loading.get(key)
+        if (pending == null) {
+          pending = new java.util.concurrent.CompletableFuture[V]
+          loading.put(key, pending)
+          owner = true
+        }
       }
+      e
+    }
+    if (hit != null) hit.value.asInstanceOf[W]
+    else if (!owner)
+      try pending.get().asInstanceOf[W]
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    else try {
+      val v = load
+      val w = weighW(v)
+      synchronized {
+        loading.remove(key)
+        if (w <= budget && w <= entryCap) {
+          val old = m.put(key, new Weighted(v, w))
+          total += w - (if (old == null) 0L else old.weight)
+          val it = m.values.iterator
+          while (total > budget) { total -= it.next().weight; it.remove() }
+        }
+      }
+      pending.complete(v)
       v
+    } catch {
+      case e: Throwable =>
+        synchronized(loading.remove(key, pending))
+        pending.completeExceptionally(e)
+        throw e
     }
   }
 
   /** total weight held; never above `budget` outside `get` */
-  private[meta] def weight: Long = synchronized(total)
+  private[graft] def weight: Long = synchronized(total)
 }
 
 /** Versioned metadata pointer with optimistic-concurrency commit
@@ -357,7 +395,7 @@ object MetadataLogs {
 
 object FileTableOps {
   /** parsed table metadata, stat-guard-keyed (shared across handles) */
-  private[meta] val metaCache = new BoundedCache[TableMetadata](256)
+  private[meta] val metaCache = new BoundedCache[String, TableMetadata](256)
 }
 
 /** Read-only ops view presenting a historical schema as current: a
@@ -447,7 +485,7 @@ final class StagedOps(val real: TableOps, initial: TableMetadata) extends TableO
 object ManifestIO {
   // manifest lists and manifests are UUID-named and immutable: plain
   // path-keyed parse caches are safe on driver and executors alike
-  private val listCache = new BoundedCache[Seq[ManifestFile]](256)
+  private val listCache = new BoundedCache[String, Seq[ManifestFile]](256)
 
   /** Parsed manifests, weighted by their entry count. A parsed
     * `ManifestEntry` of a two-column table with one stats column
@@ -457,7 +495,7 @@ object ManifestIO {
     * Wider tables carry more stats per entry and cost more per entry. */
   private val EntryBudget = 200000L
   private val entryCache =
-    new BoundedCache[Seq[ManifestEntry]](EntryBudget, _.size.toLong)
+    new BoundedCache[String, Seq[ManifestEntry]](EntryBudget, _.size.toLong)
   /** manifests parsed since start (cache misses of `readEntries`) */
   private[meta] val entryParses = new java.util.concurrent.atomic.AtomicLong
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
@@ -49,5 +49,5 @@ object ByteFunctions {
 
   /** byteSum(blob) over a BINARY column. */
   def byteSum(c: Column): Column =
-    GraftColumnBridge.column(BinaryByteSum(GraftColumnBridge.expression(c)))
+    GraftSqlBridge.column(BinaryByteSum(GraftSqlBridge.expression(c)))
 }

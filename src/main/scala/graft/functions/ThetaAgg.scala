@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.{ImperativeAggregate, TypedImperativeAggregate}
@@ -78,6 +78,6 @@ object ThetaFunctions {
   /** aggregate column producing compact theta sketch bytes for `c`,
     * whose graft type is `t` */
   def thetaNdvSketch(c: Column, t: GType): Column =
-    GraftColumnBridge.column(
-      ThetaNdvAgg(GraftColumnBridge.expression(c), t).toAggregateExpression())
+    GraftSqlBridge.column(
+      ThetaNdvAgg(GraftSqlBridge.expression(c), t).toAggregateExpression())
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -255,21 +255,21 @@ case class ArrayQuantizeFloor(child: Expression, scale: Int)
 object VectorFunctions {
   /** dot(a, b) over array<double> columns (cast float arrays first) */
   def arrayDot(a: Column, b: Column): Column =
-    GraftColumnBridge.column(
-      ArrayDot(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+    GraftSqlBridge.column(
+      ArrayDot(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
   /** dot(a, b) over array<bigint> columns */
   def arrayDotL(a: Column, b: Column): Column =
-    GraftColumnBridge.column(
-      ArrayDotL(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+    GraftSqlBridge.column(
+      ArrayDotL(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
   /** sum((a-b)^2) over array<bigint> columns */
   def arraySqDistL(a: Column, b: Column): Column =
-    GraftColumnBridge.column(
-      ArraySqDistL(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+    GraftSqlBridge.column(
+      ArraySqDistL(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
   /** floor(x * scale) per element, array<float|double> -> array<bigint> */
   def arrayQuantizeFloor(a: Column, scale: Int): Column =
-    GraftColumnBridge.column(
-      ArrayQuantizeFloor(GraftColumnBridge.expression(a), scale))
+    GraftSqlBridge.column(
+      ArrayQuantizeFloor(GraftSqlBridge.expression(a), scale))
 }

@@ -476,42 +476,9 @@ final class GraftChangesScan(table: GTable, startId: Option[Long],
       val metaRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
         Array[Any](UTF8String.fromString(t.changeType), t.ordinal, t.commitSnapshotId))
       val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      def positionsOf(paths: Array[String], formats: Array[String])
-          : org.roaringbitmap.longlong.Roaring64Bitmap = {
-        import graft.core.meta.GraftIO.stripScheme
-        val out = new org.roaringbitmap.longlong.Roaring64Bitmap()
-        paths.zipWithIndex.foreach { case (dp, di) =>
-          // parsed once per JVM via the shared executor cache, under the
-          // SAME key namespace and scheme-stripped map keys as the batch
-          // scan's PosDeleteCache — a table read both ways shares one
-          // entry per delete file instead of caching it twice
-          val byFile = GraftExecutorCache.get(("pos", dp),
-            GraftExecutorCache.weighPosMap) {
-            if (DVIO.isDV(dp)) {
-              val (ref, bm) = DVIO.read(dp, crypto)
-              Map(stripScheme(ref) -> bm)
-            } else {
-              // per-delete-file format dispatch (reference DeleteFilter)
-              val readFn =
-                (if (di < formats.length) formats(di) else "parquet") match {
-                  case "avro" if avroDeleteFunc != null => avroDeleteFunc
-                  case "orc" if orcDeleteFunc != null   => orcDeleteFunc
-                  case _                                => deleteFunc
-                }
-              val m = scala.collection.mutable
-                .Map.empty[String, org.roaringbitmap.longlong.Roaring64Bitmap]
-              readFn(pf(dp, Long.MaxValue)).foreach { r =>
-                m.getOrElseUpdate(stripScheme(r.getUTF8String(0).toString),
-                  new org.roaringbitmap.longlong.Roaring64Bitmap())
-                  .addLong(r.getLong(1))
-              }
-              m.toMap
-            }
-          }
-          byFile.get(stripScheme(t.path)).foreach(out.or)
-        }
-        out
-      }
+      def positionsOf(paths: Array[String], formats: Array[String]) =
+        GraftSparkTable.deletedPositions(t.path, paths, formats, crypto,
+          deleteFunc, avroDeleteFunc, orcDeleteFunc)
       // rows deleted BEFORE this snapshot are never re-reported
       val masked = positionsOf(t.maskPaths, t.maskFormats)
       val base: Iterator[InternalRow] =
@@ -526,11 +493,11 @@ final class GraftChangesScan(table: GTable, startId: Option[Long],
             // per-JVM cache, keyed by (path, key positions, key types):
             // one eq-delete file masks every lower-sequence data file in
             // the range, so each change task would otherwise re-parse it
-            val cached = GraftExecutorCache.get(
+            val cached = GraftSparkTable.executorCache.get(
               ("eq-chg", ep, t.eqKeyPositions.toSeq,
                 t.eqKeyPositions.map(p => dataSchema(p).dataType.catalogString).toSeq),
               (s: java.util.HashSet[Seq[Any]]) =>
-                GraftExecutorCache.weighKeySet(s, t.eqKeyPositions.length)) {
+                GraftSparkTable.EqDeleteCache.weighKeySet(s, t.eqKeyPositions.length)) {
               val ks = new java.util.HashSet[Seq[Any]]()
               // the eq-delete FILE reads with its own format's
               // full-schema reader (absent columns resolve null)

@@ -444,18 +444,82 @@ object GraftSparkTable {
     StructType(spec.partitionType(schema).fields.map(f =>
       org.apache.spark.sql.types.StructField(f.name, SparkTypes.toSpark(f.tpe))))
 
-  /** Executor-side cache of parsed position-delete files (reference
-    * spark/.../SparkExecutorCache.java): delete files are immutable, and
-    * one delete file often applies to many data files read by many tasks
-    * in the same executor — parse it once per JVM instead of per task.
-    * Keyed by path; bounded LRU. Values map data-file path → deleted
-    * positions. */
-  object PosDeleteCache {
-    def get(path: String,
-        load: () => Map[String, org.roaringbitmap.longlong.Roaring64Bitmap])
-        : Map[String, org.roaringbitmap.longlong.Roaring64Bitmap] =
-      GraftExecutorCache.get(("pos", path),
-        GraftExecutorCache.weighPosMap)(load())
+  /** Executor-side cache (reference spark/.../SparkExecutorCache.java):
+    * ONE per JVM, shared by parsed position-delete maps, DV bitmaps,
+    * equality-delete key sets and row-group footers. Delete content is
+    * immutable and one file typically applies to many data files read by
+    * many tasks on the same executor, so parsing once per JVM is the
+    * difference between O(tasks) and O(files) delete-file IO at scale.
+    * Keys are tuples led by their kind ("pos", "eq", "eq-chg",
+    * "rowgroups"); each kind passes its own weigher, in approximate
+    * retained bytes. Budget and entry cap are the reference's defaults
+    * (128 MiB / 64 MiB): a giant delete file bypasses the cache instead
+    * of evicting the whole working set to pin itself. */
+  private[spark] val executorCache =
+    new graft.core.meta.BoundedCache[Any, AnyRef](128L << 20, entryCap = 64L << 20)
+
+  /** Positions of `dataPath` deleted by the position-delete or DV files
+    * `deletePaths`, ORed into one fresh bitmap; the batch scan and the
+    * changelog scan both read deletes through here. Each delete file is
+    * parsed once per JVM (`executorCache`, key ("pos", path)) into
+    * data-file path → positions, with its OWN manifest-recorded format in
+    * `formats` (reference DeleteFilter per-file dispatch; entries past
+    * the array read as parquet; a null avro/orc reader falls back to
+    * `parquet`). Delete content stores the writer-time ABSOLUTE data-file
+    * path: match scheme-stripped exact first, then — for tables relocated
+    * under v4 relative metadata locations — fall back to a UNIQUE
+    * last-/data/-suffix match (an ambiguous suffix, e.g. an import
+    * colliding with a native file name, never silently cross-applies).
+    *
+    * Masks stay Roaring bitmaps end-to-end: a boxed HashSet[Long] costs
+    * ~48 B per deleted position (500 MB heap for a 10M-row DV), while the
+    * bitmap stays within a few bits/position. */
+  def deletedPositions(dataPath: String, deletePaths: Array[String],
+      formats: Array[String], crypto: Option[graft.core.meta.TableCrypto],
+      parquet: PartitionedFile => Iterator[InternalRow],
+      avro: PartitionedFile => Iterator[InternalRow],
+      orc: PartitionedFile => Iterator[InternalRow])
+      : org.roaringbitmap.longlong.Roaring64Bitmap = {
+    import graft.core.meta.GraftIO.{dataSuffix, stripScheme}
+    import org.roaringbitmap.longlong.Roaring64Bitmap
+    // ~retained bytes: the roaring serialized size tracks heap closely
+    // (containers are the payload)
+    def weigh(m: Map[String, Roaring64Bitmap]): Long =
+      64L + m.iterator.map { case (k, v) =>
+        k.length * 2L + 64L + v.serializedSizeInBytes()
+      }.sum
+    val out = new Roaring64Bitmap()
+    deletePaths.zipWithIndex.foreach { case (dp, di) =>
+      val byFile = executorCache.get(("pos", dp), weigh) {
+        if (graft.core.meta.DVIO.isDV(dp)) {
+          val (ref, bm) = graft.core.meta.DVIO.read(dp, crypto)
+          Map(stripScheme(ref) -> bm)
+        } else {
+          val readFn = (if (di < formats.length) formats(di) else "parquet") match {
+            case "avro" if avro != null => avro
+            case "orc" if orc != null   => orc
+            case _                      => parquet
+          }
+          val m = scala.collection.mutable.Map.empty[String, Roaring64Bitmap]
+          readFn(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(dp),
+              0L, Long.MaxValue, Array.empty[String], 0L, Long.MaxValue, Map.empty))
+            .foreach { r =>
+              m.getOrElseUpdate(stripScheme(r.getUTF8String(0).toString),
+                new Roaring64Bitmap()).addLong(r.getLong(1))
+            }
+          m.toMap
+        }
+      }
+      val hit = byFile.get(stripScheme(dataPath)).orElse {
+        val want = dataSuffix(dataPath)
+        byFile.keys.filter(k => dataSuffix(k) == want).toSeq match {
+          case Seq(only) => byFile.get(only)
+          case _         => None
+        }
+      }
+      hit.foreach(out.or) // or() mutates OUT only; cached bitmaps stay pristine
+    }
+    out
   }
 
   /** Executor-side cache of row-group/stripe (startingPos, rowCount)
@@ -466,7 +530,7 @@ object GraftSparkTable {
   object RowGroupCache {
     def rowGroups(path: String, format: String,
         cryptoConf: Map[String, String]): Seq[(Long, Long)] =
-      GraftExecutorCache.get(("rowgroups", path),
+      executorCache.get(("rowgroups", path),
         (v: Seq[(Long, Long)]) => 64L + 32L * v.size) {
         val conf = new org.apache.hadoop.conf.Configuration()
         cryptoConf.foreach { case (k, v) => conf.set(k, v) }
@@ -503,7 +567,7 @@ object GraftSparkTable {
   }
 
   /** Executor-side cache of parsed EQUALITY-delete key sets, mirroring
-    * PosDeleteCache: one eq-delete file is applied to every data file
+    * `deletedPositions`: one eq-delete file is applied to every data file
     * with a lower sequence, so without caching each task re-reads and
     * re-hashes the same immutable file. Keyed by (path, key positions). */
   object EqDeleteCache {
@@ -514,9 +578,13 @@ object GraftSparkTable {
     // compare equal and every equality delete would silently un-apply
     def get(path: String, positions: Seq[Int], keyTypes: Seq[String],
         load: () => java.util.HashSet[Seq[Any]]): java.util.HashSet[Seq[Any]] =
-      GraftExecutorCache.get(("eq", path, positions, keyTypes),
-        (s: java.util.HashSet[Seq[Any]]) =>
-          GraftExecutorCache.weighKeySet(s, positions.size))(load())
+      executorCache.get(("eq", path, positions, keyTypes),
+        (s: java.util.HashSet[Seq[Any]]) => weighKeySet(s, positions.size))(load())
+
+    /** ~retained bytes of an eq-delete key set: per row a Seq wrapper
+      * plus ~32 B per boxed key column value */
+    def weighKeySet(s: java.util.HashSet[Seq[Any]], keyWidth: Int): Long =
+      64L + s.size.toLong * (48L + 32L * math.max(1, keyWidth))
   }
 
   /** an equality-delete file + the field ids it deletes by. `format` is
@@ -2105,60 +2173,11 @@ object GraftSparkTable {
       GraftSparkTable.RowGroupCache.firstRowIndex(t.path, t.fileFormat,
         t.start, footerCryptoConf)
 
-    /** positions deleted for `dataPath` across `deletePaths` (cached per
-      * executor: delete files are immutable). Delete content stores the
-      * writer-time ABSOLUTE data-file path: match scheme-stripped exact
-      * first, then — for tables relocated under v4 relative metadata
-      * locations — fall back to a UNIQUE last-/data/-suffix match (an
-      * ambiguous suffix, e.g. an import colliding with a native file
-      * name, never silently cross-applies). */
     private def deletedPositions(dataPath: String,
-        deletePaths: Array[String],
-        formats: Array[String] = Array.empty)
-        : org.roaringbitmap.longlong.Roaring64Bitmap = {
-      import graft.core.meta.GraftIO.{dataSuffix, stripScheme}
-      // masks stay Roaring bitmaps end-to-end: a boxed HashSet[Long] costs
-      // ~48 B per deleted position (500 MB heap for a 10M-row DV), while
-      // the bitmap stays within a few bits/position — the difference
-      // between an executor cache that holds the working set and one that
-      // thrashes at 100 TB delete volumes
-      val out = new org.roaringbitmap.longlong.Roaring64Bitmap()
-      deletePaths.zipWithIndex.foreach { case (dp, di) =>
-        val byFile = PosDeleteCache.get(dp, () => {
-          if (graft.core.meta.DVIO.isDV(dp)) {
-            val (ref, bm) = graft.core.meta.DVIO.read(dp, crypto)
-            Map(stripScheme(ref) -> bm)
-          } else {
-            // each delete file parses with its OWN manifest-recorded
-            // format (reference DeleteFilter per-file dispatch); entries
-            // past the formats array default to the parquet reader
-            val readFn = (if (di < formats.length) formats(di) else "parquet") match {
-              case "avro" if avroDeleteFunc != null => avroDeleteFunc
-              case "orc" if orcDeleteFunc != null   => orcDeleteFunc
-              case _                                => deleteFunc
-            }
-            val m = scala.collection.mutable
-              .Map.empty[String, org.roaringbitmap.longlong.Roaring64Bitmap]
-            readFn(pf(dp, 0, Long.MaxValue)).foreach { r =>
-              m.getOrElseUpdate(stripScheme(r.getUTF8String(0).toString),
-                new org.roaringbitmap.longlong.Roaring64Bitmap())
-                .addLong(r.getLong(1))
-            }
-            m.toMap
-          }
-        })
-        val exact = byFile.get(stripScheme(dataPath))
-        val hit = exact.orElse {
-          val want = dataSuffix(dataPath)
-          byFile.keys.filter(k => dataSuffix(k) == want).toSeq match {
-            case Seq(only) => byFile.get(only)
-            case _         => None
-          }
-        }
-        hit.foreach(out.or) // or() mutates OUT only; cached bitmaps stay pristine
-      }
-      out
-    }
+        deletePaths: Array[String], formats: Array[String])
+        : org.roaringbitmap.longlong.Roaring64Bitmap =
+      GraftSparkTable.deletedPositions(dataPath, deletePaths, formats, crypto,
+        deleteFunc, avroDeleteFunc, orcDeleteFunc)
 
     override def supportColumnarReads(partition: InputPartition): Boolean =
       vectorized // scan-level decision: uniform across partitions

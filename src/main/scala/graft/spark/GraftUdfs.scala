@@ -74,7 +74,7 @@ object GraftUdfStore {
   // parsed-UDF cache: metadata files are immutable and keyed by their
   // version path, so a parse is reusable for the session's lifetime;
   // function resolution consults load() several times per query
-  private val parseCache = new graft.core.meta.BoundedCache[StoredUdf](256)
+  private val parseCache = new graft.core.meta.BoundedCache[String, StoredUdf](256)
 
   def load(warehouse: String, ns: Seq[String], name: String): Option[StoredUdf] =
     loadWithVersion(warehouse, ns, name).map(_._2)

@@ -9,15 +9,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.expr.{ColStats, Expr}
 
-/** `BoundedCache`: per-entry LRU eviction within a weight budget, and the
-  * manifest parse cache built on it. */
+/** `BoundedCache`: per-entry LRU eviction within a weight budget,
+  * single-flight loads, and the manifest parse cache built on it. */
 class BoundedCacheSpec extends AnyFunSuite {
 
   private final class Box(val n: Int)
-  private def weighed(budget: Long) = new BoundedCache[Box](budget, _.n.toLong)
+  private def weighed(budget: Long) = new BoundedCache[String, Box](budget, _.n.toLong)
 
   test("a recently read key survives an insert that evicts") {
-    val c = new BoundedCache[String](3)
+    val c = new BoundedCache[String, String](3)
     Seq("a", "b", "c").foreach(k => c.get(k)(k))
     assert(c.get("a")(fail("a was evicted before the cache was full")) === "a")
     c.get("d")("d") // evicts the least recently used: b
@@ -83,6 +83,36 @@ class BoundedCacheSpec extends AnyFunSuite {
     assert(pool.awaitTermination(60, TimeUnit.SECONDS))
     assert(errors.isEmpty, errors.toArray.take(5).mkString("; "))
     assert(c.weight <= 300L)
+  }
+
+  test("a failed load reaches every waiter with its cause, keeps nothing, and is retried") {
+    val c = new BoundedCache[String, String](10)
+    val boom = new IllegalStateException("boom")
+    val loads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val waiters = (1 to 4).map { _ =>
+      new Thread(() => c.get("k") { loads.incrementAndGet(); "second load" })
+    }
+    val results = new java.util.concurrent.ConcurrentHashMap[Thread, Throwable]()
+    waiters.foreach(_.setUncaughtExceptionHandler((t, e) => results.put(t, e)))
+    // the owner fails only once every waiter is parked on its load
+    val owner = new Thread(() => c.get("k") {
+      loads.incrementAndGet()
+      waiters.foreach(_.start())
+      val deadline = System.nanoTime + 10000000000L
+      while (waiters.exists(_.getState != Thread.State.WAITING) &&
+          System.nanoTime < deadline) Thread.sleep(5)
+      throw boom
+    })
+    owner.setUncaughtExceptionHandler((t, e) => results.put(t, e))
+    owner.start()
+    owner.join(15000)
+    waiters.foreach(_.join(15000))
+    assert(loads.get === 1, "a waiter loaded the key again instead of waiting")
+    assert(results.size === 5)
+    results.forEach((t, e) => assert(e eq boom, s"${t.getName} got $e"))
+    assert(c.weight === 0L)
+    assert(c.get("k")("loaded again") === "loaded again")
+    assert(c.weight === 1L)
   }
 
   test("re-planning a table with more than 64 manifests parses none of them again") {

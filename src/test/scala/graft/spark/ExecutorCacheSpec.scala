@@ -1,53 +1,53 @@
 package graft.spark
 
-import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Weight-bounded executor cache (reference SparkExecutorCache
-  * semantics): load-once, LRU-by-weight eviction, oversized bypass. */
-class ExecutorCacheSpec extends AnyFunSuite with BeforeAndAfterEach {
+import graft.core.meta.BoundedCache
 
-  override def beforeEach(): Unit = {
-    GraftExecutorCache.clear()
-    System.clearProperty("graft.executor-cache.max-total-size")
-    System.clearProperty("graft.executor-cache.max-entry-size")
-  }
-  override def afterEach(): Unit = beforeEach()
+/** The executor cache's contract (reference SparkExecutorCache
+  * semantics), on small `BoundedCache` instances with the budget and
+  * entry cap passed to the constructor: load-once, LRU-by-weight
+  * eviction, oversized bypass, single-flight loads. */
+class ExecutorCacheSpec extends AnyFunSuite {
+
+  private def cache(budget: Long = 1L << 20, entryCap: Long = Long.MaxValue) =
+    new BoundedCache[Any, AnyRef](budget, entryCap = entryCap)
 
   private def v(s: String): String = s
 
   test("loads once per key while resident") {
+    val c = cache()
     var loads = 0
     def load(): String = { loads += 1; "x" }
     (1 to 5).foreach { _ =>
-      GraftExecutorCache.get("k1", (_: String) => 100L)(load())
+      c.get(("k1", 1), (_: String) => 100L)(load())
     }
     assert(loads === 1)
   }
 
   test("evicts least-recently-used entries when over the weight budget") {
-    System.setProperty("graft.executor-cache.max-total-size", "1000")
+    val c = cache(budget = 1000)
     // three 400-weight entries: inserting the third must evict the
     // least recently USED (k-a was touched after k-b)
-    GraftExecutorCache.get("k-a", (_: String) => 400L)(v("a"))
-    GraftExecutorCache.get("k-b", (_: String) => 400L)(v("b"))
-    GraftExecutorCache.get("k-a", (_: String) => 400L)(v("a2")) // touch a (hit)
-    GraftExecutorCache.get("k-c", (_: String) => 400L)(v("c"))
-    val (n, w) = GraftExecutorCache.stats
-    assert(n === 2 && w === 800L)
+    c.get("k-a", (_: String) => 400L)(v("a"))
+    c.get("k-b", (_: String) => 400L)(v("b"))
+    c.get("k-a", (_: String) => 400L)(v("a2")) // touch a (hit)
+    c.get("k-c", (_: String) => 400L)(v("c"))
+    assert(c.weight === 800L) // two 400-weight entries left
     // k-b was evicted (re-load runs and pushes out k-a, now the LRU);
     // k-c stays resident through both evictions
     var reloads = 0
-    GraftExecutorCache.get("k-b", (_: String) => 400L) { reloads += 1; v("b") }
+    c.get("k-b", (_: String) => 400L) { reloads += 1; v("b") }
     assert(reloads === 1)
-    GraftExecutorCache.get("k-c", (_: String) => 400L) { reloads += 1; v("c") }
+    c.get("k-c", (_: String) => 400L) { reloads += 1; v("c") }
     assert(reloads === 1)
-    GraftExecutorCache.get("k-a", (_: String) => 400L) { reloads += 1; v("a") }
+    c.get("k-a", (_: String) => 400L) { reloads += 1; v("a") }
     assert(reloads === 2)
   }
 
   test("loads on distinct keys run in parallel; same key loads once") {
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    val c = cache()
     // two loads that each block until BOTH have started: deadlocks in
     // under-lock loading, passes with per-key latching
     val started = new CountDownLatch(2)
@@ -55,7 +55,7 @@ class ExecutorCacheSpec extends AnyFunSuite with BeforeAndAfterEach {
     val futs = Seq("pk-a", "pk-b").map { k =>
       pool.submit(new Runnable {
         override def run(): Unit = {
-          GraftExecutorCache.get(k, (_: String) => 10L) {
+          c.get(k, (_: String) => 10L) {
             started.countDown()
             assert(started.await(10, TimeUnit.SECONDS),
               "parallel load never started — loads are serialized")
@@ -74,7 +74,7 @@ class ExecutorCacheSpec extends AnyFunSuite with BeforeAndAfterEach {
     val futs2 = (1 to 8).map { _ =>
       pool2.submit(new Runnable {
         override def run(): Unit = {
-          val v = GraftExecutorCache.get("pk-same", (_: String) => 10L) {
+          val v = c.get("pk-same", (_: String) => 10L) {
             loads.incrementAndGet(); Thread.sleep(50); "V"
           }
           assert(v === "V")
@@ -87,12 +87,12 @@ class ExecutorCacheSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
 
   test("entries above max-entry-size bypass the cache") {
-    System.setProperty("graft.executor-cache.max-entry-size", "100")
+    val c = cache(entryCap = 100)
     var loads = 0
     (1 to 3).foreach { _ =>
-      GraftExecutorCache.get("big", (_: String) => 10000L) { loads += 1; v("B") }
+      c.get("big", (_: String) => 10000L) { loads += 1; v("B") }
     }
     assert(loads === 3) // never cached, never evicted anyone
-    assert(GraftExecutorCache.stats._1 === 0)
+    assert(c.weight === 0L)
   }
 }

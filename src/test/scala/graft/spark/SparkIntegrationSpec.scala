@@ -2565,6 +2565,11 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql("SELECT sum(id) FROM graft.db.relo_copy")
       .collect()(0).getLong(0) === (0L until 100L).filterNot(_ % 10 == 3).sum)
 
+    // the changelog scan reads the same position deletes through the same
+    // suffix matching: each deleted row is reported once
+    assert(spark.sql("""SELECT count(*) FROM graft.db.relo_copy.changes
+      WHERE _change_type = 'DELETE'""").collect()(0).getLong(0) === 10L)
+
     // compacting the RELOCATED copy applies its position deletes through
     // the suffix-canonical matching (the delete content still references
     // the original absolute paths) — deleted rows must not resurrect
@@ -3047,7 +3052,7 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql("DELETE FROM graft.db.dvc WHERE id % 10 = 3")
     assert(spark.table("graft.db.dvc").count() === 450)
     // warm: the first scan above parsed each DV exactly once per JVM;
-    // subsequent scans must hit GraftExecutorCache, not re-read the file
+    // subsequent scans must hit the executor cache, not re-read the file
     val before = graft.core.meta.DVIO.readCount.get()
     assert(spark.table("graft.db.dvc").count() === 450)
     assert(spark.sql("SELECT sum(id) FROM graft.db.dvc").head().getLong(0) ===
