@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import graft.core.expr._
 import graft.core.types._
@@ -191,6 +192,19 @@ object GraftIO {
       case _: java.nio.file.FileAlreadyExistsException => false
     } finally Files.deleteIfExists(tmp)
   }
+
+  /** Replace `target` with `content` in one rename: a reader sees the old
+    * file or the new one, never an empty or partial one. The temp
+    * sibling is dot-prefixed, so orphan cleanup never counts it. */
+  def atomicReplace(target: String, content: String): Unit = {
+    val t = toPath(target)
+    val tmp = t.resolveSibling(s".tmp-${UUID.randomUUID}")
+    try {
+      Files.write(tmp, encode(content, gzip = false))
+      Files.move(tmp, t, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
+  }
 }
 
 /** Bounded load-on-miss cache, shared by every thread of the JVM: the
@@ -300,13 +314,44 @@ trait TableOps {
 }
 
 /** File-based pointer (reference HadoopTableOperations): version N IS the
-  * file v{N}.metadata.json; CAS = atomic create-if-absent of version N+1. */
+  * file v{N}.metadata.json; CAS = atomic create-if-absent of version N+1.
+  *
+  * Finding the current version costs O(1) in the size of `metadata/`,
+  * as in the reference's `HadoopTableOperations.findVersion`/`refresh`:
+  * read `version-hint.text`, and if `v{hint}` exists step forward while
+  * `v{N+1}` exists. The hint is advisory. Each commit publishes it after
+  * its CAS (by atomic rename), so it may lag behind by the commits whose
+  * hint write has not landed yet; versions are created one at a time
+  * above an existing base, so each missed commit costs one extra stat.
+  * A commit never moves the hint below a newer version that exists, so a
+  * stalled writer cannot leave it pointing under versions that
+  * delete-after-commit has since removed.
+  * Only a hint that is missing, unparsable or names a version file that
+  * does not exist (dropped and recreated table, expired metadata, hint
+  * ahead of the files) falls back to listing `metadata/` for the highest
+  * `v{N}.metadata.json`. Nothing is cached in memory: every call reads
+  * the files, so drop-and-recreate and relocation behave as listing did. */
 final class FileTableOps(val location: String) extends TableOps {
   private def versionFile(v: Int) = s"$metadataDir/v$v.metadata.json"
-  private val VersionRe = """.*/v(\d+)\.metadata\.json""".r
+  private def hintFile = s"$metadataDir/version-hint.text"
 
   def currentVersion(): Int =
-    GraftIO.list(metadataDir).collect { case VersionRe(v) => v.toInt }.maxOption.getOrElse(0)
+    readHint().filter(v => GraftIO.exists(versionFile(v))) match {
+      case Some(hint) =>
+        var v = hint
+        while (GraftIO.exists(versionFile(v + 1))) v += 1
+        v
+      case None =>
+        FileTableOps.fallbackListings.incrementAndGet()
+        GraftIO.list(metadataDir).iterator
+          .flatMap(p => FileTableOps.versionOf(p.substring(p.lastIndexOf('/') + 1)))
+          .maxOption.getOrElse(0)
+    }
+
+  /** the hinted version; None for a missing, partial or garbage hint */
+  private def readHint(): Option[Int] =
+    try GraftIO.readString(hintFile).trim.toIntOption.filter(_ > 0)
+    catch { case NonFatal(_) => None }
 
   def current(): Option[TableMetadata] = {
     val v = currentVersion()
@@ -358,10 +403,14 @@ final class FileTableOps(val location: String) extends TableOps {
       }
     val ok = GraftIO.atomicCreate(versionFile(baseVersion + 1),
       MetaJson.writeMetadata(toWrite), GraftIO.metadataGzip(toWrite.properties))
-    if (ok) { // best-effort hint for readers
-      try GraftIO.writeString(s"$metadataDir/version-hint.text", (baseVersion + 1).toString)
-      catch { case _: Throwable => () }
-      expired.foreach(p => try GraftIO.delete(p) catch { case _: Throwable => () })
+    if (ok) { // best-effort: the CAS already succeeded
+      val next = baseVersion + 1
+      // a writer that stalled between its CAS and this point must not
+      // move the hint back below a newer version that exists
+      try if (readHint().forall(h => h < next || !GraftIO.exists(versionFile(h))))
+        GraftIO.atomicReplace(hintFile, next.toString)
+      catch { case NonFatal(_) => () }
+      expired.foreach(p => try GraftIO.delete(p) catch { case NonFatal(_) => () })
     }
     ok
   }
@@ -396,6 +445,17 @@ object MetadataLogs {
 object FileTableOps {
   /** parsed table metadata, stat-guard-keyed (shared across handles) */
   private[meta] val metaCache = new BoundedCache[String, TableMetadata](256)
+  /** lookups that listed `metadata/` because the hint was unusable */
+  private[meta] val fallbackListings = new java.util.concurrent.atomic.AtomicLong
+
+  /** N for a file named `v{N}.metadata.json`, else None */
+  private[meta] def versionOf(name: String): Option[Int] =
+    if (!name.startsWith("v") || !name.endsWith(".metadata.json")) None
+    else {
+      val digits = name.substring(1, name.length - ".metadata.json".length)
+      if (digits.nonEmpty && digits.forall(c => c >= '0' && c <= '9')) digits.toIntOption
+      else None
+    }
 }
 
 /** Read-only ops view presenting a historical schema as current: a
