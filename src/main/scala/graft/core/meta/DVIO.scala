@@ -40,6 +40,16 @@ object DVIO {
   /** Iceberg MetadataColumns.ROW_POSITION field id (blob `fields`) */
   private val RowPosFieldId = 2147483645L
 
+  /** a bitmap's positions, ascending (unsigned order; positions are
+    * non-negative) */
+  def positions(bm: Roaring64Bitmap): Iterator[Long] = {
+    val it = bm.getLongIterator
+    new Iterator[Long] {
+      def hasNext: Boolean = it.hasNext
+      def next(): Long = it.next()
+    }
+  }
+
   def write(path: String, dataFilePath: String, positions: Iterator[Long],
       crypto: Option[TableCrypto] = None): Long =
     writeBlob(path, dataFilePath, positions, crypto)._1

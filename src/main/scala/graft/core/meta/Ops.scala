@@ -169,9 +169,11 @@ object GraftIO {
   /** Relocation-stable matching key for data-file paths referenced
     * INSIDE delete-file content (which stores the writer-time absolute
     * path): scheme-stripped, truncated to the last "/data/" suffix when
-    * one exists. The single definition every delete-matching site uses —
-    * the read mask, compaction, and rewrite_position_delete_files must
-    * agree byte-for-byte. */
+    * one exists. The single definition every delete-matching site uses.
+    * The read mask (GraftSparkTable.deletedPositions) and
+    * rewrite_position_delete_files call one parse (positionsByFile) and
+    * one rule; rewrite_data_files applies the same rule as a DataFrame
+    * join (GraftProcedures.joinWithDeletePaths). */
   def dataSuffix(p: String): String = {
     val s = stripScheme(p)
     val i = s.lastIndexOf("/data/")
@@ -1844,12 +1846,7 @@ final class RowDelta(table: GTable) extends SnapshotProducer(table, "delete") {
       }
       val path =
         s"${table.ops.location}/data/dv-m-$snapshotId-${java.util.UUID.randomUUID}.dv"
-      val it = bm.getLongIterator
-      val (n, off, len) = DVIO.writeBlob(path, ref,
-        new Iterator[Long] {
-          def hasNext: Boolean = it.hasNext
-          def next(): Long = it.next()
-        }, crypto)
+      val (n, off, len) = DVIO.writeBlob(path, ref, DVIO.positions(bm), crypto)
       ref -> nd.head.copy(path = path, recordCount = n,
         fileSizeBytes = GraftIO.size(path),
         contentOffset = Some(off), contentSizeInBytes = Some(len))

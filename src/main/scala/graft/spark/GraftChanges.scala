@@ -330,11 +330,6 @@ final class GraftChangesScan(table: GTable, startId: Option[Long],
       new StructType(), dataSchema, Nil,
       Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
         "enableVectorizedReader" -> "false"), freshConf)
-    val deleteSchema = GraftDeltaWriter.DeleteSchema
-    val deleteFunc = fmt.buildReaderWithPartitionValues(spark, deleteSchema,
-      new StructType(), deleteSchema, Nil,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-        "enableVectorizedReader" -> "false"), freshConf)
     // ORC and imported-parquet data files resolve by NAME (per-write-
     // schema readers for since-renamed columns, like the batch scan),
     // avro via our own field-id reader. Only built for formats the plan
@@ -381,15 +376,8 @@ final class GraftChangesScan(table: GTable, startId: Option[Long],
     // equality deletes read the full schema (absent columns null)
     val delFmts = Option(plannedDelFormats)
       .getOrElse(Set("parquet", "orc", "avro"))
-    val avroDeleteFunc: PartitionedFile => Iterator[InternalRow] =
-      if (delFmts("avro")) GraftAvro.ReadFunc(deleteSchema.json) else null
-    val orcDeleteFunc =
-      if (delFmts("orc"))
-        orcFmt.buildReaderWithPartitionValues(spark, deleteSchema,
-          new StructType(), deleteSchema, Nil,
-          Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-            "enableVectorizedReader" -> "false"), nameConf)
-      else null
+    val (deleteFunc, avroDeleteFunc, orcDeleteFunc) =
+      GraftSparkTable.positionDeleteReaders(spark, conf, delFmts + "parquet")
     val avroEqFunc: PartitionedFile => Iterator[InternalRow] =
       if (delFmts("avro")) GraftAvro.ReadFunc(dataSchema.json) else null
     val orcEqFunc =

@@ -1348,11 +1348,7 @@ object PositionDeletesScan {
           // instead of allocating one row object per position up front
           val (ref, bm) = DVIO.read(t.path, crypto)
           val refU = UTF8String.fromString(ref)
-          val li = bm.getLongIterator
-          new Iterator[InternalRow] {
-            override def hasNext: Boolean = li.hasNext
-            override def next(): InternalRow = out(refU, li.next(), null)
-          }
+          DVIO.positions(bm).map(p => out(refU, p, null))
         } else {
           val pf = PartitionedFile(InternalRow.empty,
             org.apache.spark.paths.SparkPath.fromPathString(t.path),

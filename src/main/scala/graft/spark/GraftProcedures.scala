@@ -589,6 +589,48 @@ object GraftProcedures extends Serializable {
     spark.createDataFrame(rdd, outSchema)
   }
 
+  /** One rewrite_position_delete_files task: the positions in one
+    * partition group's delete `files` (path, format) that still apply to
+    * a live data file, by data-file path in sorted order; ORing the
+    * bitmaps dedups (file_path, pos). Files are parsed by the scan's
+    * `positionsByFile` (and its executor cache) and matched under the
+    * read path's rule PER FILE (deletedPositions; joinWithDeletePaths is
+    * its DataFrame form): a key applies to the live file it names, or to
+    * a live file sharing its /data/ suffix when no other key in THIS file
+    * shares that suffix. The rule's "no exact key for that live file in
+    * this file" is implied: such a key would share the suffix, so by
+    * uniqueness it would be this key. Positions are written under the
+    * live file's manifest path (`liveByKey`: scheme-stripped path →
+    * path; `liveBySuffix`: suffix → the path when only one live file has
+    * it): a DV then names a manifest path, and one output never holds a
+    * relocated table's old path next to its new one, which would switch
+    * off the suffix fallback the old path relies on. */
+  private[spark] def mergePositionDeletes(files: Seq[(String, String)],
+      liveByKey: Map[String, String], liveBySuffix: Map[String, Option[String]],
+      crypto: Option[TableCrypto],
+      parquet: org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow],
+      avro: org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow],
+      orc: org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow])
+      : mutable.TreeMap[String, org.roaringbitmap.longlong.Roaring64Bitmap] = {
+    val kept = mutable.TreeMap.empty[String, org.roaringbitmap.longlong.Roaring64Bitmap]
+    files.foreach { case (path, format) =>
+      val byFile = GraftSparkTable.positionsByFile(path, format, crypto,
+        parquet, avro, orc)
+      val sfxCounts = byFile.keys.groupMapReduce(GraftIO.dataSuffix)(_ => 1)(_ + _)
+      byFile.foreach { case (k, bm) =>
+        val sfx = GraftIO.dataSuffix(k)
+        val target =
+          if (liveByKey.contains(k)) liveByKey.get(k)
+          else if (sfxCounts(sfx) == 1) liveBySuffix.get(sfx).map(_.getOrElse(k))
+          else None
+        // or() into the merged bitmap only: the parsed ones are cached
+        target.foreach(p =>
+          kept.getOrElseUpdate(p, new org.roaringbitmap.longlong.Roaring64Bitmap).or(bm))
+      }
+    }
+    kept
+  }
+
   private[spark] def deleteRowsDf(spark: SparkSession,
       files: Seq[DataFile],
       readOpts: Map[String, String] = Map.empty): org.apache.spark.sql.DataFrame = {
@@ -1209,8 +1251,10 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
       // partition into one, dropping positions that reference dead data
       // files (reference RewritePositionDeleteFilesSparkAction). The new
       // delete file's higher sequence number keeps it applicable to every
-      // data file the originals covered; masks are path-keyed so extra
-      // candidates are filtered executor-side.
+      // data file the originals covered. One Spark job per commit batch,
+      // one task per partition group (mergePositionDeletes): the task
+      // merges its group's files in memory and writes the output, and
+      // only file descriptors come back.
       val t = loadTable(input.getUTF8String(0).toString)
       val spark = SparkSession.active
       val scanSnap = t.meta.currentSnapshot.map(_.snapshotId)
@@ -1233,11 +1277,29 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
         out(StructType(Seq(StructField("rewritten_delete_files_count", IntegerType),
           StructField("added_delete_files_count", IntegerType))), row(0, 0))
       } else {
-        val conf = spark.sessionState.newHadoopConf()
-        GraftParquetCrypto.configure(conf, t.meta)
-        import org.apache.spark.sql.functions.{col => fcol}
-        val liveDf = spark.createDataFrame(
-          liveData.toSeq.map(Tuple1(_))).toDF("__live")
+        // everything the tasks need, built once before the job: the live
+        // data paths under both matching keys, the scan's delete readers
+        // and the DML delete writer's parquet output
+        val liveByKey = liveData.map(p => GraftIO.stripScheme(p) -> p).toMap
+        val liveBySuffix = liveData.toSeq.groupBy(GraftIO.dataSuffix).map {
+          case (sfx, ps) => sfx -> (if (ps.size == 1) ps.headOption else None)
+        }
+        val crypto = graft.core.meta.TableCrypto.resolve(t.meta)
+        val readConf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
+        readConf.setBoolean("spark.sql.parquet.fieldId.read.enabled", true)
+        GraftParquetCrypto.configure(readConf, t.meta)
+        val (pqRead, avroRead, orcRead) = GraftSparkTable.positionDeleteReaders(
+          spark, readConf, delFiles.map(_.format).toSet)
+        // spec v3: "Position delete files must not be added to v3
+        // tables … existing position deletes must be written to delete
+        // vectors" — on v3 (or write.delete.format=dv) the compaction
+        // OUTPUT is one DV per referenced data file
+        val dvMode = t.meta.formatVersion >= 3 ||
+          t.meta.properties.get("write.delete.format").contains("dv")
+        val (delOwf, delConf) =
+          if (dvMode) (null, Map.empty[String, String])
+          else GraftDeltaWriter.parquetDeleteOutput(spark, t.meta)
+        val loc = t.location
         // partial progress (reference partial-progress.enabled/
         // max-commits): deterministic group order → stable batches; each
         // batch commits separately and validates from the PREVIOUS commit,
@@ -1260,102 +1322,54 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
         var lastFailure: Throwable = null
         groupSeq.grouped(batchSize).foreach { batch => try {
         batchIdx += 1
-        val newFiles = Seq.newBuilder[DataFile]
-        val oldPaths = Seq.newBuilder[String]
-        batch.foreach { case ((specId, _), fs) =>
-          val partition = fs.head.partition
-          // keep delete rows that still apply to SOME live file under the
-          // read path's matching rule (exact wins, unique suffix only).
-          // Dedup on (file_path, pos) — the content identity of a
-          // position delete — rather than a generated row id: the merged
-          // output applies a position once no matter how many source
-          // files or live matches produced it, and the key is stable
-          // under AQE replanning and task retry.
-          val rows0 = deleteRowsDf(spark, fs,
-            GraftParquetCrypto.readOptions(t.meta))
-          val rows = GraftProcedures
-            .joinWithDeletePaths(liveDf, "__live", rows0, "file_path", "__src", "inner")
-            .select(fcol("file_path"), fcol("pos"))
-            .dropDuplicates("file_path", "pos")
-            .sort("file_path", "pos")
-          // spec v3: "Position delete files must not be added to v3
-          // tables … existing position deletes must be written to delete
-          // vectors" — on v3 (or write.delete.format=dv) the compaction
-          // OUTPUT is one DV per referenced data file, written executor-
-          // side (one task per data file group; only descriptors collect)
-          val dvMode = t.meta.formatVersion >= 3 ||
-            t.meta.properties.get("write.delete.format").contains("dv")
-          if (dvMode) {
-            val loc = t.location
-            val crypto = graft.core.meta.TableCrypto.resolve(t.meta)
-            import spark.implicits._
-            val written = rows
-              .select(fcol("file_path").as[String], fcol("pos").as[Long])
-              .groupByKey(_._1)
-              .mapGroups { (fp, it) =>
-                val path = s"$loc/data/dv-rw-${java.util.UUID.randomUUID}.dv"
-                val (n, off, len) = DVIO.writeBlob(path, fp, it.map(_._2), crypto)
-                (fp, path, n, GraftIO.size(path), off, len)
-              }.collect()
-            written.foreach { case (fp, path, n, size, off, len) =>
-              newFiles += DataFile(path, "dv", specId, partition, n, size,
-                Map.empty, content = FileContent.PositionDeletes,
-                referencedDataFile = Some(fp),
-                contentOffset = Some(off), contentSizeInBytes = Some(len))
+        val tasks = batch.map { case ((specId, _), fs) =>
+          (specId, fs.head.partition, fs.map(f => (f.path, f.format))) }
+        val written = spark.sparkContext.parallelize(tasks, tasks.size)
+          .map { case (specId, partition, files) =>
+            val ctx = org.apache.spark.TaskContext.get()
+            val kept = mergePositionDeletes(files, liveByKey, liveBySuffix,
+              crypto, pqRead, avroRead, orcRead)
+            if (dvMode) kept.toSeq.map { case (dataPath, bm) =>
+              GraftDeltaWriter.writeDV(loc, ctx.partitionId(),
+                ctx.taskAttemptId(), specId, partition, dataPath, DVIO.positions(bm), crypto)
             }
-            oldPaths ++= fs.map(_.path)
-          } else {
-          val staging = java.nio.file.Files.createTempDirectory("graft-posdel").toString
-          rows.coalesce(1).write.options(GraftParquetCrypto.readOptions(t.meta))
-            .mode("overwrite").parquet(staging)
-          walkFiles(staging).filter(_.endsWith(".parquet")).foreach { sf =>
-            val target = s"${t.location}/data/delete-rw-${java.util.UUID.randomUUID}.parquet"
-            java.nio.file.Files.move(GraftIO.toPath(sf), GraftIO.toPath(target))
-            val hPath = new org.apache.hadoop.fs.Path("file://" + GraftIO.toPath(target).toString)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hPath, conf),
-              org.apache.parquet.HadoopReadOptions.builder(conf, hPath).build())
-            val n = try r.getRecordCount finally r.close()
-            if (n == 0) GraftIO.delete(target)
+            else if (kept.isEmpty) Nil
             else {
-              val refs = fs.flatMap(_.referencedDataFile).distinct
-              newFiles += DataFile(target, "parquet", specId, partition, n,
-                GraftIO.size(target), Map.empty,
-                content = FileContent.PositionDeletes,
-                referencedDataFile = if (refs.size == 1 && fs.forall(_.referencedDataFile.isDefined))
-                  Some(refs.head) else None)
+              val dels = mutable.ArrayBuffer.empty[(String, Long)]
+              kept.foreach { case (dataPath, bm) =>
+                DVIO.positions(bm).foreach(p => dels += ((dataPath, p))) }
+              val conf = new org.apache.hadoop.conf.Configuration(false)
+              delConf.foreach { case (k, v) => conf.set(k, v) }
+              Seq(GraftDeltaWriter.writeDeleteFile(loc, "parquet", delOwf, conf,
+                ctx.partitionId(), ctx.taskAttemptId(), specId, partition, dels))
             }
-          }
-          oldPaths ++= fs.map(_.path)
-          }
+          }.collect()
+        val oldPaths = batch.flatMap(_._2.map(_.path))
+        val rawNew = batch.zip(written).flatMap { case ((_, fs), out) =>
+          // a parquet output names one data file only when every source
+          // did and they agree (the sources' rule, not the content's)
+          val refs = fs.flatMap(_.referencedDataFile).distinct
+          val ref = if (refs.size == 1 && fs.forall(_.referencedDataFile.isDefined))
+            Some(refs.head) else None
+          if (dvMode) out else out.map(_.copy(referencedDataFile = ref))
         }
         // cross-group DV dedupe: the rewrite groups by (specId, partition),
         // so one data file whose deletes span partition-spec versions can
         // surface in two groups and get two DVs — union them here so the
         // commit upholds v3's one-DV-per-data-file invariant (the commit
         // path's mergeDVs only merges against PRIOR snapshots' vectors)
-        val rawNew = newFiles.result()
         val (dvNew, restNew) = rawNew.partition(f =>
           DVIO.isDV(f.path) && f.referencedDataFile.isDefined)
         val dedupedDv = dvNew.groupBy(_.referencedDataFile.get).map {
           case (_, fs) if fs.size == 1 => fs.head
           case (ref, fs) =>
-            val tCrypto = graft.core.meta.TableCrypto.resolve(t.meta)
             val bm = new org.roaringbitmap.longlong.Roaring64Bitmap
+            fs.foreach(f => bm.or(DVIO.read(f.path, crypto)._2))
+            val merged = GraftDeltaWriter.writeDV(loc, 0, 0L, fs.head.specId,
+              fs.head.partition, ref, DVIO.positions(bm), crypto)
             fs.foreach(f =>
-              DVIO.read(f.path, tCrypto)._2.forEach((l: Long) => bm.addLong(l)))
-            val path = s"${t.location}/data/dv-rw-${java.util.UUID.randomUUID}.dv"
-            val it = bm.getLongIterator
-            val (n, off, len) = DVIO.writeBlob(path, ref,
-              new Iterator[Long] {
-                def hasNext: Boolean = it.hasNext
-                def next(): Long = it.next()
-              }, tCrypto)
-            fs.foreach(f =>
-              try GraftIO.delete(f.path) catch { case _: Throwable => () })
-            fs.head.copy(path = path, recordCount = n,
-              fileSizeBytes = GraftIO.size(path),
-              contentOffset = Some(off), contentSizeInBytes = Some(len))
+              try GraftIO.delete(f.path) catch { case scala.util.control.NonFatal(_) => () })
+            merged
         }.toSeq
         val finalNew = restNew ++ dedupedDv
         // TEST FAILPOINT (fault-injection seam, set only by tests): lets a
@@ -1365,12 +1379,12 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
         if (sys.props.get("graft.test.rpd.failBatch")
             .flatMap(_.toIntOption).contains(batchIdx))
           throw new RuntimeException(s"injected failure in batch $batchIdx")
-        val ow = t.newOverwrite().deleteFiles(oldPaths.result())
+        val ow = t.newOverwrite().deleteFiles(oldPaths)
           .addFiles(finalNew).overrideOperation("replace")
         validateFrom.foreach(ow.validateFromSnapshot)
         val snap = ow.commit()
         validateFrom = Some(snap.snapshotId)
-        rewrittenTotal += oldPaths.result().size
+        rewrittenTotal += oldPaths.size
         addedTotal += finalNew.size
         } catch {
           // partial progress: a failed batch forfeits only its own

@@ -460,16 +460,15 @@ object GraftSparkTable {
 
   /** Positions of `dataPath` deleted by the position-delete or DV files
     * `deletePaths`, ORed into one fresh bitmap; the batch scan and the
-    * changelog scan both read deletes through here. Each delete file is
-    * parsed once per JVM (`executorCache`, key ("pos", path)) into
-    * data-file path → positions, with its OWN manifest-recorded format in
-    * `formats` (reference DeleteFilter per-file dispatch; entries past
-    * the array read as parquet; a null avro/orc reader falls back to
-    * `parquet`). Delete content stores the writer-time ABSOLUTE data-file
-    * path: match scheme-stripped exact first, then — for tables relocated
-    * under v4 relative metadata locations — fall back to a UNIQUE
+    * changelog scan both read deletes through here. Each file is parsed
+    * by `positionsByFile`, with its OWN manifest-recorded format in
+    * `formats` (entries past the array read as parquet). Delete content
+    * stores the writer-time ABSOLUTE data-file path: match
+    * scheme-stripped exact first, then — for tables relocated under v4
+    * relative metadata locations — fall back to a UNIQUE
     * last-/data/-suffix match (an ambiguous suffix, e.g. an import
     * colliding with a native file name, never silently cross-applies).
+    * rewrite_position_delete_files applies the same rule per file.
     *
     * Masks stay Roaring bitmaps end-to-end: a boxed HashSet[Long] costs
     * ~48 B per deleted position (500 MB heap for a 10M-row DV), while the
@@ -481,35 +480,11 @@ object GraftSparkTable {
       orc: PartitionedFile => Iterator[InternalRow])
       : org.roaringbitmap.longlong.Roaring64Bitmap = {
     import graft.core.meta.GraftIO.{dataSuffix, stripScheme}
-    import org.roaringbitmap.longlong.Roaring64Bitmap
-    // ~retained bytes: the roaring serialized size tracks heap closely
-    // (containers are the payload)
-    def weigh(m: Map[String, Roaring64Bitmap]): Long =
-      64L + m.iterator.map { case (k, v) =>
-        k.length * 2L + 64L + v.serializedSizeInBytes()
-      }.sum
-    val out = new Roaring64Bitmap()
+    val out = new org.roaringbitmap.longlong.Roaring64Bitmap()
     deletePaths.zipWithIndex.foreach { case (dp, di) =>
-      val byFile = executorCache.get(("pos", dp), weigh) {
-        if (graft.core.meta.DVIO.isDV(dp)) {
-          val (ref, bm) = graft.core.meta.DVIO.read(dp, crypto)
-          Map(stripScheme(ref) -> bm)
-        } else {
-          val readFn = (if (di < formats.length) formats(di) else "parquet") match {
-            case "avro" if avro != null => avro
-            case "orc" if orc != null   => orc
-            case _                      => parquet
-          }
-          val m = scala.collection.mutable.Map.empty[String, Roaring64Bitmap]
-          readFn(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(dp),
-              0L, Long.MaxValue, Array.empty[String], 0L, Long.MaxValue, Map.empty))
-            .foreach { r =>
-              m.getOrElseUpdate(stripScheme(r.getUTF8String(0).toString),
-                new Roaring64Bitmap()).addLong(r.getLong(1))
-            }
-          m.toMap
-        }
-      }
+      val byFile = positionsByFile(dp,
+        if (di < formats.length) formats(di) else "parquet",
+        crypto, parquet, avro, orc)
       val hit = byFile.get(stripScheme(dataPath)).orElse {
         val want = dataSuffix(dataPath)
         byFile.keys.filter(k => dataSuffix(k) == want).toSeq match {
@@ -520,6 +495,81 @@ object GraftSparkTable {
       hit.foreach(out.or) // or() mutates OUT only; cached bitmaps stay pristine
     }
     out
+  }
+
+  /** One position-delete or DV file parsed into scheme-stripped data-file
+    * path → deleted positions, once per JVM (`executorCache`, key
+    * ("pos", path)). `format` is the file's manifest-recorded format
+    * (reference DeleteFilter per-file dispatch); a null avro/orc reader
+    * falls back to `parquet`. The returned bitmaps are shared: callers
+    * OR them into their own, never mutate them. */
+  def positionsByFile(path: String, format: String,
+      crypto: Option[graft.core.meta.TableCrypto],
+      parquet: PartitionedFile => Iterator[InternalRow],
+      avro: PartitionedFile => Iterator[InternalRow],
+      orc: PartitionedFile => Iterator[InternalRow])
+      : Map[String, org.roaringbitmap.longlong.Roaring64Bitmap] = {
+    import graft.core.meta.GraftIO.stripScheme
+    import org.roaringbitmap.longlong.Roaring64Bitmap
+    // ~retained bytes: the roaring serialized size tracks heap closely
+    // (containers are the payload)
+    def weigh(m: Map[String, Roaring64Bitmap]): Long =
+      64L + m.iterator.map { case (k, v) =>
+        k.length * 2L + 64L + v.serializedSizeInBytes()
+      }.sum
+    executorCache.get(("pos", path), weigh) {
+      if (graft.core.meta.DVIO.isDV(path)) {
+        val (ref, bm) = graft.core.meta.DVIO.read(path, crypto)
+        Map(stripScheme(ref) -> bm)
+      } else {
+        val readFn = format match {
+          case "avro" if avro != null => avro
+          case "orc" if orc != null   => orc
+          case _                      => parquet
+        }
+        val m = scala.collection.mutable.Map.empty[String, Roaring64Bitmap]
+        readFn(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
+            0L, Long.MaxValue, Array.empty[String], 0L, Long.MaxValue, Map.empty))
+          .foreach { r =>
+            m.getOrElseUpdate(stripScheme(r.getUTF8String(0).toString),
+              new Roaring64Bitmap()).addLong(r.getLong(1))
+          }
+        m.toMap
+      }
+    }
+  }
+
+  /** Readers of position-delete content (file_path, pos) for
+    * `positionsByFile`, built once per scan and shipped to its tasks:
+    * (parquet, avro, orc), each null unless `fmts` names that format.
+    * Parquet reads through `conf` (field-id reads and the table's parquet
+    * decryption already set), ORC by name. The batch scan, the changelog
+    * scan and rewrite_position_delete_files all build them here. */
+  def positionDeleteReaders(spark: SparkSession,
+      conf: org.apache.hadoop.conf.Configuration, fmts: Set[String])
+      : (PartitionedFile => Iterator[InternalRow],
+        PartitionedFile => Iterator[InternalRow],
+        PartitionedFile => Iterator[InternalRow]) = {
+    val schema = GraftDeltaWriter.DeleteSchema
+    val opts = Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
+      "enableVectorizedReader" -> "false")
+    val parquet =
+      if (fmts.exists(_.startsWith("parquet")))
+        new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+          new StructType(), schema, Nil, opts,
+          new org.apache.hadoop.conf.Configuration(conf))
+      else null
+    val avro: PartitionedFile => Iterator[InternalRow] =
+      if (fmts("avro")) GraftAvro.ReadFunc(schema.json) else null
+    val orc =
+      if (fmts("orc")) {
+        val nameConf = new org.apache.hadoop.conf.Configuration(conf)
+        nameConf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
+        new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat()
+          .buildReaderWithPartitionValues(spark, schema,
+            new StructType(), schema, Nil, opts, nameConf)
+      } else null
+    (parquet, avro, orc)
   }
 
   /** Executor-side cache of row-group/stripe (startingPos, rowCount)
@@ -1676,16 +1726,12 @@ object GraftSparkTable {
         if (shredReq.isEmpty) null
         else fmt.buildReaderWithPartitionValues(spark, fullSchemaNF,
           new StructType(), dataReadNFBin, Nil, rowOpts, freshConf)
-      val deleteSchema = StructType(Seq(
-        org.apache.spark.sql.types.StructField("file_path", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("pos", org.apache.spark.sql.types.LongType)))
-      val deleteFunc =
-        if (anyNonDvPos && posDelFmts.exists(_.startsWith("parquet")))
-          fmt.buildReaderWithPartitionValues(spark, deleteSchema,
-            new StructType(), deleteSchema, Nil,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-              "enableVectorizedReader" -> "false"), freshConf)
-        else null
+      // position-delete files, one reader per format present (parquet by
+      // field id, ORC/avro by name — genuine external delete files with
+      // the reserved field ids read identically)
+      val (deleteFunc, avroDeleteFunc, orcDeleteFunc) =
+        positionDeleteReaders(spark, conf,
+          if (anyNonDvPos) posDelFmts else Set.empty)
       // equality-delete masking needs the identifier columns regardless of
       // pruning: read the full schema (field-id resolution nulls absent
       // columns in the delete files themselves)
@@ -1780,19 +1826,6 @@ object GraftSparkTable {
           orcFmt.buildReaderWithPartitionValues(spark, stripIds(fullSchema),
             new StructType(), stripIds(dataRequired), Nil,
             Map(FileFormat.OPTION_RETURNING_BATCH -> "true"), freshNameConf)
-        else null
-      // position-delete files in the non-table formats (file_path/pos read
-      // by name — both formats resolve names, so genuine external delete
-      // files with the reserved field ids read identically)
-      val orcDeleteFunc =
-        if (anyNonDvPos && posDelFmts("orc"))
-          orcFmt.buildReaderWithPartitionValues(spark, deleteSchema,
-            new StructType(), deleteSchema, Nil,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-              "enableVectorizedReader" -> "false"), freshNameConf)
-        else null
-      val avroDeleteFunc: PartitionedFile => Iterator[InternalRow] =
-        if (anyNonDvPos && posDelFmts("avro")) GraftAvro.ReadFunc(deleteSchema.json)
         else null
       // equality-delete files in ORC: full-schema read by name (absent
       // columns null — only the file's key columns are present)

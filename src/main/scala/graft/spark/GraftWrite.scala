@@ -1026,17 +1026,12 @@ final class GraftDeltaBatchWrite(table: GTable, branchPin: Option[String] = None
     val dataOwf = new ParquetFileFormat().prepareWrite(spark, dataJob, codec, writeSchema)
     dataJob.getConfiguration
       .setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    val delJob = Job.getInstance(conf)
-    val delOwf = new ParquetFileFormat()
-      .prepareWrite(spark, delJob, codec, GraftDeltaWriter.DeleteSchema)
-    delJob.getConfiguration
-      .setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
     val confMap = dataJob.getConfiguration.iterator().asScala
       .map(e => e.getKey -> e.getValue).toMap
     // the delete writer needs the conf prepareWrite populated with the
     // DELETE schema, not the data schema
-    val delConfMap = delJob.getConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
+    val (delOwf, delConfMap) =
+      GraftDeltaWriter.parquetDeleteOutput(spark, table.meta)
     new GraftDeltaWriterFactory(
       table.location, writeSchema.json,
       MetaJson.writeSchema(gSchemaForFile).toString,
@@ -1153,8 +1148,88 @@ object GraftDeltaWriter {
         }.toSeq)
       }
     } catch {
-      case _: Throwable => None
+      case scala.util.control.NonFatal(_) => None
     }
+
+  /** Parquet writer factory and job conf for position-delete files
+    * (field ids on, the table's parquet encryption set, the session's
+    * compression codec); built once per write, both ship to the tasks
+    * that call `writeDeleteFile`. */
+  def parquetDeleteOutput(spark: SparkSession, meta: TableMetadata)
+      : (OutputWriterFactory, Map[String, String]) = {
+    val conf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
+    conf.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
+    GraftParquetCrypto.configure(conf, meta)
+    val codec = Map("compression" -> spark.sessionState.conf
+      .getConfString("spark.sql.parquet.compression.codec", "snappy"))
+    val job = Job.getInstance(conf)
+    val owf = new ParquetFileFormat().prepareWrite(spark, job, codec, DeleteSchema)
+    job.getConfiguration.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
+    (owf, job.getConfiguration.iterator().asScala
+      .map(e => e.getKey -> e.getValue).toMap)
+  }
+
+  /** one position-delete file for `dels` (sorted (file,pos)) under
+    * `location`/data; format is `write.delete.format` — parquet (default,
+    * through `delOwf`/`conf` from `parquetDeleteOutput`) or avro (the
+    * shape Flink CDC pipelines write; reference core delete writers take
+    * any FileFormat). The DML delete writer and
+    * rewrite_position_delete_files both write through here. */
+  def writeDeleteFile(location: String, deleteFormat: String,
+      delOwf: OutputWriterFactory, conf: Configuration,
+      partitionId: Int, taskId: Long, sid: Int, partition: Seq[Any],
+      dels: mutable.ArrayBuffer[(String, Long)]): DataFile = {
+    val dir = s"$location/data"
+    java.nio.file.Files.createDirectories(GraftIO.toPath(dir))
+    val ext = if (deleteFormat == "avro") "avro" else "parquet"
+    val path = s"$dir/delete-$partitionId-$taskId-${UUID.randomUUID}.$ext"
+    // sorted by (file, pos) so per-file runs are contiguous
+    dels.sortInPlace()
+    val rowOut = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
+    if (deleteFormat == "avro") {
+      GraftAvro.writeFile(path, DeleteSchema, DeleteGSchema,
+        dels.iterator.map { case (f, p) =>
+          rowOut.update(0, org.apache.spark.unsafe.types.UTF8String.fromString(f))
+          rowOut.setLong(1, p)
+          rowOut: InternalRow
+        })
+    } else {
+      val ctx = new TaskAttemptContextImpl(conf,
+        new TaskAttemptID(new TaskID("graft-del", partitionId, TaskType.MAP, taskId.toInt), 0))
+      val w = delOwf.newInstance(path, DeleteSchema, ctx)
+      dels.foreach { case (f, p) =>
+        rowOut.update(0, org.apache.spark.unsafe.types.UTF8String.fromString(f))
+        rowOut.setLong(1, p)
+        w.write(rowOut)
+      }
+      w.close()
+    }
+    val refs = dels.map(_._1).distinct
+    // file_path range of the RELOCATION-STABLE suffix keys: the delete
+    // index uses it to skip data files this delete can't reference
+    // (reference records file_path bounds in delete-file metrics)
+    val keys = refs.map(GraftIO.dataSuffix)
+    val pathStats = Map(graft.core.meta.DeleteFileIndex.FilePathFieldId ->
+      graft.core.expr.ColStats(valueCount = Some(dels.size.toLong),
+        nullCount = Some(0L), nanCount = None,
+        lower = Some(keys.min), upper = Some(keys.max)))
+    DataFile(path, ext, sid, partition, dels.size.toLong,
+      GraftIO.size(path), pathStats, content = FileContent.PositionDeletes,
+      referencedDataFile = if (refs.size == 1) Some(refs.head) else None)
+  }
+
+  /** one deletion vector (a Roaring bitmap file, reference v3 DVs) of
+    * `positions` in `dataPath`, under `location`/data */
+  def writeDV(location: String, partitionId: Int, taskId: Long, sid: Int,
+      partition: Seq[Any], dataPath: String, positions: Iterator[Long],
+      crypto: Option[graft.core.meta.TableCrypto]): DataFile = {
+    val path = s"$location/data/dv-$partitionId-$taskId-${UUID.randomUUID}.dv"
+    val (n, off, len) = DVIO.writeBlob(path, dataPath, positions, crypto)
+    DataFile(path, "dv", sid, partition, n, GraftIO.size(path),
+      Map.empty, content = FileContent.PositionDeletes,
+      referencedDataFile = Some(dataPath),
+      contentOffset = Some(off), contentSizeInBytes = Some(len))
+  }
 }
 
 final class GraftDeltaWriter(
@@ -1197,51 +1272,10 @@ final class GraftDeltaWriter(
 
   override def insert(row: InternalRow): Unit = dataWriter.write(row)
 
-  /** one position-delete file for `dels` (sorted (file,pos)); format is
-    * `write.delete.format` — parquet (default) or avro (the shape Flink
-    * CDC pipelines write; reference core delete writers take any
-    * FileFormat) */
   private def writeDeleteFile(sid: Int, partition: Seq[Any],
-      dels: mutable.ArrayBuffer[(String, Long)]): DataFile = {
-    val dir = s"$location/data"
-    java.nio.file.Files.createDirectories(GraftIO.toPath(dir))
-    val ext = if (deleteFormat == "avro") "avro" else "parquet"
-    val path = s"$dir/delete-$partitionId-$taskId-${UUID.randomUUID}.$ext"
-    // sorted by (file, pos) so per-file runs are contiguous
-    dels.sortInPlace()
-    val rowOut = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
-    if (deleteFormat == "avro") {
-      GraftAvro.writeFile(path, GraftDeltaWriter.DeleteSchema,
-        GraftDeltaWriter.DeleteGSchema,
-        dels.iterator.map { case (f, p) =>
-          rowOut.update(0, org.apache.spark.unsafe.types.UTF8String.fromString(f))
-          rowOut.setLong(1, p)
-          rowOut: InternalRow
-        })
-    } else {
-      val ctx = new TaskAttemptContextImpl(conf,
-        new TaskAttemptID(new TaskID("graft-del", partitionId, TaskType.MAP, taskId.toInt), 0))
-      val w = delOwf.newInstance(path, GraftDeltaWriter.DeleteSchema, ctx)
-      dels.foreach { case (f, p) =>
-        rowOut.update(0, org.apache.spark.unsafe.types.UTF8String.fromString(f))
-        rowOut.setLong(1, p)
-        w.write(rowOut)
-      }
-      w.close()
-    }
-    val refs = dels.map(_._1).distinct
-    // file_path range of the RELOCATION-STABLE suffix keys: the delete
-    // index uses it to skip data files this delete can't reference
-    // (reference records file_path bounds in delete-file metrics)
-    val keys = refs.map(GraftIO.dataSuffix)
-    val pathStats = Map(graft.core.meta.DeleteFileIndex.FilePathFieldId ->
-      graft.core.expr.ColStats(valueCount = Some(dels.size.toLong),
-        nullCount = Some(0L), nanCount = None,
-        lower = Some(keys.min), upper = Some(keys.max)))
-    DataFile(path, ext, sid, partition, dels.size.toLong,
-      GraftIO.size(path), pathStats, content = FileContent.PositionDeletes,
-      referencedDataFile = if (refs.size == 1) Some(refs.head) else None)
-  }
+      dels: mutable.ArrayBuffer[(String, Long)]): DataFile =
+    GraftDeltaWriter.writeDeleteFile(location, deleteFormat, delOwf, conf,
+      partitionId, taskId, sid, partition, dels)
 
   override def commit(): WriterCommitMessage = {
     val dataMsg = dataWriter.commit().asInstanceOf[GraftCommitMessage]
@@ -1269,13 +1303,8 @@ final class GraftDeltaWriter(
   private def commitDVs(): Seq[DataFile] =
     deleted.toSeq.flatMap { case ((sid, _), (partition, dels)) =>
       dels.groupBy(_._1).toSeq.map { case (dataPath, posRows) =>
-        val path = s"$location/data/dv-$partitionId-$taskId-${UUID.randomUUID}.dv"
-        val (n, off, len) =
-          DVIO.writeBlob(path, dataPath, posRows.iterator.map(_._2), crypto)
-        DataFile(path, "dv", sid, partition, n, GraftIO.size(path),
-          Map.empty, content = FileContent.PositionDeletes,
-          referencedDataFile = Some(dataPath),
-          contentOffset = Some(off), contentSizeInBytes = Some(len))
+        GraftDeltaWriter.writeDV(location, partitionId, taskId, sid,
+          partition, dataPath, posRows.iterator.map(_._2), crypto)
       }
     }
 
