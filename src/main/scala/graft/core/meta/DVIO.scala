@@ -92,8 +92,10 @@ object DVIO {
     * magic + portable 64-bit roaring (LE internals) + BE CRC-32 of
     * magic+vector. Exposed (with [[parseBlobBytes]]) so golden-file
     * interop tests can check byte-for-byte equality against the
-    * reference's committed `*-position-index.bin` fixtures
-    * (core/src/test/resources/org/apache/iceberg/deletes). */
+    * `*-position-index.bin` fixtures: the reference's committed ones
+    * (core/src/test/resources/org/apache/iceberg/deletes) where a
+    * checkout is present, else bundled copies that
+    * `tools/spec_fixtures.py` assembles from the format specs. */
   private[graft] def blobBytes(positions: Iterator[Long]): Array[Byte] =
     blobBytesWithCardinality(positions)._1
 

@@ -186,20 +186,7 @@ class IcebergMetadataSpec extends AnyFunSuite {
 
   // -------------------------------------------------- reference fixtures
 
-  private val fixtureDir = "/root/reference/core/src/test/resources"
-  // the reference checkout's own file when it is present, else the
-  // hand-written spec document of the same name bundled under
-  // src/test/resources/iceberg-spec
-  private def fixture(name: String): String = {
-    val p = java.nio.file.Paths.get(fixtureDir, name)
-    if (java.nio.file.Files.isReadable(p))
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-    else {
-      val in = getClass.getResourceAsStream(s"/iceberg-spec/$name")
-      assert(in != null, s"bundled fixture $name is missing")
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-  }
+  private def fixture(name: String): String = SpecFixtures.string(name)
 
   test("reference fixture: TableMetadataV2ValidMinimal") {
     val json = fixture("TableMetadataV2ValidMinimal.json")

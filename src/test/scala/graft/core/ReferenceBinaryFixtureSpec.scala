@@ -1,13 +1,13 @@
 package graft.core
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.meta.{DVIO, Puffin}
 
-/** Byte-level interop against the reference's COMMITTED binary fixtures
-  * (built by the Java implementation, not by this repo):
+/** Byte-level interop against the deletion-vector and Puffin golden
+  * files of the reference's test resources:
   *
   *  - `deletes/{empty,small-alternating-values,small-and-large-values,
   *    all-container-types}-position-index.bin` — serialized
@@ -18,6 +18,12 @@ import graft.core.meta.{DVIO, Puffin}
   *    — whole Puffin containers, golden expectations from
   *    TestPuffinReader.java:42-143.
   *
+  * Each file is read through [[SpecFixtures]]: the Java implementation's
+  * own bytes when a reference checkout is present, else the copy bundled
+  * under src/test/resources/iceberg-spec, which `tools/spec_fixtures.py`
+  * assembles from the format specs alone (no graft or RoaringBitmap
+  * writer is involved); with neither, the test fails.
+  *
   * Read each fixture with OUR codecs and assert exact content; then
   * re-serialize the same position sets with our writer and assert
   * byte-for-byte equality with the goldens (both sides run-length
@@ -26,9 +32,9 @@ import graft.core.meta.{DVIO, Puffin}
   */
 class ReferenceBinaryFixtureSpec extends AnyFunSuite {
 
-  private val res = "/root/reference/core/src/test/resources/org/apache/iceberg"
+  private val res = "org/apache/iceberg"
   private def bin(name: String): Array[Byte] =
-    Files.readAllBytes(Paths.get(s"$res/deletes/$name"))
+    SpecFixtures.bytes(s"$res/deletes/$name")
 
   private val BitmapOffset = 0xFFFFFFFFL + 1L    // 1L << 32
   private val ContainerOffset = Character.MAX_VALUE + 1L // 1L << 16
@@ -77,7 +83,12 @@ class ReferenceBinaryFixtureSpec extends AnyFunSuite {
     assert(DVIO.blobBytes(want.toSeq.sorted.iterator).sameElements(golden))
   }
 
-  private def puffin(name: String): String = s"$res/puffin/v1/$name"
+  // Puffin's readers take a path: the fixture's bytes in a temp file
+  private def puffin(name: String): String = {
+    val tmp = Files.createTempFile("puffin-fixture-", ".bin")
+    tmp.toFile.deleteOnExit()
+    Files.write(tmp, SpecFixtures.bytes(s"$res/puffin/v1/$name")).toString
+  }
 
   test("empty puffin container golden file") {
     assert(Puffin.read(puffin("empty-puffin-uncompressed.bin")).isEmpty)

@@ -264,14 +264,14 @@ class HiveCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("adopts an entry pointing at REFERENCE-authored metadata bytes") {
     // the strongest adoption claim: the pointer names a metadata
     // document written by the reference implementation itself
-    // (core/src/test/resources/TableMetadataV2Valid.json), planted the
-    // way a genuine engine's HMS entry looks
+    // (core/src/test/resources/TableMetadataV2Valid.json; offline, the
+    // bundled spec document of that name), planted the way a genuine
+    // engine's HMS entry looks
     import org.apache.hadoop.hive.metastore.api._
-    val fixture = "/root/reference/core/src/test/resources/TableMetadataV2Valid.json"
-    assume(GraftIO.exists(fixture))
     val loc = s"$warehouse/hdb/ref_fixture_t"
     val mdPath = s"$loc/metadata/00034-${java.util.UUID.randomUUID}.metadata.json"
-    GraftIO.writeString(mdPath, GraftIO.readString(fixture))
+    GraftIO.writeString(mdPath,
+      graft.core.SpecFixtures.string("TableMetadataV2Valid.json"))
     val sd = new StorageDescriptor()
     sd.setCols(java.util.Collections.singletonList(
       new FieldSchema("x", "bigint", "")))

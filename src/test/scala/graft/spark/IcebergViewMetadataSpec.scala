@@ -12,21 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * spec documents of the same names bundled with the tests. */
 class IcebergViewMetadataSpec extends AnyFunSuite {
 
-  private val fixtureDir =
-    "/root/reference/core/src/test/resources/org/apache/iceberg/view"
-  // the reference checkout's own file when it is present, else the
-  // hand-written spec document of the same name bundled under
-  // src/test/resources/iceberg-spec/view
-  private def fixture(name: String): String = {
-    val p = java.nio.file.Paths.get(fixtureDir, name)
-    if (java.nio.file.Files.isReadable(p))
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-    else {
-      val in = getClass.getResourceAsStream(s"/iceberg-spec/view/$name")
-      assert(in != null, s"bundled fixture $name is missing")
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-  }
+  private def fixture(name: String): String =
+    graft.core.SpecFixtures.string(s"org/apache/iceberg/view/$name")
 
   test("reference fixture: ValidViewMetadata") {
     val json = fixture("ValidViewMetadata.json")
