@@ -172,8 +172,8 @@ object GraftIO {
     * one exists. The single definition every delete-matching site uses.
     * The read mask (GraftSparkTable.deletedPositions) and
     * rewrite_position_delete_files call one parse (positionsByFile) and
-    * one rule; rewrite_data_files applies the same rule as a DataFrame
-    * join (GraftProcedures.joinWithDeletePaths). */
+    * one rule; rewrite_data_files reads through the scan, so it applies
+    * the read mask itself. */
   def dataSuffix(p: String): String = {
     val s = stripScheme(p)
     val i = s.lastIndexOf("/data/")

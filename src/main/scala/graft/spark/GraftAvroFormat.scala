@@ -471,7 +471,7 @@ object GraftAvro {
     }
   }
 
-  // ----------------------------------------- compaction DataFrame bridge
+  // ---------------------------------------------------- DataFrame bridge
   /** Read avro files into a DataFrame (avro has no Spark connector on this
     * classpath). `withPos` adds __f/__p path+position columns, mirroring
     * what `_metadata.file_path`/`row_index` provide for parquet/ORC. */
@@ -499,8 +499,8 @@ object GraftAvro {
     spark.createDataFrame(rdd, outSchema)
   }
 
-  /** Executor-side compaction output: write a DataFrame partition stream to
-    * one avro file, returning (rows, stats) for the DataFile descriptor. */
+  /** Executor-side avro file write (delete files): a row stream to one
+    * avro file, returning (rows, stats) for the DataFile descriptor. */
   def writeFile(path: String, sparkSchema: StructType, gSchema: GSchema,
       rows: Iterator[InternalRow]): (Long, Map[Int, ColStats]) = {
     val w = new AvroOutputWriter(path, sparkSchema, gSchema)

@@ -400,22 +400,6 @@ object GraftProcedures extends Serializable {
       Iterator.single(n)
     }.fold(0)(_ + _)
 
-  /** Column forms of GraftIO.stripScheme / GraftIO.dataSuffix — the
-    * matching rule for delete-file content paths (see deletedPositions
-    * in GraftSparkTable): scheme-stripped exact, with the last-"/data/"
-    * suffix as the relocation-stable key. */
-  private[spark] def stripSchemeCol(c: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.regexp_replace(c, "^file:(//)?", "")
-
-  private[spark] def dataSuffixCol(c: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{regexp_extract, when}
-    val s = stripSchemeCol(c)
-    val ex = regexp_extract(s, "^.*(/data/.*)$", 1)
-    when(ex =!= "", ex).otherwise(s)
-  }
-
   /** Commit producer for rewrite_manifests: replaces exactly the source
     * manifests with the compacted ones, merging PER CAS ATTEMPT against
     * the refreshed base so a concurrently added manifest is carried over
@@ -440,166 +424,16 @@ object GraftProcedures extends Serializable {
     }
   }
 
-  /** Join data rows (`target`, path in `targetPath`) to delete-content
-    * rows (`dels`, writer-time absolute path in `delPath`, SOURCE delete
-    * file in `delSrc`) under the read path's matching rule
-    * (deletedPositions in GraftSparkTable) — applied PER DELETE FILE,
-    * exactly like the read path: within each source delete file, a
-    * scheme-stripped exact match wins; the relocation-stable /data/
-    * suffix is consulted only when the target has no exact match IN THAT
-    * FILE, and only when the suffix names a single distinct path IN THAT
-    * FILE. (A pooled rule would diverge after relocation: an exact match
-    * in a NEW delete file must not disable the suffix fallback against
-    * an OLD one, or compaction resurrects rows the read path deletes.)
-    * `extra` adds per-row conditions (position, identifier keys).
-    * `joinType` ∈ inner | left_anti. `antiKeys` (required for left_anti)
-    * names target columns that uniquely identify a target row — the
-    * anti-join is keyed on them, never on a generated id (a
-    * nondeterministic id computed independently in two plan branches can
-    * mis-drop or resurrect rows under AQE/task retry). */
-  private[spark] def joinWithDeletePaths(
-      target: org.apache.spark.sql.DataFrame, targetPath: String,
-      dels: org.apache.spark.sql.DataFrame, delPath: String, delSrc: String,
-      joinType: String,
-      extra: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =>
-        org.apache.spark.sql.Column = (_, _) => org.apache.spark.sql.functions.lit(true),
-      antiKeys: Seq[String] = Nil)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val d0 = dels.withColumn("__d_exact", stripSchemeCol(col(delPath)))
-      .withColumn("__d_sfx0", dataSuffixCol(col(delPath)))
-      .withColumn("__d_src", col(delSrc))
-    val sfxCounts = d0.groupBy("__d_src", "__d_sfx0")
-      .agg(countDistinct("__d_exact").as("__d_n"))
-    val d = d0.join(broadcast(sfxCounts), Seq("__d_src", "__d_sfx0"))
-      .withColumn("__d_sfx", when(col("__d_n") === 1, col("__d_sfx0")))
-      .drop("__d_sfx0", "__d_n")
-    // (exact path, source file) pairs — identifies, per delete file,
-    // which targets have an exact hit there (suffix disabled for those)
-    val exacts = d.select(col("__d_src").as("__hx_src"),
-      col("__d_exact").as("__hx")).distinct()
-    val t = target
-      .withColumn("__t_exact", stripSchemeCol(col(targetPath)))
-      .withColumn("__t_sfx", dataSuffixCol(col(targetPath)))
-    val matched = t.join(d,
-        (t("__t_exact") === d("__d_exact") ||
-          t("__t_sfx") === d("__d_sfx")) && extra(t, d))
-      .join(broadcast(exacts),
-        col("__t_exact") === col("__hx") && col("__d_src") === col("__hx_src"),
-        "left")
-      .filter(col("__t_exact") === col("__d_exact") || col("__hx").isNull)
-      .drop("__hx", "__hx_src")
-    val helper = Seq("__t_exact", "__t_sfx", "__d_exact", "__d_sfx", "__d_src")
-    joinType match {
-      case "inner" => matched.drop(helper: _*)
-      case "left_anti" =>
-        require(antiKeys.nonEmpty,
-          "joinWithDeletePaths: left_anti requires deterministic antiKeys")
-        t.join(matched.select(antiKeys.map(matched(_)): _*).distinct(),
-            antiKeys, "left_anti")
-          .drop(helper: _*)
-      case other => throw new IllegalArgumentException(
-        s"joinWithDeletePaths: unsupported join type $other")
-    }
-  }
-
-  /** (file_path, pos) rows of position-delete files as one DataFrame,
-    * across both delete formats (parquet files and roaring DVs). */
-  /** (file_path, pos, __src) rows of position-delete files, __src = the
-    * delete file each row came from (the per-file path-matching scope). */
-  /** Whole-file ORC read with per-row positions: Spark's ORC _metadata
-    * struct has no row_index, so each file is read in ONE split on an
-    * executor (row order = file order, like the scan's position path) and
-    * positions come from the iterator. `fileSchema` carries the columns'
-    * WRITE-TIME names (ORC resolves by name); the output uses
-    * `outSchema`'s current names positionally, plus __f/__p. */
-  private[spark] def orcReadToDf(spark: SparkSession, paths: Seq[String],
-      outSchema: org.apache.spark.sql.types.StructType,
-      fileSchema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-    val readFn = new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat()
-      .buildReaderWithPartitionValues(spark, fileSchema,
-        new StructType(), fileSchema, Nil,
-        Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-          "enableVectorizedReader" -> "false"),
-        spark.sessionState.newHadoopConfWithOptions(Map.empty))
-    val withPos = StructType(outSchema.fields ++ Seq(
-      StructField("__f", StringType), StructField("__p", LongType)))
-    val rdd = spark.sparkContext.parallelize(paths, math.max(1, paths.size))
-      .flatMap { p =>
-        val rows = readFn(PartitionedFile(
-          org.apache.spark.sql.catalyst.InternalRow.empty,
-          org.apache.spark.paths.SparkPath.fromPathString(p), 0, Long.MaxValue,
-          Array.empty[String], 0L, Long.MaxValue, Map.empty))
-        val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .createToScalaConverter(withPos)
-        rows.zipWithIndex.map { case (r, i) =>
-          val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow(
-            r, org.apache.spark.sql.catalyst.InternalRow(
-              org.apache.spark.unsafe.types.UTF8String.fromString(p), i.toLong))
-          conv(joined).asInstanceOf[org.apache.spark.sql.Row]
-        }
-      }
-    spark.createDataFrame(rdd, withPos)
-  }
-
-  /** id-resolved parquet → DataFrame: binds columns by parquet field id
-    * regardless of file-side NAMES (our parquet writers always stamp
-    * ids), via buildReaderWithPartitionValues over a job-local conf.
-    * This is the only safe channel: the DataFrameReader path captures
-    * field-id matching from the SESSION conf (a per-read option never
-    * reaches the parquet reader), and flipping the session conf would
-    * leak into every concurrent read in the session. */
-  private[spark] def idParquetToDf(spark: SparkSession, paths: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
-      meta: graft.core.meta.TableMetadata,
-      withPos: Boolean): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-    val conf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
-    conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", true)
-    GraftParquetCrypto.configure(conf, meta)
-    val readFn = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-      .buildReaderWithPartitionValues(spark, schema,
-        new StructType(), schema, Nil,
-        Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-          "enableVectorizedReader" -> "false"), conf)
-    val outSchema =
-      if (withPos) StructType(schema.fields ++ Seq(
-        StructField("__f", StringType), StructField("__p", LongType)))
-      else schema
-    val rdd = spark.sparkContext.parallelize(paths, math.max(1, paths.size))
-      .flatMap { p =>
-        val rows = readFn(PartitionedFile(
-          org.apache.spark.sql.catalyst.InternalRow.empty,
-          org.apache.spark.paths.SparkPath.fromPathString(p), 0, Long.MaxValue,
-          Array.empty[String], 0L, Long.MaxValue, Map.empty))
-        val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .createToScalaConverter(outSchema)
-        if (withPos) rows.zipWithIndex.map { case (r, i) =>
-          val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow(
-            r, org.apache.spark.sql.catalyst.InternalRow(
-              org.apache.spark.unsafe.types.UTF8String.fromString(p), i.toLong))
-          conv(joined).asInstanceOf[org.apache.spark.sql.Row]
-        }
-        else rows.map(r => conv(r).asInstanceOf[org.apache.spark.sql.Row])
-      }
-    spark.createDataFrame(rdd, outSchema)
-  }
-
   /** One rewrite_position_delete_files task: the positions in one
     * partition group's delete `files` (path, format) that still apply to
     * a live data file, by data-file path in sorted order; ORing the
     * bitmaps dedups (file_path, pos). Files are parsed by the scan's
     * `positionsByFile` (and its executor cache) and matched under the
-    * read path's rule PER FILE (deletedPositions; joinWithDeletePaths is
-    * its DataFrame form): a key applies to the live file it names, or to
-    * a live file sharing its /data/ suffix when no other key in THIS file
-    * shares that suffix. The rule's "no exact key for that live file in
-    * this file" is implied: such a key would share the suffix, so by
-    * uniqueness it would be this key. Positions are written under the
+    * read path's rule PER FILE (deletedPositions): a key applies to the
+    * live file it names, or to a live file sharing its /data/ suffix when
+    * no other key in THIS file shares that suffix. The rule's "no exact
+    * key for that live file in this file" is implied: such a key would
+    * share the suffix, so by uniqueness it would be this key. Positions are written under the
     * live file's manifest path (`liveByKey`: scheme-stripped path →
     * path; `liveBySuffix`: suffix → the path when only one live file has
     * it): a DV then names a manifest path, and one output never holds a
@@ -629,41 +463,6 @@ object GraftProcedures extends Serializable {
       }
     }
     kept
-  }
-
-  private[spark] def deleteRowsDf(spark: SparkSession,
-      files: Seq[DataFile],
-      readOpts: Map[String, String] = Map.empty): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, input_file_name}
-    val (dv, rest) = files.partition(_.format == "dv")
-    // per-file format dispatch (reference DeleteFilter): external trees
-    // mix avro/orc position deletes over parquet data
-    val (av, rest2) = rest.partition(_.format == "avro")
-    val (orc, pq) = rest2.partition(_.format == "orc")
-    val parts = Seq.newBuilder[org.apache.spark.sql.DataFrame]
-    if (pq.nonEmpty)
-      parts += spark.read.schema(GraftDeltaWriter.DeleteSchema)
-        .options(readOpts)
-        .parquet(pq.map(_.path): _*)
-        .withColumn("__src", input_file_name())
-    if (av.nonEmpty)
-      parts += GraftAvro.readToDf(spark, av.map(_.path),
-          GraftDeltaWriter.DeleteSchema, withPos = true)
-        .select(col("file_path"), col("pos"), col("__f").as("__src"))
-    if (orc.nonEmpty)
-      parts += orcReadToDf(spark, orc.map(_.path),
-          GraftDeltaWriter.DeleteSchema, GraftDeltaWriter.DeleteSchema)
-        .select(col("file_path"), col("pos"), col("__f").as("__src"))
-    if (dv.nonEmpty) {
-      val rows = dv.flatMap { f =>
-        val (ref, bm) = DVIO.read(f.path)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, String)]
-        bm.forEach((l: Long) => { buf += ((ref, l, f.path)); () })
-        buf
-      }
-      parts += spark.createDataFrame(rows).toDF("file_path", "pos", "__src")
-    }
-    parts.result().reduce(_ unionByName _)
   }
 }
 
@@ -1406,78 +1205,15 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
       }
 
     case "compute_table_stats" =>
-      // NDV per column via approx_count_distinct; stored as table
+      // NDV per column of the live rows; stored as table
       // properties feeding SupportsReportStatistics (reference
       // ComputeTableStatsSparkAction + Puffin theta sketches)
       val t = loadTable(input.getUTF8String(0).toString)
-      val spark = SparkSession.active
-      val schema = graft.core.types.SparkTypes.toSparkSchema(t.schema)
-      val liveFiles = t.newScan().planFiles().map(_.file)
-      val byFmt = liveFiles.groupBy(_.format)
-      if (byFmt.isEmpty) {
+      val liveTasks = t.newScan().planFiles()
+      if (liveTasks.isEmpty) {
         // no live data files: nothing to analyze
         return out(StructType(Seq(StructField("columns_analyzed", IntegerType))), row(0))
       }
-      // identity-partition sources over name-mapped imports: the files
-      // physically LACK the column (Delta/hive layout), so a raw scan
-      // would sketch nothing but nulls. When every live file's spec has
-      // the field as an identity source (with a full partition tuple),
-      // the value set IS the set of live partition values — build the
-      // sketch from METADATA (exact, zero data IO). Only engaged when a
-      // name-mapped file is present, mirroring the scan's identityFill;
-      // ordinary tables keep the scan-based sketch.
-      val metadataNdvFields: Map[Int, Seq[Any]] =
-        if (!liveFiles.exists(f => f.format == "parquet-nm" ||
-            f.format == "orc-nm" || f.format == "parquet-im")) Map.empty
-        else {
-          // per-spec identity index, computed ONCE per (spec, field) —
-          // a per-file indexWhere would be O(fields x files) on the
-          // driver at millions of live files
-          val idxBySpec: Map[Int, Map[Int, Int]] = t.meta.specs.map(sp =>
-            sp.specId -> sp.fields.zipWithIndex.collect {
-              case (pf, i) if pf.transform == graft.core.transform.IdentityT =>
-                pf.sourceId -> i
-            }.toMap).toMap
-          val candidates = scala.collection.mutable.Map.empty[
-            Int, scala.collection.mutable.LinkedHashSet[Any]]
-          t.schema.fields.foreach(f =>
-            candidates(f.id) = scala.collection.mutable.LinkedHashSet.empty[Any])
-          val fieldType = t.schema.fields.map(f => f.id -> f.tpe).toMap
-          val fieldIds = t.schema.fields.map(_.id)
-          liveFiles.foreach { df0 =>
-            val idx = idxBySpec.getOrElse(df0.specId, Map.empty)
-            fieldIds.foreach { fid =>
-              if (candidates.contains(fid)) idx.get(fid) match {
-                case Some(i) if i < df0.partition.length =>
-                  candidates(fid) += graft.core.meta.SingleValue
-                    .adapt(fieldType(fid), df0.partition(i))
-                case _ => candidates.remove(fid) // not identity everywhere
-              }
-            }
-          }
-          candidates.map { case (fid, vs) => fid -> vs.toSeq }.toMap
-        }
-      val df = byFmt.map { case (f, fs) =>
-        if (f == "avro") GraftAvro.readToDf(spark, fs.map(_.path), schema, withPos = false)
-        else if (f == "parquet-im")
-          // column-mapped imports: physical names differ, ids match
-          GraftProcedures.idParquetToDf(spark, fs.map(_.path), schema,
-            t.meta, withPos = false)
-        else {
-          // name-mapped imports carry no parquet field ids: reading them
-          // with a field-id-annotated schema fails outright, so strip
-          // the ids and resolve by name (the import contract)
-          val readSchema =
-            if (f == "parquet-nm" || f == "orc-nm")
-              StructType(schema.fields.map(_.copy(
-                metadata = org.apache.spark.sql.types.Metadata.empty)))
-            else schema
-          val rdr = spark.read.schema(readSchema)
-            .options(GraftParquetCrypto.readOptions(t.meta))
-          if (f == "orc" || f == "orc-nm") rdr.orc(fs.map(_.path): _*)
-          else rdr.parquet(fs.map(_.path): _*)
-        }
-      }.reduce(_ union _)
       val fields = t.schema.fields
         .filter(f => f.tpe.isPrimitive && f.tpe != graft.core.types.GVariant)
       if (fields.nonEmpty) {
@@ -1485,29 +1221,16 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
         // ComputeTableStatsSparkAction + NDVSketchUtil → DataSketches;
         // graft.functions.ThetaNdvAgg): map-side bounded KMV
         // accumulators, merged on the driver — the sketch bytes are what
-        // genuine Iceberg readers consume, the estimate feeds CBO props
+        // genuine Iceberg readers consume, the estimate feeds CBO props.
+        // The live rows of the current snapshot come from the table's own
+        // scan: deletes masked, imported files' identity-partition
+        // columns filled from their partition tuples.
         val cols = fields.map(_.name)
         import org.apache.spark.sql.functions.col
-        val scanFields = fields.filterNot(f => metadataNdvFields.contains(f.id))
-        val scanned: Map[Int, Array[Byte]] =
-          if (scanFields.isEmpty) Map.empty
-          else {
-            val r = df.select(scanFields.map(f =>
-              graft.functions.ThetaFunctions
-                .thetaNdvSketch(col(f.name), f.tpe).as(f.name)): _*).collect()(0)
-            scanFields.zipWithIndex
-              .map { case (f, i) => f.id -> r.getAs[Array[Byte]](i) }.toMap
-          }
-        val sketches = fields.map { f =>
-          scanned.getOrElse(f.id, {
-            // metadata path: sketch the distinct live partition values
-            val kmv = new graft.core.meta.ThetaKmv()
-            metadataNdvFields(f.id).foreach(v =>
-              graft.core.meta.SingleValue.toBytes(f.tpe, v)
-                .foreach(kmv.updateValue))
-            kmv.toCompactBytes
-          })
-        }
+        val r = GraftSparkTable.readTasks(t, liveTasks).select(fields.map(f =>
+          graft.functions.ThetaFunctions
+            .thetaNdvSketch(col(f.name), f.tpe).as(f.name)): _*).collect()(0)
+        val sketches = fields.indices.map(r.getAs[Array[Byte]](_))
         val ndvs = sketches.map(s => Puffin.thetaEstimate(s).getOrElse(0L))
         // NDVs both as properties (CBO's SupportsReportStatistics source)
         // and as a Puffin statistics file recorded in table metadata
@@ -1542,7 +1265,8 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
                   b.snapshotId, b.sequenceNumber, b.fields, b.properties))))
         }
         replaced.filterNot(_ == puffinPath)
-          .foreach(p => try graft.core.meta.GraftIO.delete(p) catch { case _: Throwable => () })
+          .foreach(p => try graft.core.meta.GraftIO.delete(p)
+            catch { case scala.util.control.NonFatal(_) => () })
       }
       out(StructType(Seq(StructField("columns_analyzed", IntegerType))), row(fields.size))
 
@@ -2904,10 +2628,10 @@ object ZOrder {
 }
 
 /** Compaction (reference RewriteDataFilesSparkAction + runners): bin-pack,
-  * sort, or z-order file groups per partition, rewrite with Spark, commit
-  * one atomic replace. Each group is an independent Spark job — at cluster
-  * scale groups run through a job queue; partial-progress commits are a
-  * follow-up. */
+  * sort, or z-order file groups per partition, commit one atomic replace
+  * (or one per batch under partial progress). Each group is read through
+  * the table's scan over its planned tasks and written by the batch
+  * write's factory — one Spark job per group. */
 object RewriteDataFiles {
   import GraftProcedures._
 
@@ -2989,13 +2713,12 @@ object RewriteDataFiles {
       rewriteAll: Boolean = false,
       minFileSizeBytes: Long = -1L,
       maxFileSizeBytes: Long = -1L): util.Iterator[Scan] = {
-    val spark = SparkSession.active
     val schemaWithIds = graft.core.types.SparkTypes.toSparkSchema(t.schema)
-    // the group reads below go through DataFrameReader with the CURRENT
-    // table schema. Columns renamed since a file was written resolve by
-    // NAME through per-write-schema translated read schemas (below) —
-    // never via the session-wide parquet field-id conf, which would leak
-    // to unrelated queries and break field-id-less imported files.
+    // each group is read through the table's own scan over its planned
+    // tasks (GraftSparkTable.readTasks): the scan masks position, DV and
+    // equality deletes, resolves columns by field id or write-time name,
+    // fills identity-partition columns of imports and serves the lineage
+    // columns. Each group is written by the table's batch-write factory.
     val scan = t.newScan()
     // `where` restricts the rewrite to files that MAY match (inclusive
     // metadata pruning — file selection, not row filtering)
@@ -3018,7 +2741,10 @@ object RewriteDataFiles {
         scannedSnapshotId.foreach(s2.useSnapshot)
         s2.planFiles()
       }
-    // heterogeneous equality-key sets can't share one anti-join
+    // equality deletes under different identifier-field sets: the scan
+    // masks each delete file by its own keys, but a delete file written
+    // before an identifier change lacks the columns that change made
+    // required, and the scan's full-schema read of it fails
     val eqIdSets = tasks.flatMap(_.deletes)
       .filter(_.content == FileContent.EqualityDeletes).map(_.equalityIds.toSet).distinct
     require(eqIdSets.size <= 1,
@@ -3146,211 +2872,32 @@ object RewriteDataFiles {
     }
 
     groupSeq.foreach { case ((specId, partition), ts) => try {
-      // group-local staging: a group that fails midway must contribute
-      // nothing to the batch commit (its files become orphans)
-      val groupNew = Seq.newBuilder[DataFile]
       val paths = ts.map(_.file.path)
       val totalBytes = ts.map(_.file.fileSizeBytes).sum
       val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetSize).toInt)
-      // apply pending deletes with anti-joins on the file metadata columns
-      // — position deletes by (path, row index), equality deletes by
-      // (path, identifier key) since applicability is per data file
-      // (delete sequence > file sequence) — deletes disappear in the
-      // rewrite output
-      val posFiles = ts.flatMap(_.deletes)
-        .filter(_.content == FileContent.PositionDeletes).distinct
-      val eqByFile = ts.flatMap(t => t.deletes
-          .filter(_.content == FileContent.EqualityDeletes).map(d => (d, t.file.path)))
-        .groupBy(_._1).map { case (d, ps) => (d, ps.map(_._2).distinct) }
-      val anyDeletes = posFiles.nonEmpty || eqByFile.nonEmpty
-      // row lineage: rewritten rows keep their ORIGINAL _row_id and
-      // last-updated sequence, materialized as real columns in the new
-      // files (v3 lineage; reference ExtractRowLineage). Sources: a
-      // materialized column from an earlier rewrite wins, else the file's
-      // firstRowId + row position.
-      val lineageFields = GraftSparkTable.lineageReadFields
-      val readSchema = org.apache.spark.sql.types.StructType(
-        schemaWithIds.fields ++ lineageFields)
-      // per-format reads with __f/__p path+position columns (file-source
-      // formats via _metadata, avro via the reader itself). ALL name-
-      // resolved reads (ORC always; parquet resolves by name here too —
-      // no session field-id conf) group files by their WRITE-TIME schema
-      // and read under those names, then restore the current ones
-      // positionally; a file's names equal its write schema's names by
-      // construction (our writers and add_files imports alike).
-      def histSchema(schemaId: Int): Option[org.apache.spark.sql.types.StructType] =
-        if (schemaId < 0 || schemaId == t.meta.currentSchemaId) None
-        else t.meta.schemas.find(_.schemaId == schemaId)
-          .filter(GraftSparkTable.namesDiffer(t.meta.schema, _))
-          .map(h => GraftSparkTable.translateTopNames(readSchema, t.meta.schema, h))
       // write schema UNKNOWN (pre-write-schema-id manifest entry whose
       // adding snapshot was expired) + a rename anywhere in schema
-      // history: a name-resolved read could silently null a since-renamed
-      // column and the rewrite would commit that corruption permanently.
-      // Parquet files our writers produced carry field ids, so they fall
-      // back to an id-resolved read; name-only formats fail loudly.
-      def unknownUnsafe(schemaId: Int): Boolean =
-        schemaId < 0 && t.meta.schemas.exists(h =>
-          h.schemaId != t.meta.currentSchemaId &&
-            GraftSparkTable.namesDiffer(t.meta.schema, h))
-      val raw = ts.groupBy(ft => (ft.file.format, ft.writeSchemaId))
-        .map { case ((f, schemaId), fts) =>
-        import org.apache.spark.sql.functions.col
-        if (f == "avro")
-          GraftAvro.readToDf(spark, fts.map(_.file.path), readSchema, withPos = true)
-        else if (f == "orc" || f == "orc-nm") {
-          if (unknownUnsafe(schemaId))
-            throw new IllegalStateException(
-              "rewrite_data_files: ORC files with unknown write schema in a " +
-              "table whose schema history renames columns cannot be read " +
-              s"safely by name; skipping rewrite of: ${fts.map(_.file.path).mkString(", ")}")
-          // ORC: Spark's _metadata exposes no row_index — read each file
-          // whole on an executor (like the scan's position path),
-          // emitting positions from the row iterator
-          orcReadToDf(spark, fts.map(_.file.path), readSchema,
-            histSchema(schemaId).getOrElse(readSchema))
-        } else if (f == "parquet-im" ||
-            (f == "parquet" && unknownUnsafe(schemaId))) {
-          // id-resolved read: our parquet files always stamp field ids,
-          // column-mapped imports carry the table's ids by construction,
-          // and readSchema keeps its parquet.field.id metadata
-          GraftProcedures.idParquetToDf(spark, fts.map(_.file.path),
-            readSchema, t.meta, withPos = true)
-        } else {
-          if (unknownUnsafe(schemaId)) // parquet-nm: no ids to fall back on
-            throw new IllegalStateException(
-              "rewrite_data_files: name-mapped parquet files with unknown " +
-              "write schema in a table whose schema history renames columns " +
-              "cannot be read safely by name; skipping rewrite of: " +
-              fts.map(_.file.path).mkString(", "))
-          val rdrSchema = histSchema(schemaId).getOrElse(readSchema)
-          // strip field ids: parquet-nm imports have none, and name
-          // resolution is what the write-schema grouping relies on
-          val rdr = spark.read.schema(GraftSparkTable.stripFieldIds(rdrSchema))
-            .options(GraftParquetCrypto.readOptions(t.meta))
-          val base0 = rdr.parquet(fts.map(_.file.path): _*)
-          val base =
-            if (rdrSchema eq readSchema) base0
-            else base0.toDF(readSchema.fieldNames.toIndexedSeq: _*)
-          base.select(col("*"),
-            col("_metadata.file_path").as("__f"),
-            col("_metadata.row_index").as("__p"))
-        }
-      }.reduce(_ union _)
-      // identity-partition constants: imported files (Delta/hive layout)
-      // physically LACK their identity-partition source columns — read
-      // raw they come back null, and the rewrite would bake that null
-      // into the new files PERMANENTLY. Every file in this group shares
-      // one partition tuple, so the constant is a literal; graft-written
-      // files carry the column with exactly this value, so the override
-      // is a no-op for them (same rule as the scan's identityFill).
-      val identityFilled = {
-        val specOf = t.meta.specs.find(_.specId == specId)
-        val consts = specOf.toSeq.flatMap(_.fields.zipWithIndex.collect {
-          case (pf, i) if pf.transform == graft.core.transform.IdentityT &&
-              i < partition.length =>
-            t.meta.schema.byId.get(pf.sourceId).map(src => (src, partition(i)))
-        }.flatten)
-        val nameBased = ts.exists(_.file.format != "parquet")
-        if (consts.isEmpty || !nameBased) raw
-        else consts.foldLeft(raw) { case (df, (src, v)) =>
-          if (!readSchema.fieldNames.contains(src.name)) df
-          else {
-            val dt = graft.core.types.SparkTypes.toSpark(src.tpe)
-            df.withColumn(src.name, org.apache.spark.sql.GraftSqlBridge.column(
-              org.apache.spark.sql.catalyst.expressions.Literal(
-                GraftSparkTable.partitionValueToInternal(v), dt)))
-          }
-        }
-      }
-      val rawRestored = identityFilled
-        // restore the field-id metadata the name-based reads stripped:
-        // the staging write takes parquet field ids from the DataFrame
-        // schema, and files written without them read as null in the
-        // id-resolving scan
-        .select(readSchema.fields.toSeq.map(f =>
-          org.apache.spark.sql.functions.col(f.name).as(f.name, f.metadata)) ++
-          Seq(org.apache.spark.sql.functions.col("__f"),
-            org.apache.spark.sql.functions.col("__p")): _*)
-      val df1pre =
-        if (!anyDeletes) rawRestored
-        else {
-          import org.apache.spark.sql.functions.{array => sarray, col, concat, explode, lit}
-          val withPos = rawRestored
-          val afterPos =
-            if (posFiles.isEmpty) withPos
-            else {
-              // scheme-stripped exact match, with the relocation-stable
-              // suffix only as an unambiguous fallback (the stored path
-              // is the writer-time absolute path)
-              val dels = GraftProcedures.deleteRowsDf(spark, posFiles,
-                GraftParquetCrypto.readOptions(t.meta))
-                .select(col("file_path").as("__df"), col("pos").as("__dp"),
-                  col("__src"))
-              GraftProcedures.joinWithDeletePaths(withPos, "__f", dels, "__df",
-                "__src", "left_anti", (t, d) => t("__p") === d("__dp"),
-                antiKeys = Seq("__f", "__p"))
-            }
-          val afterEq =
-            if (eqByFile.isEmpty) afterPos
-            else {
-              val fields = t.meta.schema.fields
-              val sparkFull = graft.core.types.SparkTypes.toSparkSchema(t.meta.schema)
-              // one anti-join per distinct equality-key set: delete files
-              // written under different identifier-field configurations
-              // must not be squeezed into one shared key schema
-              eqByFile.groupBy(_._1.equalityIds.toSeq).foldLeft(afterPos) {
-                case (acc, (eqIds, group)) =>
-                  val keyNames = eqIds
-                    .flatMap(id => fields.find(_.id == id).map(_.name))
-                  // id-annotated key schema + field-id resolution: the
-                  // delete file stores keys under their WRITE-TIME names
-                  // — a since-renamed key column only binds through
-                  // parquet field ids, which our delete writers always
-                  // stamp. A plain name-resolved spark.read would see
-                  // all-null keys after a rename, and the null-safe
-                  // anti-join would resurrect every deleted row into the
-                  // permanently compacted output.
-                  val keySchema = org.apache.spark.sql.types.StructType(
-                    sparkFull.fields.filter(f => keyNames.contains(f.name)))
-                  val delKeys = group.map { case (d, applies) =>
-                    GraftProcedures.idParquetToDf(spark, Seq(d.path),
-                        keySchema, t.meta, withPos = false)
-                      .select(keyNames.map(col): _*)
-                      .toDF(keyNames.map(n => s"__ek_$n"): _*)
-                      .withColumn("__ef", explode(sarray(applies.map(lit): _*)))
-                      .withColumn("__src", lit(d.path))
-                  }.reduce(_ unionByName _)
-                  GraftProcedures.joinWithDeletePaths(acc, "__f", delKeys,
-                    "__ef", "__src", "left_anti",
-                    (t, d) => keyNames.map(n => t(n) <=> d(s"__ek_$n"))
-                      .reduce(_ && _),
-                    antiKeys = Seq("__f", "__p"))
-              }
-            }
-          afterEq
-        }
-      // finalize lineage columns: materialized value wins, else inherit
-      // firstRowId + position; attach the reserved field ids so the new
-      // parquet files persist them id-addressably
-      val df1 = {
-        import org.apache.spark.sql.functions.{coalesce, col, element_at, typedLit}
-        def variants(p: String) = Seq("file:" + p, "file://" + p, p)
-        val fm = ts.flatMap(t0 => t0.file.firstRowId.toSeq.flatMap(fr =>
-          variants(t0.file.path).map(v => v -> fr))).toMap
-        val sm = ts.flatMap(t0 =>
-          variants(t0.file.path).map(v => v -> t0.dataSequenceNumber)).toMap
-        val rowIdExpr = coalesce(col(lineageFields.head.name),
-          if (fm.isEmpty) typedLit[Option[Long]](None)
-          else element_at(typedLit(fm), col("__f")) + col("__p"))
-        val seqExpr = coalesce(col(lineageFields(1).name),
-          if (sm.isEmpty) typedLit[Option[Long]](None)
-          else element_at(typedLit(sm), col("__f")))
-        df1pre.select(
-          schemaWithIds.fields.map(f => col(f.name)) ++ Seq(
-            rowIdExpr.as(lineageFields.head.name, lineageFields.head.metadata),
-            seqExpr.as(lineageFields(1).name, lineageFields(1).metadata)): _*)
-      }
+      // history: the scan reads ORC and name-mapped parquet by CURRENT
+      // names, so a since-renamed column would read null and the rewrite
+      // would commit that corruption permanently. Parquet files carry
+      // field ids and read safely; name-only formats fail loudly.
+      val unsafe = ts.filter(ft => ft.writeSchemaId < 0 &&
+        Set("orc", "orc-nm", "parquet-nm")(ft.file.format) &&
+        t.meta.schemas.exists(h => h.schemaId != t.meta.currentSchemaId &&
+          GraftSparkTable.namesDiffer(t.meta.schema, h)))
+      if (unsafe.nonEmpty)
+        throw new IllegalStateException(
+          "rewrite_data_files: ORC or name-mapped parquet files with unknown " +
+          "write schema in a table whose schema history renames columns " +
+          "cannot be read safely by name; skipping rewrite of: " +
+          unsafe.map(_.file.path).mkString(", "))
+      // row lineage: rewritten rows keep their ORIGINAL _row_id and
+      // last-updated sequence, materialized as real columns in the new
+      // files (v3 lineage; reference ExtractRowLineage)
+      val df1 = GraftSparkTable.readTasks(t, ts).select(
+        (schemaWithIds.fieldNames.toSeq ++
+          Seq(GraftSparkTable.MetaRowIdCol, GraftSparkTable.MetaSeqCol))
+          .map(org.apache.spark.sql.functions.col): _*)
       import org.apache.spark.sql.functions.{array, col => fcol, xxhash64}
       val df =
         if (bySort) df1.repartitionByRange(nOut, sortCols.toIndexedSeq: _*)
@@ -3370,57 +2917,20 @@ object RewriteDataFiles {
         }
         else if (nOut == 1) df1.coalesce(1)
         else df1.repartition(nOut)
-      spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-      // rewrite in the table's current data format
-      val outFmt = t.meta.properties.getOrElse("write.format.default", "parquet")
-      val part = t.meta.specById(specId).fields.zip(partition)
-        .map { case (pf, v) => s"${pf.name}=$v" }.mkString("/")
-      val dataDir = if (part.isEmpty) s"${t.location}/data" else s"${t.location}/data/$part"
-      java.nio.file.Files.createDirectories(GraftIO.toPath(dataDir))
-      if (outFmt == "avro") {
-        // executor-side avro write straight to the data dir: each task
-        // writes one file and returns its descriptor fields (write-time
-        // stats — avro has no footer metrics to re-read). df.schema, not
-        // the table schema: the rewrite carries materialized lineage cols.
-        val sparkSchema = df.schema
-        val gJson = graft.core.meta.MetaJson.writeSchema(t.meta.schema).toString
-        val written = df.queryExecution.toRdd.mapPartitions { rows =>
-          if (rows.isEmpty) Iterator.empty
-          else {
-            val g = graft.core.meta.MetaJson.readSchema(
-              graft.core.meta.MetaJson.mapper.readTree(gJson))
-            val target = s"$dataDir/rewrite-${java.util.UUID.randomUUID}.avro"
-            val (n, stats) = GraftAvro.writeFile(target, sparkSchema, g, rows)
-            Iterator.single((target, n, GraftIO.size(target), stats))
-          }
-        }.collect()
-        written.foreach { case (target, rows, size, stats) =>
-          groupNew += DataFile(target, outFmt, specId, partition, rows, size,
-            stats, sortOrderId = rwSortOrderId)
-        }
-      } else {
-      val staging = java.nio.file.Files.createTempDirectory("graft-rewrite").toString
-      val cryptoOpts = GraftParquetCrypto.readOptions(t.meta)
-      if (outFmt == "orc") df.write.mode("overwrite").orc(staging)
-      else df.write.options(cryptoOpts).mode("overwrite").parquet(staging)
-      val conf = spark.sessionState.newHadoopConf()
-      cryptoOpts.foreach { case (k, v) => conf.set(k, v) }
-      walkFiles(staging).filter(_.endsWith(s".$outFmt")).foreach { sf =>
-        val target = s"$dataDir/rewrite-${java.util.UUID.randomUUID}.$outFmt"
-        java.nio.file.Files.move(GraftIO.toPath(sf), GraftIO.toPath(target))
-        val sparkSchema = graft.core.types.SparkTypes.toSparkSchema(t.meta.schema)
-        val (size, stats, splitOffs) =
-          if (outFmt == "orc")
-            FooterStats.readOrc(target, conf, t.meta.schema, sparkSchema)
-          else FooterStats.read(target, conf, t.meta.schema)
-        val rows =
-          if (outFmt == "orc") orcRowCount(target, conf)
-          else readRowCount(target, conf)
-        groupNew += DataFile(target, outFmt, specId, partition, rows, size, stats,
-          splitOffsets = splitOffs, sortOrderId = rwSortOrderId)
-      }
-      }
-      val gf = groupNew.result()
+      // the batch write's own factory, for this group's spec: each task
+      // writes one file in the table's format and write properties
+      val factory = GraftBatchWrite.writerFactory(t, schemaWithIds,
+        t.meta.specById(specId), lineage = true, sortOrderId = rwSortOrderId)
+      val gf = df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+        val w = factory.createWriter(pid,
+          org.apache.spark.TaskContext.get().taskAttemptId())
+        try {
+          rows.foreach(w.write)
+          Iterator(w.commit().asInstanceOf[GraftCommitMessage].files)
+        } catch {
+          case e: Throwable => w.abort(); throw e
+        } finally w.close()
+      }.collect().toSeq.flatten
       pendingRewritten += ts.size
       pendingAdded += gf.size
       pendingBytes += totalBytes
@@ -3439,22 +2949,5 @@ object RewriteDataFiles {
     commitPending()
     GraftProcedures.out(resultSchema,
       GraftProcedures.row(rewritten, added, bytes, failedFiles))
-  }
-
-  private def orcRowCount(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Long = {
-    val hPath = new org.apache.hadoop.fs.Path("file://" + GraftIO.toPath(path).toString)
-    val r = org.apache.orc.OrcFile.createReader(hPath,
-      org.apache.orc.OrcFile.readerOptions(conf))
-    try r.getNumberOfRows finally r.close()
-  }
-
-  private def readRowCount(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Long = {
-    val hPath = new org.apache.hadoop.fs.Path("file://" + GraftIO.toPath(path).toString)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hPath, conf),
-      org.apache.parquet.HadoopReadOptions.builder(conf, hPath).build())
-    try r.getRecordCount finally r.close()
   }
 }

@@ -32,7 +32,10 @@ class GraftSparkTable(val table: GTable, fullName: String,
     snapshotId: Option[Long] = None,
     // `t.branch_x` / `t.tag_x` identifier pin: (ref name, isTag). Branch
     // pins route reads AND writes to the branch; tag pins are read-only.
-    refPin: Option[(String, Boolean)] = None)
+    refPin: Option[(String, Boolean)] = None,
+    // planned tasks the scan reads instead of planning its own
+    // (maintenance reads of a chosen file set; see readTasks)
+    stagedTasks: Option[Seq[FileScanTask]] = None)
   extends Table with SupportsRead with SupportsWrite with SupportsDeleteV2
   with SupportsRowLevelOperations with SupportsMetadataColumns {
 
@@ -185,7 +188,8 @@ class GraftSparkTable(val table: GTable, fullName: String,
       splitOverride = splitOverride,
       vecOverride = Option(options.get("vectorization-enabled")).map(_.toBoolean),
       aggPushEnabled =
-        Option(options.get("aggregate-push-down-enabled")).forall(_.toBoolean))
+        Option(options.get("aggregate-push-down-enabled")).forall(_.toBoolean),
+      stagedTasks = stagedTasks)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -258,7 +262,7 @@ object GraftSparkTable {
         lazy val blobs: Seq[graft.core.meta.Puffin.Blob] =
           try graft.core.meta.Puffin.read(f.path,
             graft.core.meta.TableCrypto.resolve(meta))
-          catch { case _: Throwable => Nil }
+          catch { case scala.util.control.NonFatal(_) => Nil }
         f.blobMetadata.flatMap { bm =>
           bm.fields match {
             case Seq(id) =>
@@ -271,6 +275,19 @@ object GraftSparkTable {
         }.toMap
     }
   }
+
+  /** Rows of the given planned tasks, read through the table's own scan:
+    * position, DV and equality deletes masked, columns resolved by field
+    * id or write-time name, identity-partition columns filled for
+    * imports, and the `_row_id` / `_last_updated_sequence_number`
+    * metadata columns selectable (reference SparkStagedScan over a
+    * ScanTaskSetManager task set). Maintenance procedures read through
+    * this, never through a reader of their own. */
+  private[spark] def readTasks(t: GTable, tasks: Seq[FileScanTask])
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.ofRows(SparkSession.active,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new GraftSparkTable(t, t.location, stagedTasks = Some(tasks)), None, None))
 
   /** drop ONLY the parquet field ids for name-based readers (ORC,
     * name-mapped imports); EXISTS_DEFAULT etc. must survive or v3
@@ -645,11 +662,9 @@ object GraftSparkTable {
       format: String = "parquet")
 
   /** Serializable slice of a FileScanTask shipped to executors. */
-  /** internal partition-tuple value → Catalyst internal value (ONE shared
-    * mapping for the scan's identity fill and the rewrite's constant
-    * materialization — divergent copies would let compacted files bake
-    * different values than the scan serves) */
-  def partitionValueToInternal(v: Any): Any = v match {
+  /** internal partition-tuple value → Catalyst internal value, for the
+    * scan's identity fill (which compaction also reads through) */
+  private def partitionValueToInternal(v: Any): Any = v match {
     case null                    => null
     case s: String               =>
       org.apache.spark.unsafe.types.UTF8String.fromString(s)
@@ -735,7 +750,8 @@ object GraftSparkTable {
       streamPollMs: Option[Long] = None,
       splitOverride: (Option[Long], Option[Long], Option[Int]) = (None, None, None),
       vecOverride: Option[Boolean] = None,
-      aggPushEnabled: Boolean = true)
+      aggPushEnabled: Boolean = true,
+      stagedTasks: Option[Seq[FileScanTask]] = None)
     extends ScanBuilder with SupportsPushDownV2Filters
     with SupportsPushDownRequiredColumns with SupportsPushDownLimit
     with SupportsPushDownAggregates {
@@ -778,7 +794,7 @@ object GraftSparkTable {
       import org.apache.spark.sql.connector.expressions.aggregate._
       import org.apache.spark.sql.types.{LongType, StructField}
       if (expr != TrueE || agg.groupByExpressions().nonEmpty) return None
-      val tasks =
+      val tasks = stagedTasks.getOrElse {
         try {
           val s = table.newScan()
           snapshotId.foreach(s.useSnapshot)
@@ -788,6 +804,7 @@ object GraftSparkTable {
             WapBranch.forRead(table).foreach(s.useRef)
           s.planFiles()
         } catch { case _: Throwable => return None }
+      }
       if (tasks.exists(_.deletes.nonEmpty)) return None
 
       def fieldOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[GField] =
@@ -922,7 +939,7 @@ object GraftSparkTable {
         val scan = new GraftScan(table, expr, required, limit, snapshotId, branch,
           asOfTs, ignoreResiduals, streamMaxFiles, incremental, streamMaxRecords,
           streamFromTs, streamSkip, streamAsync, streamPollMs, splitOverride,
-          vecOverride)
+          vecOverride, stagedTasks)
         onBuild(scan)
         scan
     }
@@ -986,7 +1003,8 @@ object GraftSparkTable {
       streamAsync: Boolean = false,
       streamPollMs: Option[Long] = None,
       splitOverride: (Option[Long], Option[Long], Option[Int]) = (None, None, None),
-      vecOverride: Option[Boolean] = None)
+      vecOverride: Option[Boolean] = None,
+      stagedTasks: Option[Seq[FileScanTask]] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeV2Filtering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
@@ -1097,6 +1115,7 @@ object GraftSparkTable {
     }
 
     private def tasks(): Seq[FileScanTask] = {
+      if (cachedTasks == null && stagedTasks.isDefined) cachedTasks = stagedTasks.get
       if (cachedTasks == null && incremental.isDefined) {
         val (s, e) = incremental.get
         cachedTasks = incrementalTasks(s, e)

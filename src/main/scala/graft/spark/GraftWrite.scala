@@ -314,12 +314,76 @@ final class GraftBatchWrite(table: GTable, writeSchema: StructType, mode: WriteM
     codecLevel: Option[String] = None)
   extends BatchWrite {
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+  // copy-on-write rewrites materialize row lineage: the written files
+  // carry _row_id/_last_updated_sequence_number columns under the
+  // reserved field ids, filled from Spark's metadata projection
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    GraftBatchWrite.writerFactory(table, writeSchema, table.spec,
+      lineage = mode.isInstanceOf[CopyOnWriteMode], fileGBase, formatOverride,
+      codecOverride, codecLevel, stampSortOrderId)
+
+  /** sort_order_id stamped on written data files (reference
+    * SparkFileWriterFactory dataSortOrderId): only when the table's
+    * default sort order is registered AND the write.sort-order property
+    * the write path actually applies still matches it field-for-field —
+    * a manually drifted property must not stamp a stale id. */
+  private def stampSortOrderId: Option[Int] = {
+    val m = table.meta
+    SortSpecs.registeredOrderId(m,
+        m.properties.getOrElse("write.sort-order", ""))
+      .filter(_ == m.defaultSortOrderId)
+  }
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val files = messages.flatMap(_.asInstanceOf[GraftCommitMessage].files).toSeq
+    mode match {
+      case AppendMode =>
+        SnapshotProps(WapBranch.stage(table,
+          table.newAppend().appendFiles(files).toBranch(branch)),
+          snapshotProps).commit()
+      case OverwriteMode(filter) =>
+        SnapshotProps(WapBranch.stage(table,
+          table.newOverwrite().overwriteByRowFilter(filter).addFiles(files)
+            .toBranch(branch)), snapshotProps).commit()
+      case DynamicOverwriteMode =>
+        SnapshotProps(WapBranch.stage(table,
+          table.newOverwrite()
+            .replacePartitions(files.map(_.partition).toSet)
+            .addFiles(files).toBranch(branch)), snapshotProps).commit()
+      case CopyOnWriteMode(replaced, scannedSnap, conflictFilter) =>
+        val paths = replaced()
+        if (paths.nonEmpty || files.nonEmpty) {
+          val ow = table.newOverwrite().deleteFiles(paths).addFiles(files)
+            .toBranch(branch)
+          // fail if a delete/overwrite/replace landed after the snapshot
+          // this rewrite read; under serializable isolation, also fail on
+          // concurrently appended rows matching the operation filter
+          scannedSnap().foreach(ow.validateFromSnapshot)
+          conflictFilter().foreach(ow.failOnNewMatchingData)
+          SnapshotProps(WapBranch.stage(table, ow), snapshotProps).commit()
+        }
+    }
+  }
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    messages.filter(_ != null).flatMap(_.asInstanceOf[GraftCommitMessage].files)
+      .foreach(f => GraftIO.delete(f.path))
+}
+
+object GraftBatchWrite {
+  /** The data-file writer factory of every batch write, for files of
+    * partition spec `spec`: format, codec, row-group and page size, bloom
+    * filters, INT64 timestamps, field ids, shredded-variant columns and
+    * the encrypted-table format check. `lineage` appends the materialized
+    * `_row_id`/`_last_updated_sequence_number` columns (copy-on-write
+    * rewrites, compaction); `sortOrderId` is stamped on every file. */
+  def writerFactory(table: GTable, writeSchema: StructType, spec: PartitionSpec,
+      lineage: Boolean, fileGBase: GSchema = null,
+      formatOverride: Option[String] = None,
+      codecOverride: Option[String] = None,
+      codecLevel: Option[String] = None,
+      sortOrderId: Option[Int] = None): GraftWriterFactory = {
     val spark = SparkSession.active
-    // copy-on-write rewrites materialize row lineage: the written files
-    // carry _row_id/_last_updated_sequence_number columns under the
-    // reserved field ids, filled from Spark's metadata projection
-    val isCow = mode.isInstanceOf[CopyOnWriteMode]
     // read-side shredding: materialize each configured variant sub-path
     // as a typed file column (reserved id) after the data (+lineage)
     // fields — readers serve variant_get from it without touching the
@@ -328,9 +392,9 @@ final class GraftBatchWrite(table: GTable, writeSchema: StructType, mode: WriteM
       .shredSpecsOf(table.meta.properties, table.schema)
       .filter(sp => writeSchema.fieldNames.contains(sp.parent))
     val lineageFields =
-      if (isCow) GraftSparkTable.lineageReadFields else Nil
+      if (lineage) GraftSparkTable.lineageReadFields else Nil
     val lineageG =
-      if (isCow) GraftSparkTable.lineageGFields else Nil
+      if (lineage) GraftSparkTable.lineageGFields else Nil
     val fileSchema = StructType(writeSchema.fields ++ lineageFields ++
       shredSpecs.map(GraftSparkTable.shredMatField))
     // by-name (accept-any-schema / merge-schema) writes arrive in the
@@ -338,7 +402,7 @@ final class GraftBatchWrite(table: GTable, writeSchema: StructType, mode: WriteM
     // the table's field ids (identity for exact-shape writers)
     val baseG: GSchema = if (fileGBase == null) table.schema else fileGBase
     val fileGSchema =
-      if (isCow || shredSpecs.nonEmpty || (baseG ne table.schema))
+      if (lineage || shredSpecs.nonEmpty || (baseG ne table.schema))
         baseG.copy(struct = graft.core.types.GStruct(
           baseG.fields ++ lineageG ++
             shredSpecs.map(GraftSparkTable.shredMatGField)))
@@ -447,57 +511,10 @@ final class GraftBatchWrite(table: GTable, writeSchema: StructType, mode: WriteM
       table.location,
       fileSchema.json,
       metaJson.writeSchema(fileGSchema).toString,
-      metaJson.writeSpec(table.spec).toString,
-      owf, confMap, dataFormat, lineage = isCow, shredSpecs = shredSpecs,
-      sortOrderId = stampSortOrderId)
+      metaJson.writeSpec(spec).toString,
+      owf, confMap, dataFormat, lineage = lineage, shredSpecs = shredSpecs,
+      sortOrderId = sortOrderId)
   }
-
-  /** sort_order_id stamped on written data files (reference
-    * SparkFileWriterFactory dataSortOrderId): only when the table's
-    * default sort order is registered AND the write.sort-order property
-    * the write path actually applies still matches it field-for-field —
-    * a manually drifted property must not stamp a stale id. */
-  private def stampSortOrderId: Option[Int] = {
-    val m = table.meta
-    SortSpecs.registeredOrderId(m,
-        m.properties.getOrElse("write.sort-order", ""))
-      .filter(_ == m.defaultSortOrderId)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.flatMap(_.asInstanceOf[GraftCommitMessage].files).toSeq
-    mode match {
-      case AppendMode =>
-        SnapshotProps(WapBranch.stage(table,
-          table.newAppend().appendFiles(files).toBranch(branch)),
-          snapshotProps).commit()
-      case OverwriteMode(filter) =>
-        SnapshotProps(WapBranch.stage(table,
-          table.newOverwrite().overwriteByRowFilter(filter).addFiles(files)
-            .toBranch(branch)), snapshotProps).commit()
-      case DynamicOverwriteMode =>
-        SnapshotProps(WapBranch.stage(table,
-          table.newOverwrite()
-            .replacePartitions(files.map(_.partition).toSet)
-            .addFiles(files).toBranch(branch)), snapshotProps).commit()
-      case CopyOnWriteMode(replaced, scannedSnap, conflictFilter) =>
-        val paths = replaced()
-        if (paths.nonEmpty || files.nonEmpty) {
-          val ow = table.newOverwrite().deleteFiles(paths).addFiles(files)
-            .toBranch(branch)
-          // fail if a delete/overwrite/replace landed after the snapshot
-          // this rewrite read; under serializable isolation, also fail on
-          // concurrently appended rows matching the operation filter
-          scannedSnap().foreach(ow.validateFromSnapshot)
-          conflictFilter().foreach(ow.failOnNewMatchingData)
-          SnapshotProps(WapBranch.stage(table, ow), snapshotProps).commit()
-        }
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.filter(_ != null).flatMap(_.asInstanceOf[GraftCommitMessage].files)
-      .foreach(f => GraftIO.delete(f.path))
 }
 
 final case class GraftCommitMessage(files: Seq[DataFile]) extends WriterCommitMessage

@@ -138,6 +138,51 @@ class MinHashDigestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.toSeq === Seq((2L, 3L, 3L, 3L)))
   }
 
+  test("a hot LSH band's self-join: AQE splits the skewed partition on both sides") {
+    // p03's candidate self-join at its at-scale form: a shuffle join
+    // (broadcast off, no local SMJ->SHJ rewrite) where a boilerplate
+    // cluster shares one band key. The skew thresholds are scaled down
+    // to test bytes (defaults 256 MB / factor 5). Its own session: none
+    // of these confs reach the other tests.
+    val s = spark.newSession()
+    Seq("spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "0",
+      "spark.sql.join.preferSortMergeJoin" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64k",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "5",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32k",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+      .foreach { case (k, v) => s.conf.set(k, v) }
+    // (doc_id, bkey) plus an incompressible ~128-byte payload standing in
+    // for the digest sets (skew statistics are compressed bytes): 5000
+    // docs spread over 100k band keys, and 2000 docs sharing band -1
+    def payload = concat((0 until 4).map(i => md5((col("id") + i).cast("string"))): _*)
+    val uniform = s.range(0, 5000).select(col("id").as("doc_id"),
+      pmod(xxhash64(col("id")), lit(100000L)).as("bkey"), payload.as("bs"))
+    val hot = s.range(5000, 7000)
+      .select(col("id").as("doc_id"), lit(-1L).as("bkey"), payload.as("bs"))
+    val bands = uniform.union(hot)
+    val cand = bands.toDF("d1", "k1", "bs1")
+      .join(bands.toDF("d2", "k2", "bs2"),
+        col("k1") === col("k2") && col("d1") < col("d2"))
+      .select(col("d1"), col("d2"), (length(col("bs1")) + length(col("bs2"))).as("w"))
+    // run cand's own QueryExecution so the final adaptive plan is the one
+    // that ran
+    val qe = cand.queryExecution
+    assert(qe.toRdd.count() >= 2000L * 1999 / 2)
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    val joins = helper.collect(qe.executedPlan) { case j: SortMergeJoinExec => j }
+    assert(joins.size === 1 && joins.head.isSkewJoin, s"no skew join in:\n${qe.executedPlan}")
+    val skewedReads = helper.collect(joins.head) {
+      case r: AQEShuffleReadExec if r.hasSkewedPartition => r
+    }
+    assert(skewedReads.size === 2, s"expected both sides split:\n${qe.executedPlan}")
+  }
+
   test("minhashSigOf edge semantics match the old aggregation's") {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     import org.apache.spark.unsafe.types.UTF8String

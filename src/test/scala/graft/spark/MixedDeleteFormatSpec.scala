@@ -73,7 +73,8 @@ class MixedDeleteFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cdcDeleted == (0L until 30L).filter(_ % 3 == 1),
       s"changelog misread avro deletes: $cdcDeleted")
 
-    // maintenance reads the avro rows through deleteRowsDf
+    // maintenance parses the avro delete file through the scan's
+    // positionsByFile
     spark.sql("CALL gmd.system.rewrite_position_delete_files(table => 'db.avdel')")
     assert(ids("gmd.db.avdel") == (0L until 30L).filter(_ % 3 != 1),
       "scan diverged after rewriting avro position deletes")

@@ -99,4 +99,53 @@ class RewriteOptionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "CALL graft.system.rewrite_data_files(table => 'db.dft1')") === 1)
     assert(spark.table("graft.db.dft1").count() === 39L)
   }
+
+  test("the rewrite writes through the table's writer: codec, INT64 timestamps, bounds") {
+    spark.sql("""CREATE TABLE graft.db.rwprops (id BIGINT, ts TIMESTAMP)
+      TBLPROPERTIES ('write.parquet.compression-codec'='zstd')""")
+    (0 until 3).foreach { i =>
+      spark.range(i * 10, i * 10 + 10)
+        .selectExpr("id", "timestamp_seconds(1700000000 + id) AS ts")
+        .coalesce(1).writeTo("graft.db.rwprops").append()
+    }
+    val expected = spark.table("graft.db.rwprops").orderBy("id").collect().toSeq
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def staging() = Option(tmp.list()).toSeq.flatten
+      .filter(_.startsWith("graft-rewrite")).toSet
+    val stagingBefore = staging()
+    // a caller's session conf is the caller's: the rewrite must neither
+    // need nor change it (graft files always carry field ids)
+    val idConf = "spark.sql.parquet.fieldId.write.enabled"
+    spark.conf.set(idConf, "false")
+    try {
+      assert(rewriteCount(
+        "CALL graft.system.rewrite_data_files(table => 'db.rwprops')") === 3)
+      assert(spark.conf.get(idConf) === "false")
+    } finally spark.conf.unset(idConf)
+    assert(staging() -- stagingBefore === Set.empty[String])
+    assert(spark.table("graft.db.rwprops").orderBy("id").collect().toSeq === expected)
+
+    val files = spark.sql(
+      "SELECT file_path, lower_bounds, upper_bounds FROM graft.db.rwprops.files")
+      .collect()
+    assert(files.length === 1)
+    // field id 2 is `ts`: INT96 carries no footer statistics, so its
+    // bounds exist only when the writer used INT64 micros
+    assert(files.head.getMap[Int, String](1).contains(2) &&
+      files.head.getMap[Int, String](2).contains(2),
+      s"no ts bounds on the compacted file: ${files.head}")
+    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path("file://" + files.head.getString(0)),
+        new org.apache.hadoop.conf.Configuration()))
+    try {
+      val footer = rd.getFooter
+      assert(footer.getFileMetaData.getSchema.getType(Array("ts"): _*).asPrimitiveType
+        .getPrimitiveTypeName.name === "INT64")
+      val codecs = footer.getBlocks.get(0).getColumns.toArray.toSeq
+        .map(_.asInstanceOf[org.apache.parquet.hadoop.metadata.ColumnChunkMetaData]
+          .getCodec.name)
+      assert(codecs.nonEmpty && codecs.forall(_ === "ZSTD"), s"codecs: $codecs")
+    } finally rd.close()
+  }
 }

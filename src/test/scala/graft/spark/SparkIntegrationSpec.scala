@@ -371,6 +371,17 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.core.meta.Puffin.thetaEstimate(blobs.head.payload)
       .exists(_ >= 2L))
     assert(blobs.head.properties.get("ndv").exists(_.toLong >= 2L))
+
+    // the stats describe LIVE rows: rows a merge-on-read DELETE masked
+    // with a delete file are not counted
+    spark.sql("""CREATE TABLE graft.db.rmlive (id BIGINT)
+      TBLPROPERTIES ('write.delete.mode'='merge-on-read')""")
+    spark.range(0, 1000).coalesce(1).writeTo("graft.db.rmlive").append()
+    spark.sql("DELETE FROM graft.db.rmlive WHERE id >= 100")
+    assert(spark.table("graft.db.rmlive.delete_files").count() > 0L)
+    assert(spark.table("graft.db.rmlive").count() === 100L)
+    spark.sql("CALL graft.system.compute_table_stats('db.rmlive')")
+    assert(coreTable("rmlive").meta.properties.get("stats.ndv.id") === Some("100"))
   }
 
   test("add_files imports >64 files through the distributed footer path") {
