@@ -162,35 +162,6 @@ object TableScan {
   }
 }
 
-object FileKeeper {
-  /** THE layer-3 per-file keep decision for a row filter, reusable
-    * outside the batch planner (the CDC scan prunes change tasks with
-    * it): resolve the spec per FILE with the same arity guard as
-    * TableScan.planManifest, evaluate the cached inclusive partition
-    * projection exactly, then the column min/max stats. An unbindable
-    * filter degrades to keep-everything — pruning is an optimization,
-    * never row filtering. Driver-side only (the returned closure caches
-    * projections in a plain mutable map). */
-  def forFilter(m: TableMetadata, filter: Expr): DataFile => Boolean = {
-    if (filter == TrueE) return _ => true
-    val schema = m.schema
-    val bound =
-      try Expr.bind(schema, filter)
-      catch { case scala.util.control.NonFatal(_) => return _ => true }
-    val partPreds = scala.collection.mutable.Map.empty[Int, Expr]
-    f => {
-      val fSpec = scala.util.Try(m.specById(f.specId)).toOption
-        .filter(_.fields.length == f.partition.length)
-      val partKeep = fSpec.forall { sp =>
-        val pred = partPreds.getOrElseUpdate(sp.specId,
-          Projections.inclusive(sp, schema, bound))
-        RowEvaluator.eval(pred, ArrayRow(f.partition.toArray))
-      }
-      partKeep && InclusiveMetricsEvaluator.rowsMightMatch(bound, f.fileStats)
-    }
-  }
-}
-
 /** Driver-side scan planning: the 3-layer metadata pruning funnel
   * (SURVEY.md §4; reference ManifestGroup.java):
   *   1. partition projection of the row filter (hidden partitioning)

@@ -1087,8 +1087,9 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
         val readConf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
         readConf.setBoolean("spark.sql.parquet.fieldId.read.enabled", true)
         GraftParquetCrypto.configure(readConf, t.meta)
-        val (pqRead, avroRead, orcRead) = GraftSparkTable.positionDeleteReaders(
-          spark, readConf, delFiles.map(_.format).toSet)
+        val (pqRead, avroRead, orcRead) = GraftSparkTable.deleteReaders(
+          spark, readConf, GraftDeltaWriter.DeleteSchema,
+          delFiles.map(_.format).toSet)
         // spec v3: "Position delete files must not be added to v3
         // tables … existing position deletes must be written to delete
         // vectors" — on v3 (or write.delete.format=dv) the compaction
@@ -2741,15 +2742,6 @@ object RewriteDataFiles {
         scannedSnapshotId.foreach(s2.useSnapshot)
         s2.planFiles()
       }
-    // equality deletes under different identifier-field sets: the scan
-    // masks each delete file by its own keys, but a delete file written
-    // before an identifier change lacks the columns that change made
-    // required, and the scan's full-schema read of it fails
-    val eqIdSets = tasks.flatMap(_.deletes)
-      .filter(_.content == FileContent.EqualityDeletes).map(_.equalityIds.toSet).distinct
-    require(eqIdSets.size <= 1,
-      s"rewrite over mixed equality-delete key sets not supported: $eqIdSets")
-
     // group by partition tuple; a group qualifies if it has enough small
     // files (binpack), carries files at/over the delete-file threshold
     // (reference BinPackRewriteFilePlanner.java:70-72), or any files at

@@ -227,7 +227,7 @@ class GraftSparkTable(val table: GTable, fullName: String,
         RowEvaluator.eval(strictPart, ArrayRow(t.file.partition.toArray)) ||
           StrictMetricsEvaluator.rowsMustMatch(bound, t.file.fileStats)
       }
-    } catch { case _: Throwable => false }
+    } catch { case scala.util.control.NonFatal(_) => false }
   }
 
   override def deleteWhere(predicates: Array[VPred]): Unit = {
@@ -467,8 +467,8 @@ object GraftSparkTable {
     * immutable and one file typically applies to many data files read by
     * many tasks on the same executor, so parsing once per JVM is the
     * difference between O(tasks) and O(files) delete-file IO at scale.
-    * Keys are tuples led by their kind ("pos", "eq", "eq-chg",
-    * "rowgroups"); each kind passes its own weigher, in approximate
+    * Keys are tuples led by their kind ("pos", "eq", "rowgroups"); each
+    * kind passes its own weigher, in approximate
     * retained bytes. Budget and entry cap are the reference's defaults
     * (128 MiB / 64 MiB): a giant delete file bypasses the cache instead
     * of evicting the whole working set to pin itself. */
@@ -476,8 +476,8 @@ object GraftSparkTable {
     new graft.core.meta.BoundedCache[Any, AnyRef](128L << 20, entryCap = 64L << 20)
 
   /** Positions of `dataPath` deleted by the position-delete or DV files
-    * `deletePaths`, ORed into one fresh bitmap; the batch scan and the
-    * changelog scan both read deletes through here. Each file is parsed
+    * `deletePaths`, ORed into one fresh bitmap; the batch scan's reader
+    * (and the changelog, through it) reads deletes here. Each file is parsed
     * by `positionsByFile`, with its OWN manifest-recorded format in
     * `formats` (entries past the array read as parquet). Delete content
     * stores the writer-time ABSOLUTE data-file path: match
@@ -556,18 +556,20 @@ object GraftSparkTable {
     }
   }
 
-  /** Readers of position-delete content (file_path, pos) for
-    * `positionsByFile`, built once per scan and shipped to its tasks:
-    * (parquet, avro, orc), each null unless `fmts` names that format.
-    * Parquet reads through `conf` (field-id reads and the table's parquet
-    * decryption already set), ORC by name. The batch scan, the changelog
-    * scan and rewrite_position_delete_files all build them here. */
-  def positionDeleteReaders(spark: SparkSession,
-      conf: org.apache.hadoop.conf.Configuration, fmts: Set[String])
+  /** Readers of delete-file content over `schema`, built once per scan
+    * and shipped to its tasks: (parquet, avro, orc), each null unless
+    * `fmts` names that format. Parquet reads through `conf` (field-id
+    * reads and the table's parquet decryption already set), ORC by name.
+    * Position deletes read `GraftDeltaWriter.DeleteSchema` for
+    * `positionsByFile`; equality deletes read the nullable table schema
+    * for `equalityKeys`. The batch scan and rewrite_position_delete_files
+    * both build them here. */
+  def deleteReaders(spark: SparkSession,
+      conf: org.apache.hadoop.conf.Configuration, schema: StructType,
+      fmts: Set[String])
       : (PartitionedFile => Iterator[InternalRow],
         PartitionedFile => Iterator[InternalRow],
         PartitionedFile => Iterator[InternalRow]) = {
-    val schema = GraftDeltaWriter.DeleteSchema
     val opts = Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
       "enableVectorizedReader" -> "false")
     val parquet =
@@ -582,11 +584,70 @@ object GraftSparkTable {
       if (fmts("orc")) {
         val nameConf = new org.apache.hadoop.conf.Configuration(conf)
         nameConf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
+        val byName = stripFieldIds(schema)
         new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat()
-          .buildReaderWithPartitionValues(spark, schema,
-            new StructType(), schema, Nil, opts, nameConf)
+          .buildReaderWithPartitionValues(spark, byName,
+            new StructType(), byName, Nil, opts, nameConf)
       } else null
     (parquet, avro, orc)
+  }
+
+  /** `schema` with every top-level column nullable: the read schema of
+    * equality-delete files. A delete file holds only its own key
+    * columns, so one written under an earlier identifier-field set lacks
+    * a column the current set made required, and a required read of it
+    * fails. */
+  def nullableSchema(schema: StructType): StructType =
+    StructType(schema.fields.map(_.copy(nullable = true)))
+
+  /** the equality-delete key of `row`: canonical copies of its values at
+    * `positions` of `schema` */
+  def keyAt(row: InternalRow, positions: Array[Int], schema: StructType): Seq[Any] =
+    positions.map(p => canonical(row, p, schema(p).dataType)).toSeq
+
+  /** canonical (hashable, buffer-safe) copy of a column value: the one
+    * form equality-delete keys are compared in */
+  def canonical(row: InternalRow, pos: Int,
+      dt: org.apache.spark.sql.types.DataType): Any =
+    if (row.isNullAt(pos)) null
+    else row.get(pos, dt) match {
+      case s: org.apache.spark.unsafe.types.UTF8String => s.toString
+      case b: Array[Byte]                              => b.toSeq
+      case d: org.apache.spark.sql.types.Decimal       => d.toJavaBigDecimal
+      case other                                       => other
+    }
+
+  /** One equality-delete file parsed into its set of deleted keys, once
+    * per JVM (`executorCache`, key ("eq", path, positions, key types)):
+    * the canonical values at `positions` of `schema` in each of its rows.
+    * `format` is the file's manifest-recorded format, dispatched to the
+    * readers `deleteReaders` built over `nullableSchema(schema)`; a null
+    * avro/orc reader falls back to `parquet`. Keyed by the key types too:
+    * after a type promotion (INT identifier -> BIGINT) a set built with
+    * the old types would never compare equal, and every equality delete
+    * would silently un-apply. The returned set is shared: never mutate it. */
+  def equalityKeys(path: String, format: String, positions: Array[Int],
+      schema: StructType,
+      parquet: PartitionedFile => Iterator[InternalRow],
+      avro: PartitionedFile => Iterator[InternalRow],
+      orc: PartitionedFile => Iterator[InternalRow])
+      : java.util.HashSet[Seq[Any]] = {
+    // ~retained bytes: per row a Seq wrapper plus ~32 B per boxed value
+    def weigh(s: java.util.HashSet[Seq[Any]]): Long =
+      64L + s.size.toLong * (48L + 32L * math.max(1, positions.length))
+    executorCache.get(("eq", path, positions.toSeq,
+        positions.map(p => schema(p).dataType.catalogString).toSeq), weigh) {
+      val readFn = format match {
+        case "avro" if avro != null => avro
+        case "orc" if orc != null   => orc
+        case _                      => parquet
+      }
+      val keys = new java.util.HashSet[Seq[Any]]()
+      readFn(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
+          0L, Long.MaxValue, Array.empty[String], 0L, Long.MaxValue, Map.empty))
+        .foreach(r => keys.add(keyAt(r, positions, schema)))
+      keys
+    }
   }
 
   /** Executor-side cache of row-group/stripe (startingPos, rowCount)
@@ -633,27 +694,6 @@ object GraftSparkTable {
         .iterator.filter(_._1 < start).map(_._2).sum
   }
 
-  /** Executor-side cache of parsed EQUALITY-delete key sets, mirroring
-    * `deletedPositions`: one eq-delete file is applied to every data file
-    * with a lower sequence, so without caching each task re-reads and
-    * re-hashes the same immutable file. Keyed by (path, key positions). */
-  object EqDeleteCache {
-    // keyed by (path, key positions, key column types): cached key sets
-    // are canonicalized with the read schema's types, so a later read
-    // after type promotion (INT identifier -> BIGINT) must NOT hit the
-    // entry built with the old types — the boxed classes would never
-    // compare equal and every equality delete would silently un-apply
-    def get(path: String, positions: Seq[Int], keyTypes: Seq[String],
-        load: () => java.util.HashSet[Seq[Any]]): java.util.HashSet[Seq[Any]] =
-      executorCache.get(("eq", path, positions, keyTypes),
-        (s: java.util.HashSet[Seq[Any]]) => weighKeySet(s, positions.size))(load())
-
-    /** ~retained bytes of an eq-delete key set: per row a Seq wrapper
-      * plus ~32 B per boxed key column value */
-    def weighKeySet(s: java.util.HashSet[Seq[Any]], keyWidth: Int): Long =
-      64L + s.size.toLong * (48L + 32L * math.max(1, keyWidth))
-  }
-
   /** an equality-delete file + the field ids it deletes by. `format` is
     * the file's OWN manifest-recorded format — external v2 trees commonly
     * mix Avro deletes over Parquet data (reference DeleteFilter dispatches
@@ -661,7 +701,6 @@ object GraftSparkTable {
   final case class EqDeleteDesc(path: String, fieldIds: Array[Int],
       format: String = "parquet")
 
-  /** Serializable slice of a FileScanTask shipped to executors. */
   /** internal partition-tuple value → Catalyst internal value, for the
     * scan's identity fill (which compaction also reads through) */
   private def partitionValueToInternal(v: Any): Any = v match {
@@ -674,10 +713,8 @@ object GraftSparkTable {
   }
 
   /** THE identity-constant fill rule (reference PartitionUtil
-    * .constantsMap), shared by the batch scan and the CDC scan so the
-    * two read paths can never serve different values for an imported
-    * file's metadata-only partition columns (the compaction rewrite
-    * applies the same rule in DataFrame form): overwrite each identity
+    * .constantsMap) of the batch scan's reader, which the changelog and
+    * compaction read through: overwrite each identity
     * source column at its position in `schema` with the task's
     * partition-tuple value. None when nothing needs filling. */
   def identityFillProjection(schema: StructType,
@@ -702,6 +739,7 @@ object GraftSparkTable {
     }
   }
 
+  /** Serializable slice of a FileScanTask shipped to executors. */
   final case class TaskDesc(path: String, start: Long, length: Long,
       deletePaths: Array[String],
       eqDeletes: Array[EqDeleteDesc] = Array.empty,
@@ -728,6 +766,24 @@ object GraftSparkTable {
       // columns under their write-time names); -1 = current
       writeSchemaId: Int = -1) {
     def nameBased: Boolean = fileFormat != "parquet"
+  }
+
+  /** The TaskDesc of a planned task: its position/DV and equality
+    * deletes split by kind, each with its own format, plus the file's
+    * format, spec, partition, lineage and write schema. `shreds` are the
+    * table's shredded-variant specs (`shredSpecsOf`). The batch scan, the
+    * changelog and the micro-batch stream all describe their tasks here. */
+  def toDesc(t: FileScanTask, shreds: Seq[ShredSpec]): TaskDesc = {
+    val (eq, pos) = t.deletes.partition(_.content == graft.core.meta.FileContent.EqualityDeletes)
+    TaskDesc(t.file.path, t.start, t.length, pos.map(_.path).toArray,
+      eq.map(d => EqDeleteDesc(d.path, d.equalityIds.toArray, d.format)).toArray,
+      posDelFormats = pos.map(_.format).toArray,
+      fileFormat = t.file.format,
+      specId = t.file.specId, partition = t.file.partition,
+      firstRowId = t.file.firstRowId, dataSeq = t.dataSequenceNumber,
+      shredMat = shreds.nonEmpty &&
+        shreds.forall(sp => t.file.shredStats.contains(sp.matKey)),
+      writeSchemaId = t.writeSchemaId)
   }
 
   final case class GraftInputPartition(tasks: Array[TaskDesc],
@@ -803,7 +859,7 @@ object GraftSparkTable {
           if (snapshotId.isEmpty && branch.isEmpty && asOfTs.isEmpty)
             WapBranch.forRead(table).foreach(s.useRef)
           s.planFiles()
-        } catch { case _: Throwable => return None }
+        } catch { case scala.util.control.NonFatal(_) => return None }
       }
       if (tasks.exists(_.deletes.nonEmpty)) return None
 
@@ -1141,7 +1197,7 @@ object GraftSparkTable {
                 // write-time schema; branch reads use the table schema
                 useSnapshotSchema = snapshotId.isDefined || asOfTs.isDefined)
             })
-            catch { case _: Throwable => None }
+            catch { case scala.util.control.NonFatal(_) => None }
           case _ => None
         }
         var ts = serverPlanned.getOrElse {
@@ -1153,7 +1209,7 @@ object GraftSparkTable {
             try SparkSession.active.conf
               .getOption("spark.graft.distributed-planning-min-bytes")
               .map(_.toLong).getOrElse(256L * 1024 * 1024)
-            catch { case _: Throwable => 256L * 1024 * 1024 }
+            catch { case scala.util.control.NonFatal(_) => 256L * 1024 * 1024 }
           coreScan.planParts() match {
             case Some((ctx, mfs))
                 if mfs.size > 1 && mfs.map(_.length).sum > threshold =>
@@ -1315,7 +1371,8 @@ object GraftSparkTable {
       if (preserveGrouping && groupedTasks.nonEmpty) {
         // one input partition per partition key, tagged for SPJ
         return groupedTasks.map { case (partition, ts) =>
-          GraftInputPartition(ts.map(toDesc).toArray, keyRow(partition)): InputPartition
+          GraftInputPartition(ts.map(toDesc(_, shredAll)).toArray,
+            keyRow(partition)): InputPartition
         }.toArray
       }
       val all = tasks()
@@ -1326,7 +1383,8 @@ object GraftSparkTable {
       // groups than the cluster has slots — a 100 MB table on 32 cores
       // must not become one single-threaded task.
       val parallelism =
-        try SparkSession.active.sparkContext.defaultParallelism catch { case _: Throwable => 8 }
+        try SparkSession.active.sparkContext.defaultParallelism
+        catch { case scala.util.control.NonFatal(_) => 8 }
       val totalBytes = all.map(t => math.max(t.length, openCost)).sum
       val configured = splitOverride._1
         .orElse(table.meta.properties.get("read.split.target-size")
@@ -1405,25 +1463,12 @@ object GraftSparkTable {
         out.result()
       }
       groups.map { g =>
-        GraftInputPartition(g.map(toDesc).toArray): InputPartition
+        GraftInputPartition(g.map(toDesc(_, shredAll)).toArray): InputPartition
       }.toArray
     }
 
     private lazy val shredAll =
       GraftSparkTable.shredSpecsOf(table.meta.properties, table.schema)
-
-    private def toDesc(t: FileScanTask): TaskDesc = {
-      val (eq, pos) = t.deletes.partition(_.content == graft.core.meta.FileContent.EqualityDeletes)
-      TaskDesc(t.file.path, t.start, t.length, pos.map(_.path).toArray,
-        eq.map(d => EqDeleteDesc(d.path, d.equalityIds.toArray, d.format)).toArray,
-        posDelFormats = pos.map(_.format).toArray,
-        fileFormat = t.file.format,
-        specId = t.file.specId, partition = t.file.partition,
-        firstRowId = t.file.firstRowId, dataSeq = t.dataSequenceNumber,
-        shredMat = shredAll.nonEmpty &&
-          shredAll.forall(sp => t.file.shredStats.contains(sp.matKey)),
-        writeSchemaId = t.writeSchemaId)
-    }
 
     override def createReaderFactory(): PartitionReaderFactory =
       buildReaderFactory(conservative = false)
@@ -1436,7 +1481,7 @@ object GraftSparkTable {
       * overhead per scan. `conservative` (streaming) builds everything:
       * later micro-batches may add files the stream-start task set
       * didn't contain. */
-    private[spark] def buildReaderFactory(conservative: Boolean): PartitionReaderFactory = {
+    private[spark] def buildReaderFactory(conservative: Boolean): GraftReaderFactory = {
       val spark = SparkSession.active
       val fullSchema = SparkTypes.toSparkSchema(table.schema)
       // row-level-op scans must return every row of the planned files:
@@ -1745,15 +1790,19 @@ object GraftSparkTable {
         if (shredReq.isEmpty) null
         else fmt.buildReaderWithPartitionValues(spark, fullSchemaNF,
           new StructType(), dataReadNFBin, Nil, rowOpts, freshConf)
-      // position-delete files, one reader per format present (parquet by
-      // field id, ORC/avro by name — genuine external delete files with
-      // the reserved field ids read identically)
+      // delete files, one reader per format present (parquet by field id,
+      // ORC/avro by name — genuine external delete files with the
+      // reserved field ids read identically). Equality-delete files read
+      // the nullable full schema: field-id resolution nulls the columns a
+      // file does not key on
       val (deleteFunc, avroDeleteFunc, orcDeleteFunc) =
-        positionDeleteReaders(spark, conf,
+        deleteReaders(spark, conf, GraftDeltaWriter.DeleteSchema,
           if (anyNonDvPos) posDelFmts else Set.empty)
+      val (eqDeleteFunc, avroEqDeleteFunc, orcEqDeleteFunc) =
+        if (!anyEq) (null, null, null)
+        else deleteReaders(spark, conf, nullableSchema(fullSchema), eqDelFmts)
       // equality-delete masking needs the identifier columns regardless of
-      // pruning: read the full schema (field-id resolution nulls absent
-      // columns in the delete files themselves)
+      // pruning: data files with equality deletes read the full schema
       val rowFuncFull =
         if (anyEq)
           fmt.buildReaderWithPartitionValues(spark, fullSchema,
@@ -1846,15 +1895,6 @@ object GraftSparkTable {
             new StructType(), stripIds(dataRequired), Nil,
             Map(FileFormat.OPTION_RETURNING_BATCH -> "true"), freshNameConf)
         else null
-      // equality-delete files in ORC: full-schema read by name (absent
-      // columns null — only the file's key columns are present)
-      val orcDelFullFunc =
-        if (eqDelFmts("orc"))
-          orcFmt.buildReaderWithPartitionValues(spark, stripIds(fullSchema),
-            new StructType(), stripIds(fullSchema), Nil,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-              "enableVectorizedReader" -> "false"), freshNameConf)
-        else null
       // per-historical-schema ORC row funcs: request each field under its
       // WRITE-TIME top-level name (position-aligned with the current
       // required schema, so downstream projection is untouched); fields
@@ -1942,10 +1982,9 @@ object GraftSparkTable {
       val needAvro = formats("avro")
       val avroRowFunc = if (needAvro) GraftAvro.ReadFunc(dataRequiredBin.json) else null
       val avroRowFuncNF = if (needAvro) GraftAvro.ReadFunc(dataReadNFBin.json) else null
-      // built when avro DATA files carry eq deletes OR the eq-delete files
-      // themselves are avro (field-id resolution nulls absent columns)
+      // built when avro DATA files carry eq deletes
       val avroFullFunc =
-        if (anyEq && (needAvro || eqDelFmts("avro"))) GraftAvro.ReadFunc(fullSchema.json)
+        if (anyEq && needAvro) GraftAvro.ReadFunc(fullSchema.json)
         else null
       val avroFullLin =
         if (needAvro && anyEq && wantLineage)
@@ -1979,7 +2018,8 @@ object GraftSparkTable {
         crypto = graft.core.meta.TableCrypto.resolve(table.meta),
         footerCryptoConf = GraftParquetCrypto.readOptions(table.meta),
         orcDeleteFunc = orcDeleteFunc, avroDeleteFunc = avroDeleteFunc,
-        orcDelFullFunc = orcDelFullFunc,
+        eqDeleteFunc = eqDeleteFunc, avroEqDeleteFunc = avroEqDeleteFunc,
+        orcEqDeleteFunc = orcEqDeleteFunc,
         identityConsts = {
           // every spec's identity fields whose source resolves in the
           // CURRENT schema (a dropped source column has no projection
@@ -2122,11 +2162,14 @@ object GraftSparkTable {
       // (split tasks derive their first-row index from the footer)
       footerCryptoConf: Map[String, String] = Map.empty,
       // per-delete-file format dispatch (reference DeleteFilter keys its
-      // readers on DeleteFile.format()): position/equality delete files in
-      // formats other than the parquet default
+      // readers on DeleteFile.format()): position delete files in formats
+      // other than the parquet default, and equality delete files in each
+      // format (see deleteReaders)
       orcDeleteFunc: PartitionedFile => Iterator[InternalRow] = null,
       avroDeleteFunc: PartitionedFile => Iterator[InternalRow] = null,
-      orcDelFullFunc: PartitionedFile => Iterator[InternalRow] = null,
+      eqDeleteFunc: PartitionedFile => Iterator[InternalRow] = null,
+      avroEqDeleteFunc: PartitionedFile => Iterator[InternalRow] = null,
+      orcEqDeleteFunc: PartitionedFile => Iterator[InternalRow] = null,
       // identity-partition constants for name-mapped/id-mapped imports
       // (reference PartitionUtil.constantsMap): specId -> (source column
       // name, partition tuple index). Delta-layout and hive-layout files
@@ -2181,7 +2224,7 @@ object GraftSparkTable {
           .variantGet(row.get(parentOrd, org.apache.spark.sql.types.VariantType)
             .asInstanceOf[org.apache.spark.unsafe.types.VariantVal],
             shredPaths(i), shredTypes(i), shredCastArgs, "variant_shred")
-        catch { case _: Throwable => null }
+        catch { case scala.util.control.NonFatal(_) => null }
 
     /** metaCols ordinals of the requested _shred_* columns (aligned
       * with shredReq, which was built by walking metaCols in order) */
@@ -2225,7 +2268,7 @@ object GraftSparkTable {
       GraftSparkTable.RowGroupCache.firstRowIndex(t.path, t.fileFormat,
         t.start, footerCryptoConf)
 
-    private def deletedPositions(dataPath: String,
+    private[spark] def deletedPositions(dataPath: String,
         deletePaths: Array[String], formats: Array[String])
         : org.roaringbitmap.longlong.Roaring64Bitmap =
       GraftSparkTable.deletedPositions(dataPath, deletePaths, formats, crypto,
@@ -2234,40 +2277,17 @@ object GraftSparkTable {
     override def supportColumnarReads(partition: InputPartition): Boolean =
       vectorized // scan-level decision: uniform across partitions
 
-    /** canonical (hashable, buffer-safe) copy of a column value */
-    private def canonical(row: InternalRow, pos: Int,
-        dt: org.apache.spark.sql.types.DataType): Any =
-      if (row.isNullAt(pos)) null
-      else row.get(pos, dt) match {
-        case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-        case b: Array[Byte]                              => b.toSeq
-        case d: org.apache.spark.sql.types.Decimal       => d.toJavaBigDecimal
-        case other                                       => other
-      }
-
     /** key positions (fullSchema) + executor-cached deleted-key set of
       * one equality-delete file; keys are canonical values in the delete
-      * file's fieldIds order — shared by the row and columnar paths */
-    private def eqKeySet(ed: EqDeleteDesc): (Array[Int], java.util.HashSet[Seq[Any]]) = {
+      * file's fieldIds order — shared by the row and columnar paths and
+      * the changelog */
+    private[spark] def eqKeySet(ed: EqDeleteDesc)
+        : (Array[Int], java.util.HashSet[Seq[Any]]) = {
       val posOf = fullSchema.fieldNames.zipWithIndex.toMap
       val positions = ed.fieldIds.flatMap(id =>
         fieldNamesById.get(id).flatMap(posOf.get))
-      // the delete FILE reads with its own format's full-schema reader
-      // (all three project fullSchema's field order, so `positions` holds)
-      val delRead = ed.format match {
-        case "avro" if avroFullFunc != null  => avroFullFunc
-        case "orc" if orcDelFullFunc != null => orcDelFullFunc
-        case _                               => rowFuncFull
-      }
-      val keys = EqDeleteCache.get(ed.path, positions.toSeq,
-        positions.toSeq.map(p => fullSchema(p).dataType.catalogString), () => {
-        val ks = new java.util.HashSet[Seq[Any]]()
-        delRead(pf(ed.path, 0, Long.MaxValue)).foreach { r =>
-          ks.add(positions.map(p => canonical(r, p, fullSchema(p).dataType)).toSeq)
-        }
-        ks
-      })
-      (positions, keys)
+      (positions, equalityKeys(ed.path, ed.format, positions, fullSchema,
+        eqDeleteFunc, avroEqDeleteFunc, orcEqDeleteFunc))
     }
 
     /** rows of `t` masked by its equality (and position) deletes,
@@ -2303,7 +2323,7 @@ object GraftSparkTable {
       dataFull(pf(t.path, t.start, t.length)).zipWithIndex.collect {
         case (row, idx) if !posDeleted.contains(posBase + idx) &&
           !masks.exists { case (positions, keys) =>
-            keys.contains(positions.map(p => canonical(row, p, fullSchema(p).dataType)).toSeq)
+            keys.contains(keyAt(row, positions, fullSchema))
           } =>
           val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(project.length)
           var i = 0

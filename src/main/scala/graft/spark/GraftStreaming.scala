@@ -137,21 +137,25 @@ final class GraftMicroBatchStream(
   // snapshots are immutable: cache their added-file lists so latestOffset
   // + planInputPartitions on every trigger don't re-read manifests
   private val addedFilesCache =
-    new java.util.concurrent.ConcurrentHashMap[Long, Seq[DataFile]]()
+    new java.util.concurrent.ConcurrentHashMap[Long, Seq[FileScanTask]]()
 
-  /** files appended by an append snapshot, in stable (path) order */
-  private def addedFiles(snap: Snapshot): Seq[DataFile] =
+  /** files appended by an append snapshot, in stable (path) order, as
+    * whole-file tasks carrying each entry's sequence number and write
+    * schema */
+  private def addedFiles(snap: Snapshot): Seq[FileScanTask] =
     addedFilesCache.computeIfAbsent(snap.snapshotId, _ => addedFilesUncached(snap))
 
-  private def addedFilesUncached(snap: Snapshot): Seq[DataFile] =
+  private def addedFilesUncached(snap: Snapshot): Seq[FileScanTask] =
     if (snap.operation != "append") Nil
     else ManifestIO.readList(snap.manifestListPath)
       .filter(_.addedSnapshotId == snap.snapshotId)
       .flatMap(mf => ManifestIO.readEntries(mf))
       .filter(e => e.status == ManifestEntryStatus.Added &&
         e.snapshotId == snap.snapshotId)
-      .map(_.file)
-      .sortBy(_.path)
+      .map(e => FileScanTask(e.file, 0L, e.file.fileSizeBytes,
+        graft.core.expr.TrueE, Nil, e.dataSequenceNumber,
+        writeSchemaId = e.writeSchemaId.orElse(snap.schemaId).getOrElse(-1)))
+      .sortBy(_.file.path)
 
   // stream-from-timestamp (reference SparkReadConf.streamFromTimestamp):
   // snapshots committed before the timestamp count as already processed
@@ -212,7 +216,7 @@ final class GraftMicroBatchStream(
           }
           var idx = from
           while (idx < untilCap && fileBudget > 0 && (rowBudget > 0 || !tookAny)) {
-            rowBudget -= files(idx).recordCount
+            rowBudget -= files(idx).file.recordCount
             fileBudget -= 1
             tookAny = true
             idx += 1
@@ -239,9 +243,9 @@ final class GraftMicroBatchStream(
         fs.slice(from, until)
       }
     // one file per partition; streaming batches are small by construction
-    files.map(f => GraftSparkTable.GraftInputPartition(Array(
-      GraftSparkTable.TaskDesc(f.path, 0L, f.fileSizeBytes, Array.empty))): InputPartition)
-      .toArray
+    val shreds = GraftSparkTable.shredSpecsOf(table.meta.properties, table.schema)
+    files.map(t => GraftSparkTable.GraftInputPartition(
+      Array(GraftSparkTable.toDesc(t, shreds))): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = readerFactory()

@@ -107,7 +107,10 @@ class DmlFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       // partition clause override: a TRANSFORMED spec (bucket) drives the
       // coerced unified struct, summary pruning and the pushdown
       // invariant through non-identity partition values
-      partitionBy: String = "grp"): Unit = {
+      partitionBy: String = "grp",
+      // identifier `id` + equality-enabled DELETE/UPDATE/MERGE: every
+      // merge-on-read row-level op writes equality deletes
+      equality: Boolean = false): Unit = {
     val name = s"fuzz_${seed}_${if (partitioned) "p" else "u"}_$format" +
       (if (partitionBy != "grp") "_t" else "")
     val fq = s"$cat.db.$name"
@@ -127,9 +130,18 @@ class DmlFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       ", 'write.parquet.row-group-size-bytes'='32768'" +
       ", 'write.orc.stripe-size-bytes'='32768'" +
       ", 'read.split.target-size'='65536'"
+    val eqProp = if (!equality) "" else
+      ", 'write.delete.mode'='merge-on-read'" +
+      ", 'write.update.mode'='merge-on-read'" +
+      ", 'write.merge.mode'='merge-on-read'" +
+      ", 'write.delete.equality-enabled'='true'" +
+      ", 'write.update.equality-enabled'='true'" +
+      ", 'write.merge.equality-enabled'='true'"
     spark.sql(s"""CREATE TABLE $fq (id BIGINT, grp BIGINT, v STRING)
       $partClause TBLPROPERTIES ('format-version'='3',
-        'write.format.default'='$format'$compatProp$mergeProp$splitProp)""")
+        'write.format.default'='$format'$compatProp$mergeProp$splitProp$eqProp)""")
+    if (equality)
+      spark.sql(s"CALL $cat.system.set_identifier_fields('db.$name', 'id')")
 
     val rng = new Random(seed)
     val model = mutable.LinkedHashMap.empty[Long, (Long, String)]
@@ -389,7 +401,7 @@ class DmlFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"(${replayed.size} vs ${model.size} rows)")
 
     // changes-scan pushdown invariant: a grp-filtered changelog read
-    // (change tasks prune at planning via the shared FileKeeper) must
+    // (each snapshot's plan prunes with the pushed filter) must
     // serve exactly the post-filtered full changelog, across the same
     // random CoW/MoR/compaction histories the replay above walked
     changes.map(_._3._2._1).headOption.foreach { g =>
@@ -407,6 +419,11 @@ class DmlFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
           s"(${pushed.size} vs ${full.size} rows)")
     }
     }
+
+    // equality arm: the replay above must have walked equality deletes
+    assert(!equality || (!expired && coreTable().meta.snapshots.exists(
+        _.summary.get("added-equality-deletes").exists(_.toLong > 0))),
+      s"seed=$seed: the equality arm replayed no equality deletes")
 
     // time-travel invariant: VERSION AS OF any still-retained snapshot
     // must reproduce the model state captured right after its commit —
@@ -871,6 +888,12 @@ class DmlFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("seeded DML fuzz on an Avro table") {
     runSeed(seed = 909, partitioned = false, steps = 25, format = "avro")
+  }
+
+  test("seeded DML fuzz with equality deletes") {
+    // merge-on-read DELETE/UPDATE/MERGE write equality deletes keyed on
+    // `id`, so the changelog replay checks the rows they remove
+    runSeed(seed = 515, partitioned = true, steps = 12, equality = true)
   }
 
   test("seeded DML fuzz with partition-spec evolution") {

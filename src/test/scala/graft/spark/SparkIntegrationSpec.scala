@@ -2070,6 +2070,50 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dels === 1L, s"row 2 reported deleted $dels times (expected 1)")
   }
 
+  test("changes scan: a row an equality delete removed is not reported again") {
+    spark.sql("""CREATE TABLE graft.db.cdceq_once (id INT, v STRING)
+      TBLPROPERTIES ('write.delete.mode'='merge-on-read',
+                     'write.delete.equality-enabled'='true')""")
+    spark.sql("CALL graft.system.set_identifier_fields('db.cdceq_once', 'id')")
+    spark.sql("""INSERT INTO graft.db.cdceq_once SELECT /*+ COALESCE(1) */ *
+      FROM VALUES (1, 'a1'), (2, 'a2'), (3, 'a3'), (4, 'a4') AS s(id, v)""")
+    spark.sql("DELETE FROM graft.db.cdceq_once WHERE id = 1")
+    spark.sql("""INSERT INTO graft.db.cdceq_once SELECT /*+ COALESCE(1) */ *
+      FROM VALUES (1, 'c1'), (2, 'c2') AS s(id, v)""")
+    spark.sql("DELETE FROM graft.db.cdceq_once WHERE id = 1")
+    // the second delete's equality file also keys the first file's
+    // (1, a1), which the first delete already removed at ordinal 1
+    val dels = spark.sql("""SELECT _change_ordinal, id, v
+        FROM graft.db.cdceq_once.changes WHERE _change_type = 'DELETE'""")
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getString(2))).sorted.toSeq
+    assert(dels === Seq((1, 1, "a1"), (3, 1, "c1")), s"DELETE changes: $dels")
+  }
+
+  test("equality deletes under two identifier-field sets: read, changes, rewrite") {
+    spark.sql("""CREATE TABLE graft.db.eq_two_keys (id INT, k STRING)
+      TBLPROPERTIES ('write.delete.mode'='merge-on-read',
+                     'write.delete.equality-enabled'='true')""")
+    spark.range(0, 30, 1, 1).selectExpr("CAST(id AS INT) AS id", "concat('k', id) AS k")
+      .writeTo("graft.db.eq_two_keys").append()
+    spark.sql("CALL graft.system.set_identifier_fields('db.eq_two_keys', 'id')")
+    spark.sql("DELETE FROM graft.db.eq_two_keys WHERE id < 5")
+    spark.sql("CALL graft.system.set_identifier_fields('db.eq_two_keys', 'k')")
+    spark.sql("DELETE FROM graft.db.eq_two_keys WHERE k = 'k7'")
+    val files = spark.sql("SELECT content FROM graft.db.eq_two_keys.files")
+      .collect().map(_.getInt(0))
+    assert(files.count(_ == 2) === 2, s"expected two equality-delete files: ${files.toSeq}")
+    def count(): Long =
+      spark.sql("SELECT count(*) FROM graft.db.eq_two_keys").head().getLong(0)
+    assert(count() === 24L)
+    assert(spark.sql("""SELECT id FROM graft.db.eq_two_keys.changes
+        WHERE _change_type = 'DELETE'""").collect().map(_.getInt(0)).sorted.toSeq ===
+      Seq(0, 1, 2, 3, 4, 7))
+    spark.sql("CALL graft.system.rewrite_data_files('db.eq_two_keys', min_input_files => 1)")
+    assert(count() === 24L)
+    assert(spark.sql("SELECT id FROM graft.db.eq_two_keys").collect()
+      .map(_.getInt(0)).sorted.toSeq === ((5 until 30).filter(_ != 7)))
+  }
+
   test("ALTER TABLE RENAME moves a directory-catalog table, deletes intact") {
     spark.sql("""CREATE TABLE graft.db.ren_a (id BIGINT)
       TBLPROPERTIES ('write.delete.mode'='merge-on-read')""")

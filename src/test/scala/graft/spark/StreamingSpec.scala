@@ -224,4 +224,34 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql("SELECT id FROM graft.db.stream_dst_ap ORDER BY id")
       .collect().map(_.getLong(0)).toSeq === (1L to 6L))
   }
+
+  test("micro-batch reads serve each file in its own format") {
+    def streamIds(src: String): Seq[Long] = {
+      spark.sql(s"CREATE TABLE graft.db.${src}_dst (id BIGINT, v STRING)")
+      val q = spark.readStream.table(s"graft.db.$src")
+        .writeStream
+        .option("checkpointLocation",
+          Files.createTempDirectory(s"graft-ckpt-$src").toString)
+        .trigger(Trigger.AvailableNow())
+        .toTable(s"graft.db.${src}_dst")
+      q.awaitTermination(60000)
+      spark.sql(s"SELECT id FROM graft.db.${src}_dst ORDER BY id")
+        .collect().map(_.getLong(0)).toSeq
+    }
+    // an Avro table
+    spark.sql("""CREATE TABLE graft.db.stream_avro (id BIGINT, v STRING)
+      TBLPROPERTIES ('write.format.default'='avro')""")
+    spark.sql("INSERT INTO graft.db.stream_avro VALUES (1, 'a'), (2, 'b')")
+    spark.sql("INSERT INTO graft.db.stream_avro VALUES (3, 'c')")
+    assert(streamIds("stream_avro") === Seq(1L, 2L, 3L))
+    // a parquet file, then an ORC file
+    spark.sql("CREATE TABLE graft.db.stream_mixed (id BIGINT, v STRING)")
+    spark.sql("INSERT INTO graft.db.stream_mixed VALUES (1, 'a')")
+    spark.sql("""ALTER TABLE graft.db.stream_mixed
+      SET TBLPROPERTIES ('write.format.default'='orc')""")
+    spark.sql("INSERT INTO graft.db.stream_mixed VALUES (2, 'b')")
+    assert(spark.sql("SELECT file_format FROM graft.db.stream_mixed.files")
+      .collect().map(_.getString(0).toLowerCase).sorted.toSeq === Seq("orc", "parquet"))
+    assert(streamIds("stream_mixed") === Seq(1L, 2L))
+  }
 }
