@@ -831,6 +831,16 @@ object ManifestIO {
     })
   }
 
+  /** The entries snapshot `snap` added, data and delete files alike,
+    * from the manifests it wrote (reference Snapshot.addedDataFiles /
+    * addedDeleteFiles). */
+  def addedEntries(snap: Snapshot): Seq[ManifestEntry] =
+    readList(snap.manifestListPath)
+      .filter(_.addedSnapshotId == snap.snapshotId)
+      .flatMap(mf => readEntries(mf))
+      .filter(e => e.status == ManifestEntryStatus.Added &&
+        e.snapshotId == snap.snapshotId)
+
   def readList(path: String): Seq[ManifestFile] = {
     if (path.startsWith("inline:")) return listCache.get(path) {
       val arr = MetaJson.mapper.readTree(path.stripPrefix("inline:"))
@@ -1502,12 +1512,7 @@ final class OverwriteFiles(table: GTable) extends SnapshotProducer(table, "overw
         base.ancestry(branch)
           .filter(s => s.operation == "append" && s.sequenceNumber > fromSeq)
           .foreach { sn =>
-            val added = ManifestIO.readList(sn.manifestListPath)
-              .filter(mf => mf.content == 0 && mf.addedSnapshotId == sn.snapshotId)
-              .flatMap(mf => ManifestIO.readEntries(mf))
-              .filter(e => e.status == ManifestEntryStatus.Added &&
-                e.snapshotId == sn.snapshotId)
-            if (added.exists(e =>
+            if (ManifestIO.addedEntries(sn).exists(e =>
                 InclusiveMetricsEvaluator.rowsMightMatch(bound, e.file.fileStats)))
               throw new CommitConflictException(
                 s"serializable isolation: snapshot ${sn.snapshotId} appended " +
@@ -1711,11 +1716,8 @@ final class RowDelta(table: GTable) extends SnapshotProducer(table, "delete") {
         .takeWhile(_.isDefined).map(_.get)
         .takeWhile(s => !conflictFrom.contains(s.snapshotId)) // newest-first
       chain.filterNot(_.operation == "replace").foreach { s =>
-        val added = ManifestIO.readList(s.manifestListPath)
-          .filter(_.addedSnapshotId == s.snapshotId)
-          .flatMap(mf => ManifestIO.readEntries(mf))
-          .filter(e => e.status == ManifestEntryStatus.Added &&
-            e.snapshotId == s.snapshotId)
+        // data AND delete files: a concurrent delete is a conflict too
+        val added = ManifestIO.addedEntries(s)
         // pre-filter by exact partition evaluation (layer-3 style): a
         // file in a partition the filter excludes can't conflict
         def partMight(e: ManifestEntry): Boolean =

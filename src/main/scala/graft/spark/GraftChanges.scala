@@ -204,9 +204,8 @@ final class GraftChangesScan(table: GTable, startId: Option[Long],
     val scan = new GraftSparkTable.GraftScan(table, graft.core.expr.TrueE,
       dataSchema.add(GraftSparkTable.MetaPosCol, LongType, nullable = false),
       limit = None, snapshotId = None, branch = None, asOfTs = None,
-      vecOverride = Some(false), stagedTasks = Some(staged))
-    new ChangeReaderFactory(scan.buildReaderFactory(conservative = false),
-      dataSchema)
+      vecOverride = Some(false))
+    new ChangeReaderFactory(scan.buildReaderFactory(staged), dataSchema)
   }
 }
 

@@ -442,14 +442,11 @@ object GraftProcedures extends Serializable {
   private[spark] def mergePositionDeletes(files: Seq[(String, String)],
       liveByKey: Map[String, String], liveBySuffix: Map[String, Option[String]],
       crypto: Option[TableCrypto],
-      parquet: org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow],
-      avro: org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow],
-      orc: org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow])
+      readers: Map[GraftSparkTable.ReadKey, GraftSparkTable.Reader])
       : mutable.TreeMap[String, org.roaringbitmap.longlong.Roaring64Bitmap] = {
     val kept = mutable.TreeMap.empty[String, org.roaringbitmap.longlong.Roaring64Bitmap]
     files.foreach { case (path, format) =>
-      val byFile = GraftSparkTable.positionsByFile(path, format, crypto,
-        parquet, avro, orc)
+      val byFile = GraftSparkTable.positionsByFile(path, format, crypto, readers)
       val sfxCounts = byFile.keys.groupMapReduce(GraftIO.dataSuffix)(_ => 1)(_ + _)
       byFile.foreach { case (k, bm) =>
         val sfx = GraftIO.dataSuffix(k)
@@ -645,11 +642,7 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
     val snap = t.meta.snapshotById(snapId).getOrElse(
       throw new IllegalArgumentException(s"unknown snapshot $snapId"))
     require(snap.operation == "append", s"can only cherry-pick appends, got ${snap.operation}")
-    val added = ManifestIO.readList(snap.manifestListPath)
-      .filter(_.addedSnapshotId == snapId)
-      .flatMap(mf => ManifestIO.readEntries(mf))
-      .filter(e => e.status == ManifestEntryStatus.Added && e.snapshotId == snapId)
-      .map(_.file)
+    val added = ManifestIO.addedEntries(snap).map(_.file)
     val prev = t.meta.currentSnapshot.map(_.snapshotId).getOrElse(-1L)
     val ap = t.newAppend().appendFiles(added)
     extraSummary.foreach { case (k, v) => ap.set(k, v) }
@@ -1087,9 +1080,10 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
         val readConf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
         readConf.setBoolean("spark.sql.parquet.fieldId.read.enabled", true)
         GraftParquetCrypto.configure(readConf, t.meta)
-        val (pqRead, avroRead, orcRead) = GraftSparkTable.deleteReaders(
-          spark, readConf, GraftDeltaWriter.DeleteSchema,
-          delFiles.map(_.format).toSet)
+        val readers = GraftSparkTable.deleteReaders(spark, readConf,
+          delFiles.filterNot(f => DVIO.isDV(f.path))
+            .map(f => GraftSparkTable.ReadKey.positionDeletes(f.format)).distinct,
+          SparkTypes.toSparkSchema(t.schema))
         // spec v3: "Position delete files must not be added to v3
         // tables … existing position deletes must be written to delete
         // vectors" — on v3 (or write.delete.format=dv) the compaction
@@ -1128,7 +1122,7 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
           .map { case (specId, partition, files) =>
             val ctx = org.apache.spark.TaskContext.get()
             val kept = mergePositionDeletes(files, liveByKey, liveBySuffix,
-              crypto, pqRead, avroRead, orcRead)
+              crypto, readers)
             if (dvMode) kept.toSeq.map { case (dataPath, bm) =>
               GraftDeltaWriter.writeDV(loc, ctx.partitionId(),
                 ctx.taskAttemptId(), specId, partition, dataPath, DVIO.positions(bm), crypto)
@@ -2643,7 +2637,7 @@ object RewriteDataFiles {
     StructField("failed_data_files_count", IntegerType)))
 
   /** SQL `where` text → engine expression (reference
-    * RewriteDataFilesProcedure `where` parameter): a conservative
+    * RewriteDataFilesProcedure `where` parameter): a safe
     * subset — comparisons, IN, IS [NOT] NULL, AND/OR/NOT, and
     * LIKE-'x%' prefixes — over top-level columns, with foldable
     * literal sides (casts and literal arithmetic evaluate). Anything

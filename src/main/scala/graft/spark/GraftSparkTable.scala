@@ -479,7 +479,7 @@ object GraftSparkTable {
     * `deletePaths`, ORed into one fresh bitmap; the batch scan's reader
     * (and the changelog, through it) reads deletes here. Each file is parsed
     * by `positionsByFile`, with its OWN manifest-recorded format in
-    * `formats` (entries past the array read as parquet). Delete content
+    * `formats` (parallel to `deletePaths`). Delete content
     * stores the writer-time ABSOLUTE data-file path: match
     * scheme-stripped exact first, then — for tables relocated under v4
     * relative metadata locations — fall back to a UNIQUE
@@ -492,16 +492,11 @@ object GraftSparkTable {
     * bitmap stays within a few bits/position. */
   def deletedPositions(dataPath: String, deletePaths: Array[String],
       formats: Array[String], crypto: Option[graft.core.meta.TableCrypto],
-      parquet: PartitionedFile => Iterator[InternalRow],
-      avro: PartitionedFile => Iterator[InternalRow],
-      orc: PartitionedFile => Iterator[InternalRow])
-      : org.roaringbitmap.longlong.Roaring64Bitmap = {
+      readers: Map[ReadKey, Reader]): org.roaringbitmap.longlong.Roaring64Bitmap = {
     import graft.core.meta.GraftIO.{dataSuffix, stripScheme}
     val out = new org.roaringbitmap.longlong.Roaring64Bitmap()
-    deletePaths.zipWithIndex.foreach { case (dp, di) =>
-      val byFile = positionsByFile(dp,
-        if (di < formats.length) formats(di) else "parquet",
-        crypto, parquet, avro, orc)
+    deletePaths.zip(formats).foreach { case (dp, fmt) =>
+      val byFile = positionsByFile(dp, fmt, crypto, readers)
       val hit = byFile.get(stripScheme(dataPath)).orElse {
         val want = dataSuffix(dataPath)
         byFile.keys.filter(k => dataSuffix(k) == want).toSeq match {
@@ -517,14 +512,11 @@ object GraftSparkTable {
   /** One position-delete or DV file parsed into scheme-stripped data-file
     * path → deleted positions, once per JVM (`executorCache`, key
     * ("pos", path)). `format` is the file's manifest-recorded format
-    * (reference DeleteFilter per-file dispatch); a null avro/orc reader
-    * falls back to `parquet`. The returned bitmaps are shared: callers
-    * OR them into their own, never mutate them. */
+    * (reference DeleteFilter per-file dispatch); its reader is looked up
+    * in `readers` (`deleteReaders`) by its `ReadKey`. The returned bitmaps
+    * are shared: callers OR them into their own, never mutate them. */
   def positionsByFile(path: String, format: String,
-      crypto: Option[graft.core.meta.TableCrypto],
-      parquet: PartitionedFile => Iterator[InternalRow],
-      avro: PartitionedFile => Iterator[InternalRow],
-      orc: PartitionedFile => Iterator[InternalRow])
+      crypto: Option[graft.core.meta.TableCrypto], readers: Map[ReadKey, Reader])
       : Map[String, org.roaringbitmap.longlong.Roaring64Bitmap] = {
     import graft.core.meta.GraftIO.stripScheme
     import org.roaringbitmap.longlong.Roaring64Bitmap
@@ -539,14 +531,8 @@ object GraftSparkTable {
         val (ref, bm) = graft.core.meta.DVIO.read(path, crypto)
         Map(stripScheme(ref) -> bm)
       } else {
-        val readFn = format match {
-          case "avro" if avro != null => avro
-          case "orc" if orc != null   => orc
-          case _                      => parquet
-        }
         val m = scala.collection.mutable.Map.empty[String, Roaring64Bitmap]
-        readFn(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
-            0L, Long.MaxValue, Array.empty[String], 0L, Long.MaxValue, Map.empty))
+        ReadKey.lookup(readers, ReadKey.positionDeletes(format), path)(wholeFile(path))
           .foreach { r =>
             m.getOrElseUpdate(stripScheme(r.getUTF8String(0).toString),
               new Roaring64Bitmap()).addLong(r.getLong(1))
@@ -556,41 +542,56 @@ object GraftSparkTable {
     }
   }
 
-  /** Readers of delete-file content over `schema`, built once per scan
-    * and shipped to its tasks: (parquet, avro, orc), each null unless
-    * `fmts` names that format. Parquet reads through `conf` (field-id
-    * reads and the table's parquet decryption already set), ORC by name.
-    * Position deletes read `GraftDeltaWriter.DeleteSchema` for
-    * `positionsByFile`; equality deletes read the nullable table schema
-    * for `equalityKeys`. The batch scan and rewrite_position_delete_files
-    * both build them here. */
+  /** the whole of file `path`, as a reader's input */
+  private def wholeFile(path: String): PartitionedFile =
+    PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
+      0L, Long.MaxValue, Array.empty[String], 0L, Long.MaxValue, Map.empty)
+
+  /** Readers of delete-file content, one per key, built once per scan
+    * and shipped to its tasks. Position deletes read
+    * `GraftDeltaWriter.DeleteSchema` for `positionsByFile`; equality
+    * deletes read the nullable `tableSchema` for `equalityKeys`. The batch
+    * scan, the changelog and rewrite_position_delete_files all build
+    * them here. */
   def deleteReaders(spark: SparkSession,
-      conf: org.apache.hadoop.conf.Configuration, schema: StructType,
-      fmts: Set[String])
-      : (PartitionedFile => Iterator[InternalRow],
-        PartitionedFile => Iterator[InternalRow],
-        PartitionedFile => Iterator[InternalRow]) = {
-    val opts = Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-      "enableVectorizedReader" -> "false")
-    val parquet =
-      if (fmts.exists(_.startsWith("parquet")))
-        new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
-          new StructType(), schema, Nil, opts,
-          new org.apache.hadoop.conf.Configuration(conf))
-      else null
-    val avro: PartitionedFile => Iterator[InternalRow] =
-      if (fmts("avro")) GraftAvro.ReadFunc(schema.json) else null
-    val orc =
-      if (fmts("orc")) {
-        val nameConf = new org.apache.hadoop.conf.Configuration(conf)
-        nameConf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
-        val byName = stripFieldIds(schema)
-        new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat()
-          .buildReaderWithPartitionValues(spark, byName,
-            new StructType(), byName, Nil, opts, nameConf)
-      } else null
-    (parquet, avro, orc)
-  }
+      conf: org.apache.hadoop.conf.Configuration, keys: Iterable[ReadKey],
+      tableSchema: StructType): Map[ReadKey, Reader] =
+    keys.iterator.map { k =>
+      val schema =
+        if (k.shape == ReadKey.EqualityDeletes) nullableSchema(tableSchema)
+        else GraftDeltaWriter.DeleteSchema
+      k -> buildReader(spark, conf, k.resolve, schema, schema, Nil, batch = false)
+    }.toMap
+
+  /** THE constructor of every data and delete reader a scan ships to its
+    * tasks: `data` is the file schema handed to the format, `required`
+    * the columns returned, `filters` the pushed row-group filters.
+    * `conf` carries the table's field-id and decryption settings and is
+    * copied, since each build broadcasts its own. Parquet by id reads
+    * through it as is; the name-resolved formats (name-mapped parquet,
+    * ORC) read with the field ids stripped and id matching off; Avro
+    * reads `required` through graft's own sync-splittable reader, which
+    * broadcasts nothing and leaves filtering to Spark. */
+  def buildReader(spark: SparkSession, conf: org.apache.hadoop.conf.Configuration,
+      resolve: String, data: StructType, required: StructType,
+      filters: Seq[V1Filter], batch: Boolean): Reader =
+    if (resolve == ReadKey.Avro) GraftAvro.ReadFunc(required.json)
+    else {
+      val c = new org.apache.hadoop.conf.Configuration(conf)
+      val byId = resolve == ReadKey.ParquetById
+      if (!byId) c.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
+      def ids(st: StructType) = if (byId) st else stripFieldIds(st)
+      val fmt: FileFormat =
+        if (resolve == ReadKey.Orc)
+          new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
+        else new ParquetFileFormat
+      val opts =
+        if (batch) Map(FileFormat.OPTION_RETURNING_BATCH -> "true")
+        else Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
+          "enableVectorizedReader" -> "false")
+      fmt.buildReaderWithPartitionValues(spark, ids(data), new StructType(),
+        ids(required), filters, opts, c)
+    }
 
   /** `schema` with every top-level column nullable: the read schema of
     * equality-delete files. A delete file holds only its own key
@@ -620,31 +621,22 @@ object GraftSparkTable {
   /** One equality-delete file parsed into its set of deleted keys, once
     * per JVM (`executorCache`, key ("eq", path, positions, key types)):
     * the canonical values at `positions` of `schema` in each of its rows.
-    * `format` is the file's manifest-recorded format, dispatched to the
-    * readers `deleteReaders` built over `nullableSchema(schema)`; a null
-    * avro/orc reader falls back to `parquet`. Keyed by the key types too:
+    * `format` is the file's manifest-recorded format; its reader is
+    * looked up in `readers` (`deleteReaders`, over `nullableSchema(schema)`)
+    * by its `ReadKey`. Keyed by the key types too:
     * after a type promotion (INT identifier -> BIGINT) a set built with
     * the old types would never compare equal, and every equality delete
     * would silently un-apply. The returned set is shared: never mutate it. */
   def equalityKeys(path: String, format: String, positions: Array[Int],
-      schema: StructType,
-      parquet: PartitionedFile => Iterator[InternalRow],
-      avro: PartitionedFile => Iterator[InternalRow],
-      orc: PartitionedFile => Iterator[InternalRow])
+      schema: StructType, readers: Map[ReadKey, Reader])
       : java.util.HashSet[Seq[Any]] = {
     // ~retained bytes: per row a Seq wrapper plus ~32 B per boxed value
     def weigh(s: java.util.HashSet[Seq[Any]]): Long =
       64L + s.size.toLong * (48L + 32L * math.max(1, positions.length))
     executorCache.get(("eq", path, positions.toSeq,
         positions.map(p => schema(p).dataType.catalogString).toSeq), weigh) {
-      val readFn = format match {
-        case "avro" if avro != null => avro
-        case "orc" if orc != null   => orc
-        case _                      => parquet
-      }
       val keys = new java.util.HashSet[Seq[Any]]()
-      readFn(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
-          0L, Long.MaxValue, Array.empty[String], 0L, Long.MaxValue, Map.empty))
+      ReadKey.lookup(readers, ReadKey.equalityDeletes(format), path)(wholeFile(path))
         .foreach(r => keys.add(keyAt(r, positions, schema)))
       keys
     }
@@ -743,13 +735,15 @@ object GraftSparkTable {
   final case class TaskDesc(path: String, start: Long, length: Long,
       deletePaths: Array[String],
       eqDeletes: Array[EqDeleteDesc] = Array.empty,
-      // per-entry format of `deletePaths` (parallel array; entries past
-      // its end default to "parquet") — position-delete files keep their
-      // manifest-recorded format independently of the data file's
-      posDelFormats: Array[String] = Array.empty,
-      // "parquet" (field-id resolution) | "parquet-nm" (imported, by name)
-      // | "orc" (by name) | "orc-nm" (imported ORC missing its
-      // identity-partition columns: by name + constant fill)
+      // per-entry format of `deletePaths` (parallel array) — position-
+      // delete files keep their manifest-recorded format independently
+      // of the data file's
+      posDelFormats: Array[String],
+      // "parquet" (field-id resolution) | "parquet-im" (imported with the
+      // table's field ids: by id + constant fill) | "parquet-nm"
+      // (imported, by name + constant fill) | "orc" (by name) | "orc-nm"
+      // (imported ORC missing its identity-partition columns: by name +
+      // constant fill) | "avro" (graft's own reader)
       fileFormat: String = "parquet",
       // for _spec_id/_partition metadata columns (internal-rep values)
       specId: Int = 0,
@@ -784,6 +778,119 @@ object GraftSparkTable {
       shredMat = shreds.nonEmpty &&
         shreds.forall(sp => t.file.shredStats.contains(sp.matKey)),
       writeSchemaId = t.writeSchemaId)
+  }
+
+  /** a reader of one file: rows, or columnar batches cast to rows */
+  type Reader = PartitionedFile => Iterator[InternalRow]
+
+  /** What one task reads, and so which reader serves it (reference
+    * BaseReader dispatches on the task's file format): how its columns
+    * resolve (`resolve`), the write schema whose top-level names it is
+    * read under (`schemaId`; -1 for the current names), the `shape` of
+    * the read, whether it returns columnar `batch`es — carrying the
+    * equality-delete key columns when `eqKeys` — and whether it reads the
+    * materialized `shred` columns. A reader factory holds one reader per
+    * distinct key of the tasks it was built for, and each task finds its
+    * reader under `ReadKey.of`. Delete files are keyed the same way, by
+    * their format and their content as the shape. */
+  final case class ReadKey(resolve: String, shape: String, schemaId: Int = -1,
+      batch: Boolean = false, eqKeys: Boolean = false, shred: Boolean = false)
+
+  object ReadKey {
+    // how columns resolve
+    val ParquetById = "parquet-by-id"     // "parquet", "parquet-im"
+    val ParquetByName = "parquet-by-name" // "parquet-nm"
+    val Orc = "orc-by-name"               // "orc", "orc-nm"
+    val Avro = "avro"
+    // shapes: a filtered split read; an unfiltered read whose row index
+    // is the file position; the full schema for equality masking; the
+    // content of a delete file
+    val Split = "split"
+    val Unfiltered = "unfiltered"
+    val EqMasked = "eq-masked"
+    val PositionDeletes = "position-deletes"
+    val EqualityDeletes = "equality-deletes"
+
+    def resolution(format: String): String = format match {
+      case "parquet" | "parquet-im" => ParquetById
+      case "parquet-nm"             => ParquetByName
+      case "orc" | "orc-nm"         => Orc
+      case "avro"                   => Avro
+      case other =>
+        throw new IllegalStateException(s"no reader for file format '$other'")
+    }
+
+    /** the key of data task `t` in a scan with facts `f` */
+    def of(t: TaskDesc, f: ScanFacts): ReadKey = {
+      val resolve = resolution(t.fileFormat)
+      val shape =
+        if (!f.columnar && t.eqDeletes.nonEmpty) EqMasked
+        else if (t.deletePaths.isEmpty && !f.positions) Split
+        else Unfiltered
+      ReadKey(resolve, shape,
+        schemaId =
+          if ((resolve == ParquetByName || resolve == Orc) &&
+              f.renamed(t.writeSchemaId)) t.writeSchemaId
+          else -1,
+        batch = f.columnar,
+        eqKeys = f.columnar && t.eqDeletes.nonEmpty,
+        shred = f.shred && t.fileFormat == "parquet" && shape != EqMasked &&
+          (f.columnar || t.shredMat))
+    }
+
+    def positionDeletes(format: String): ReadKey =
+      ReadKey(resolution(format), PositionDeletes)
+    def equalityDeletes(format: String): ReadKey =
+      ReadKey(resolution(format), EqualityDeletes)
+
+    /** the keys of the delete files task `t` parses (DVs need no reader) */
+    def deletesOf(t: TaskDesc): Seq[ReadKey] =
+      t.deletePaths.zip(t.posDelFormats).collect {
+        case (p, fmt) if !graft.core.meta.DVIO.isDV(p) => positionDeletes(fmt)
+      }.toSeq ++ t.eqDeletes.map(d => equalityDeletes(d.format))
+
+    /** the reader of `key`, for file `path`; a factory built without it
+      * fails here rather than hand the file to another format's reader */
+    def lookup(readers: Map[ReadKey, Reader], key: ReadKey, path: String): Reader =
+      readers.getOrElse(key, throw new IllegalStateException(
+        s"no reader built for $key, needed by $path"))
+  }
+
+  /** The scan-wide facts a task's `ReadKey` and its read schema follow
+    * from, the same on the driver and in every task: the table schema,
+    * the data columns read, the requested metadata columns, the
+    * materialized shred columns and the parent variant columns their
+    * binary fallback adds, the key columns equality-masked batches add,
+    * whether the scan reads columnar batches, and the ids of the schemas
+    * whose top-level names differ from the current ones. */
+  final case class ScanFacts(fullSchema: StructType, dataRequired: StructType,
+      metaCols: Array[String], shredMat: Seq[org.apache.spark.sql.types.StructField],
+      shredParents: Seq[org.apache.spark.sql.types.StructField],
+      eqKeyFields: Seq[org.apache.spark.sql.types.StructField],
+      columnar: Boolean, renamed: Set[Int]) {
+    def lineage: Boolean = metaCols.contains(MetaRowIdCol) || metaCols.contains(MetaSeqCol)
+    /** rows must carry file positions: _pos, or lineage derived from it */
+    def positions: Boolean = metaCols.contains(MetaPosCol) || lineage
+    def shred: Boolean = shredMat.nonEmpty
+
+    // unfiltered and equality-masked reads also read the materialized
+    // lineage columns: rewritten files carry them, older files read null
+    // and fall back to firstRowId + position
+    private def lin(k: ReadKey) =
+      if (lineage && k.shape != ReadKey.Split) lineageReadFields else Nil
+
+    /** the file schema a reader of `k` is built over, in current names */
+    def dataSchema(k: ReadKey): StructType =
+      StructType(fullSchema.fields ++ lin(k) ++ (if (k.shred) shredMat else Nil))
+
+    /** the columns a reader of `k` returns, in current names: the data
+      * columns, then lineage, then the shred columns (materialized, or
+      * the parents the binary fallback parses), then the equality keys */
+    def readSchema(k: ReadKey): StructType =
+      if (k.shape == ReadKey.EqMasked) StructType(fullSchema.fields ++ lin(k))
+      else StructType(dataRequired.fields ++ lin(k) ++
+        (if (k.shred) shredMat else shredParents) ++
+        (if (k.eqKeys) eqKeyFields else Nil))
   }
 
   final case class GraftInputPartition(tasks: Array[TaskDesc],
@@ -1120,7 +1227,7 @@ object GraftSparkTable {
 
     override def toMicroBatchStream(checkpointLocation: String)
         : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-      new GraftMicroBatchStream(table, streamMaxFiles, () => buildReaderFactory(conservative = true),
+      new GraftMicroBatchStream(table, streamMaxFiles, buildReaderFactory,
         streamMaxRecords, branch, streamFromTs,
         skipDelete = streamSkip._1, skipOverwrite = streamSkip._2,
         asyncPlanning = streamAsync, pollingIntervalMs = streamPollMs)
@@ -1159,10 +1266,7 @@ object GraftSparkTable {
           sn.sequenceNumber > startSeq && sn.sequenceNumber <= endSeq)
         .sortBy(_.sequenceNumber)
         .flatMap { sn =>
-          graft.core.meta.ManifestIO.readList(sn.manifestListPath)
-            .filter(mf => mf.content == 0 && mf.addedSnapshotId == sn.snapshotId)
-            .flatMap(mf => graft.core.meta.ManifestIO.readEntries(mf))
-            .filter(e => e.status == 1 && e.snapshotId == sn.snapshotId)
+          graft.core.meta.ManifestIO.addedEntries(sn)
             .filter(e => InclusiveMetricsEvaluator.rowsMightMatch(bound, e.file.fileStats))
             .map(e => FileScanTask(e.file, 0L, e.file.fileSizeBytes, TrueE, Nil,
               writeSchemaId =
@@ -1471,17 +1575,17 @@ object GraftSparkTable {
       GraftSparkTable.shredSpecsOf(table.meta.properties, table.schema)
 
     override def createReaderFactory(): PartitionReaderFactory =
-      buildReaderFactory(conservative = false)
+      buildReaderFactory(tasks())
 
-    /** Build the executor-side reader factory. Each parquet/orc reader
-      * closure built here broadcasts its own Hadoop conf driver-side, so
-      * build ONLY the variants the planned task set actually dispatches
-      * to (formats present, delete kinds, requested metadata columns) —
-      * eagerly constructing every variant cost ~12 broadcasts of fixed
-      * overhead per scan. `conservative` (streaming) builds everything:
-      * later micro-batches may add files the stream-start task set
-      * didn't contain. */
-    private[spark] def buildReaderFactory(conservative: Boolean): GraftReaderFactory = {
+    /** Build the executor-side reader factory for tasks `ts`: the scan's
+      * planned tasks, one micro-batch's files, or the changelog's staged
+      * tasks. The columnar decision is taken over `ts` alone; then exactly
+      * one reader is built per distinct `ReadKey.of` of their tasks, and
+      * one delete reader per key of their delete files. Each parquet/ORC
+      * reader broadcasts its own Hadoop conf, so nothing is built that no
+      * task of `ts` reads; a task outside `ts` whose key is missing fails
+      * its lookup with the key and the file. */
+    private[spark] def buildReaderFactory(ts: Seq[FileScanTask]): GraftReaderFactory = {
       val spark = SparkSession.active
       val fullSchema = SparkTypes.toSparkSchema(table.schema)
       // row-level-op scans must return every row of the planned files:
@@ -1497,10 +1601,7 @@ object GraftSparkTable {
       // files compute the value from the parent variant binary per row.
       val shredReq: Array[GraftSparkTable.ShredSpec] =
         if (!metaCols.exists(_.startsWith(ShredColPrefix))) Array.empty
-        else {
-          val specs = shredSpecsOf(table.meta.properties, table.schema)
-          metaCols.flatMap(n => specs.find(_.metaName == n))
-        }
+        else metaCols.flatMap(n => shredAll.find(_.metaName == n))
       val shredMatFields = shredReq.map(shredMatField)
       // parent variant columns the binary fallback needs but the query
       // didn't select: appended after the data (+lineage) fields
@@ -1518,11 +1619,6 @@ object GraftSparkTable {
         if (i >= 0) i
         else dataRequired.length + shredMissingParents.indexWhere(_.name == sp.parent)
       }
-      // binary fallback needs the parent variant in the read schema
-      val dataRequiredBin =
-        if (shredReq.isEmpty) dataRequired
-        else StructType(dataRequired.fields ++ shredMissingParents)
-      val fmt = new ParquetFileFormat
       val conf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
       // our files always carry parquet field ids: resolve columns by id so
       // renames/evolution never mis-bind
@@ -1561,84 +1657,29 @@ object GraftSparkTable {
         (!metaCols.contains(MetaPartitionCol) ||
           partStructT.fields.forall(f => constSupported(f.dataType)))
 
-      // ------------------------------ what does this task set dispatch to?
+      // ------------------------------------------------ columnar decision
       import graft.core.meta.FileContent
-      val ts = tasks()
-      val formats: Set[String] =
-        if (conservative)
-          Set("parquet", "parquet-nm", "parquet-im", "orc", "orc-nm", "avro")
-        else ts.iterator.map(_.file.format).toSet
-      // "orc-nm" = imported ORC physically LACKING its identity-partition
-      // columns (hive-layout / metastore-registered sources): reads ride
-      // the plain ORC name-resolved readers plus the identity-constant
-      // fill, exactly the parquet-nm posture — so every ORC reader gate
-      // below treats the two tags as one format family
-      val anyOrcFmt = formats("orc") || formats("orc-nm")
-      val anyEq = conservative ||
-        ts.exists(_.deletes.exists(_.content == FileContent.EqualityDeletes))
-      val anyNonDvPos = conservative || ts.exists(_.deletes.exists(d =>
-        d.content == FileContent.PositionDeletes && !graft.core.meta.DVIO.isDV(d.path)))
-      // delete files carry their OWN format independently of the data
-      // (reference DeleteFilter dispatches per DeleteFile.format()) —
-      // Flink-shaped external trees write Avro deletes over Parquet data.
-      // Build a reader per format actually present among the delete files.
-      val allDelFmts = Set("parquet", "orc", "avro")
-      val posDelFmts: Set[String] =
-        if (conservative) allDelFmts
-        else ts.iterator.flatMap(_.deletes.iterator
-          .filter(d => d.content == FileContent.PositionDeletes &&
-            !graft.core.meta.DVIO.isDV(d.path))
-          .map(_.format)).toSet
-      val eqDelFmts: Set[String] =
-        if (conservative) allDelFmts
-        else ts.iterator.flatMap(_.deletes.iterator
-          .filter(_.content == FileContent.EqualityDeletes)
-          .map(_.format)).toSet
-      val wantLineage = metaCols.contains(MetaRowIdCol) || metaCols.contains(MetaSeqCol)
-      val needPosRow = metaCols.contains(MetaPosCol) || wantLineage
-      val needPosV = metaCols.contains(MetaPosCol)
       // columnar needs one uniform batch reader across the scan: all
       // parquet (field-id based) or all orc (name based); name-mapped
       // parquet imports and equality deletes force the row path; position
       // deletes stay columnar via delete-aware vectors
       val allParquet = ts.forall(_.file.format == "parquet")
-      // ORC files written under an EARLIER schema whose top-level names
-      // differ need per-schema readers (row path); they also disqualify
-      // the scan-wide ORC batch reader below
-      val curSchemaId = table.schema.schemaId
       // only schemas whose NAMES differ need translated readers: a type
       // widen or added column bumps the schema id without renaming, and
       // must not disqualify the vectorized ORC batch path below
-      def namesDifferAt(id: Int): Boolean =
-        table.meta.schemas.find(_.schemaId == id)
-          .exists(GraftSparkTable.namesDiffer(table.schema, _))
-      def histIdsFor(fmtName: String): Seq[Int] =
-        (if (conservative)
-          // streaming factory: tasks aren't known up front — prebuild for
-          // every name-differing schema (any format can appear via the
-          // per-write write-format option, not just the table default)
-          table.meta.schemas.map(_.schemaId).filter(_ != curSchemaId)
-        else ts.iterator
-          .filter(t => t.file.format == fmtName &&
-            t.writeSchemaId >= 0 && t.writeSchemaId != curSchemaId)
-          .map(_.writeSchemaId).toSeq.distinct)
-          .filter(namesDifferAt)
-      val orcHistIds: Seq[Int] =
-        (histIdsFor("orc") ++ histIdsFor("orc-nm")).distinct
-      // imported parquet (no field ids, resolved by name): the file's
-      // names equal the import-time schema names, so the same per-write-
-      // schema translation makes renames exact here too
-      val nmHistIds: Seq[Int] = histIdsFor("parquet-nm")
-      val allOrc = ts.nonEmpty && ts.forall(_.file.format == "orc") &&
-        orcHistIds.isEmpty
+      val renamed = table.meta.schemas
+        .filter(GraftSparkTable.namesDiffer(table.schema, _)).map(_.schemaId).toSet
+      // ORC files written under an EARLIER schema whose top-level names
+      // differ read on the row path under their write-time names
+      val allOrc = ts.nonEmpty &&
+        ts.forall(t => t.file.format == "orc" && !renamed(t.writeSchemaId))
       // shredded metadata columns stay columnar only when EVERY planned
       // file physically carries the requested materialized columns
       // (parquet + "mat:" markers) — one legacy file degrades the scan to
       // the row path's per-file mat/binary dispatch
       val shredBatchOk = shredReq.isEmpty ||
-        (!conservative && allParquet &&
-          ts.forall(t => shredReq.forall(sp =>
-            t.file.shredStats.contains(sp.matKey))))
+        (allParquet && ts.forall(t => shredReq.forall(sp =>
+          t.file.shredStats.contains(sp.matKey))))
       // delete-masked batches slice vectors through FilteredVector, which
       // serves flat getters only — variant values resolve through child
       // vectors (ColumnVector.getVariant is final over getChild), so a
@@ -1652,12 +1693,10 @@ object GraftSparkTable {
       // position deletes drop the dead rows. Requires parquet batches and
       // top-level batch-supported key columns.
       val fieldNameOfId = table.schema.fields.map(f => f.id -> f.name).toMap
-      val eqIds: Seq[Int] =
-        if (conservative) Nil
-        else ts.iterator.flatMap(_.deletes.iterator
-          .filter(_.content == FileContent.EqualityDeletes)
-          .flatMap(_.equalityIds)).toSeq.distinct.sorted
-      val eqBatchOk = !conservative && eqIds.nonEmpty && allParquet &&
+      val eqIds: Seq[Int] = ts.iterator.flatMap(_.deletes.iterator
+        .filter(_.content == FileContent.EqualityDeletes)
+        .flatMap(_.equalityIds)).toSeq.distinct.sorted
+      val eqBatchOk = eqIds.nonEmpty && allParquet &&
         eqIds.forall(id => fieldNameOfId.get(id).exists { n =>
           val i = fullSchema.fieldNames.indexOf(n)
           i >= 0 &&
@@ -1669,357 +1708,48 @@ object GraftSparkTable {
           d.content == FileContent.PositionDeletes ||
             (d.content == FileContent.EqualityDeletes && eqBatchOk))) &&
         (!variantInRead || ts.forall(_.deletes.isEmpty))
-      // row-path dispatch per format (mirrors createReader): clean =
-      // filtered split-respecting read; nf = full-file read (pos-delete
-      // masking, _pos, lineage); eq-delete tasks take eqMaskedRows
-      val cleanFormats: Set[String] =
-        if (conservative) formats
-        else if (columnarOk || needPosRow) Set.empty
-        else ts.iterator.filter(_.deletes.isEmpty).map(_.file.format).toSet
-      val nfFormats: Set[String] =
-        if (conservative) formats
-        else if (columnarOk) Set.empty
-        else ts.iterator
-          .filter(t => !t.deletes.exists(_.content == FileContent.EqualityDeletes) &&
-            (needPosRow || t.deletes.nonEmpty))
-          .map(_.file.format).toSet
-
-      // each build mutates + broadcasts its conf: every reader needs its own
-      def freshConf = new org.apache.hadoop.conf.Configuration(conf)
-      val parquetBatch = columnarOk && allParquet
-      // columnar shred scans read the materialized columns as ordinary
-      // trailing batch columns (field-id resolution) — the reader factory
-      // slots them into the requested metadata positions
-      val batchRequired =
-        if (shredReq.isEmpty || !parquetBatch) dataRequired
-        else StructType(dataRequired.fields ++ shredMatFields)
-      val batchDataSchema =
-        if (shredReq.isEmpty || !parquetBatch) fullSchema
-        else StructType(fullSchema.fields ++ shredMatFields)
-      val batchFunc =
-        if (parquetBatch && !needPosV && (conservative || ts.exists(_.deletes.isEmpty)))
-          fmt.buildReaderWithPartitionValues(spark, batchDataSchema, new StructType(),
-            batchRequired, v1Filters, Map(FileFormat.OPTION_RETURNING_BATCH -> "true"), freshConf)
-        else null
-      // equality-delete keyed batches: the delete-key columns ride along
-      // as trailing batch columns (dropped after masking)
-      val eqBatchFields: Array[org.apache.spark.sql.types.StructField] =
-        if (!(eqBatchOk && parquetBatch)) Array.empty
+      // equality-masked batches carry the delete-key columns the data
+      // columns lack as trailing columns (dropped after masking)
+      val eqKeyFields =
+        if (!(eqBatchOk && columnarOk)) Nil
         else eqIds.flatMap(fieldNameOfId.get).distinct
-          .filterNot(batchRequired.fieldNames.contains)
-          .map(n => fullSchema(fullSchema.fieldIndex(n))).toArray
-      val batchRequiredEq = StructType(batchRequired.fields ++ eqBatchFields)
-      /** fieldId → (column index in the eq-extended batch, its type) */
-      val eqBatchPos: Map[Int, (Int, org.apache.spark.sql.types.DataType)] =
-        if (!(eqBatchOk && parquetBatch)) Map.empty
-        else {
-          val idx = batchRequiredEq.fieldNames.zipWithIndex.toMap
-          eqIds.flatMap(id => fieldNameOfId.get(id).flatMap(idx.get)
-            .map(p => id -> (p, batchRequiredEq(p).dataType))).toMap
-        }
-      // eq-only tasks (no position deletes, no _pos) keep filtered split
-      // reads: eq masking needs no file positions, so pushdown survives
-      val batchFuncEq =
-        if (eqBatchOk && parquetBatch && !needPosV &&
-          ts.exists(t => t.deletes.nonEmpty &&
-            t.deletes.forall(_.content == FileContent.EqualityDeletes)))
-          fmt.buildReaderWithPartitionValues(spark, batchDataSchema, new StructType(),
-            batchRequiredEq, v1Filters,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "true"), freshConf)
-        else null
-      // full-file batches (no filters) so batch-relative offsets equal file
-      // positions — used to mask position deletes inside columnar reads
-      val batchFuncNoFilter =
-        if (parquetBatch && (needPosV || conservative || ts.exists(_.deletes.nonEmpty)))
-          fmt.buildReaderWithPartitionValues(spark, batchDataSchema, new StructType(),
-            if (eqBatchOk) batchRequiredEq else batchRequired, Nil,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "true"), freshConf)
-        else null
-      val rowFunc =
-        if (cleanFormats("parquet"))
-          fmt.buildReaderWithPartitionValues(spark, fullSchema, new StructType(),
-            dataRequired, v1Filters,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-              "enableVectorizedReader" -> "false"), freshConf)
-        else null
-      // row lineage: when _row_id / _last_updated_sequence_number are
-      // requested, extend the read schema with the MATERIALIZED lineage
-      // columns (reserved field ids) — rewritten files carry them, older
-      // files read null and fall back to metadata inheritance
-      val dataReadNF =
-        if (wantLineage) StructType(dataRequired.fields ++ lineageReadFields)
-        else dataRequired
-      val dataReadNFBin =
-        if (shredReq.isEmpty) dataReadNF
-        else StructType(dataReadNF.fields ++ shredMissingParents)
-      val fullSchemaNF =
-        if (wantLineage) StructType(fullSchema.fields ++ lineageReadFields)
-        else fullSchema
-      // delete-bearing / position-tracking tasks: full-file row read so the
-      // emitted row index equals the file position
-      val rowFuncNoFilter =
-        if (nfFormats("parquet"))
-          fmt.buildReaderWithPartitionValues(spark, fullSchemaNF,
-            new StructType(), dataReadNF, Nil,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-              "enableVectorizedReader" -> "false"), freshConf)
-        else null
-      // shred-scan parquet readers: mat = typed file columns appended
-      // (reserved ids resolve like any evolved column — the 100 TB hot
-      // path never parses the variant binary); bin = parent variant
-      // appended for the per-row fallback on pre-spec files
-      val rowOpts = Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-        "enableVectorizedReader" -> "false")
-      val shredMatRowFunc =
-        if (shredReq.isEmpty) null
-        else fmt.buildReaderWithPartitionValues(spark,
-          StructType(fullSchema.fields ++ shredMatFields), new StructType(),
-          StructType(dataRequired.fields ++ shredMatFields), v1Filters,
-          rowOpts, freshConf)
-      val shredBinRowFunc =
-        if (shredReq.isEmpty) null
-        else fmt.buildReaderWithPartitionValues(spark, fullSchema,
-          new StructType(), dataRequiredBin, v1Filters, rowOpts, freshConf)
-      val shredMatRowFuncNF =
-        if (shredReq.isEmpty) null
-        else fmt.buildReaderWithPartitionValues(spark,
-          StructType(fullSchemaNF.fields ++ shredMatFields), new StructType(),
-          StructType(dataReadNF.fields ++ shredMatFields), Nil,
-          rowOpts, freshConf)
-      val shredBinRowFuncNF =
-        if (shredReq.isEmpty) null
-        else fmt.buildReaderWithPartitionValues(spark, fullSchemaNF,
-          new StructType(), dataReadNFBin, Nil, rowOpts, freshConf)
-      // delete files, one reader per format present (parquet by field id,
-      // ORC/avro by name — genuine external delete files with the
-      // reserved field ids read identically). Equality-delete files read
-      // the nullable full schema: field-id resolution nulls the columns a
-      // file does not key on
-      val (deleteFunc, avroDeleteFunc, orcDeleteFunc) =
-        deleteReaders(spark, conf, GraftDeltaWriter.DeleteSchema,
-          if (anyNonDvPos) posDelFmts else Set.empty)
-      val (eqDeleteFunc, avroEqDeleteFunc, orcEqDeleteFunc) =
-        if (!anyEq) (null, null, null)
-        else deleteReaders(spark, conf, nullableSchema(fullSchema), eqDelFmts)
-      // equality-delete masking needs the identifier columns regardless of
-      // pruning: data files with equality deletes read the full schema
-      val rowFuncFull =
-        if (anyEq)
-          fmt.buildReaderWithPartitionValues(spark, fullSchema,
-            new StructType(), fullSchema, Nil,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-              "enableVectorizedReader" -> "false"), freshConf)
-        else null
-      // lineage-extended variant of the full-schema read: the eq-delete
-      // masking path must also surface the MATERIALIZED lineage columns,
-      // or compacted files (fresh firstRowId) would fall back to
-      // firstRowId + pos and report wrong _row_id values
-      val rowFuncFullLin =
-        if (anyEq && wantLineage)
-          fmt.buildReaderWithPartitionValues(spark,
-            StructType(fullSchema.fields ++ lineageReadFields), new StructType(),
-            StructType(fullSchema.fields ++ lineageReadFields), Nil,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-              "enableVectorizedReader" -> "false"), freshConf)
-        else rowFuncFull
-      // imported files (add_files/snapshot_table) have no field ids: read
-      // them by NAME with the id metadata stripped (reference name-mapping,
-      // schema.name-mapping.default)
-      def stripIds(st: StructType): StructType =
-        GraftSparkTable.stripFieldIds(st)
-      lazy val nameConf = {
-        val c = new org.apache.hadoop.conf.Configuration(conf)
-        c.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
-        c
-      }
-      def freshNameConf = new org.apache.hadoop.conf.Configuration(nameConf)
-      val nameRowFunc =
-        if (cleanFormats("parquet-nm"))
-          fmt.buildReaderWithPartitionValues(spark, stripIds(fullSchema),
-            new StructType(), stripIds(dataRequiredBin), v1Filters,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-              "enableVectorizedReader" -> "false"), freshNameConf)
-        else null
-      val nameRowFuncNoFilter =
-        if (nfFormats("parquet-nm"))
-          fmt.buildReaderWithPartitionValues(spark, stripIds(fullSchemaNF),
-            new StructType(), stripIds(dataReadNFBin), Nil,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-              "enableVectorizedReader" -> "false"), freshNameConf)
-        else null
-      // id-mapped imports (column-mapped Delta, "parquet-im"): the
-      // table schema carries the FILE's field ids, so the ordinary
-      // field-id-resolved parquet row readers serve them — these two
-      // differ from rowFunc/rowFuncNoFilter only in reading the
-      // Bin-extended schemas so identityFill positions line up with the
-      // nm row schemas used for the constant projection
-      val imRowFunc =
-        if (cleanFormats("parquet-im"))
-          fmt.buildReaderWithPartitionValues(spark, fullSchema,
-            new StructType(), dataRequiredBin, v1Filters,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-              "enableVectorizedReader" -> "false"), freshConf)
-        else null
-      val imRowFuncNF =
-        if (nfFormats("parquet-im"))
-          fmt.buildReaderWithPartitionValues(spark, fullSchemaNF,
-            new StructType(), dataReadNFBin, Nil,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-              "enableVectorizedReader" -> "false"), freshConf)
-        else null
-      // imported ORC files: Spark's ORC reader resolves columns by name
-      lazy val orcFmt = new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
-      val orcRowFunc =
-        if (cleanFormats("orc") || cleanFormats("orc-nm"))
-          orcFmt.buildReaderWithPartitionValues(spark, stripIds(fullSchema),
-            new StructType(), stripIds(dataRequiredBin), v1Filters,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-              "enableVectorizedReader" -> "false"), freshNameConf)
-        else null
-      val orcRowFuncNoFilter =
-        if (nfFormats("orc") || nfFormats("orc-nm"))
-          orcFmt.buildReaderWithPartitionValues(spark, stripIds(fullSchemaNF),
-            new StructType(), stripIds(dataReadNFBin), Nil,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-              "enableVectorizedReader" -> "false"), freshNameConf)
-        else null
-      val orcBatchFunc =
-        if (columnarOk && allOrc && !needPosV && (conservative || ts.exists(_.deletes.isEmpty)))
-          orcFmt.buildReaderWithPartitionValues(spark, stripIds(fullSchema),
-            new StructType(), stripIds(dataRequired), v1Filters,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "true"), freshNameConf)
-        else null
-      val orcBatchFuncNoFilter =
-        if (columnarOk && allOrc && (needPosV || conservative || ts.exists(_.deletes.nonEmpty)))
-          orcFmt.buildReaderWithPartitionValues(spark, stripIds(fullSchema),
-            new StructType(), stripIds(dataRequired), Nil,
-            Map(FileFormat.OPTION_RETURNING_BATCH -> "true"), freshNameConf)
-        else null
-      // per-historical-schema ORC row funcs: request each field under its
-      // WRITE-TIME top-level name (position-aligned with the current
-      // required schema, so downstream projection is untouched); fields
-      // absent at write time read null under a unique placeholder.
-      // Filters are dropped — their names reference the current schema.
-      val orcHistRow: Map[Int, (PartitionedFile => Iterator[InternalRow],
-          PartitionedFile => Iterator[InternalRow])] = {
-        val cur = table.schema
-        def translate(st: StructType, hist: graft.core.types.GSchema): StructType =
-          GraftSparkTable.translateTopNames(st, cur, hist)
-        orcHistIds.flatMap { id =>
-          table.meta.schemas.find(_.schemaId == id)
-            .filter(GraftSparkTable.namesDiffer(cur, _)).map { hist =>
-            val full = translate(stripIds(fullSchema), hist)
-            val fullNF = translate(stripIds(fullSchemaNF), hist)
-            val f = orcFmt.buildReaderWithPartitionValues(spark, full,
-              new StructType(), translate(stripIds(dataRequiredBin), hist), Nil,
-              Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-                "enableVectorizedReader" -> "false"), freshNameConf)
-            val fNF = orcFmt.buildReaderWithPartitionValues(spark, fullNF,
-              new StructType(), translate(stripIds(dataReadNFBin), hist), Nil,
-              Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-                "enableVectorizedReader" -> "false"), freshNameConf)
-            id -> (f, fNF)
-          }
-        }.toMap
-      }
-      // full-schema (equality-masking) readers for the name-resolved
-      // formats, keyed by (format, writeSchemaId); -1 = current names.
-      // Without these, an ORC or imported file carrying equality deletes
-      // fell through to the parquet full reader and crashed.
-      val nameFullRow: Map[(String, Int), PartitionedFile => Iterator[InternalRow]] = {
-        if (!anyEq) Map.empty
-        else {
-          val fullEq =
-            if (wantLineage) StructType(fullSchema.fields ++ lineageReadFields)
-            else fullSchema
-          val rowOpts = Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-            "enableVectorizedReader" -> "false")
-          def mk(fmtName: String, st: StructType)
-              : PartitionedFile => Iterator[InternalRow] =
-            if (fmtName == "orc")
-              orcFmt.buildReaderWithPartitionValues(spark, st,
-                new StructType(), st, Nil, rowOpts, freshNameConf)
-            else fmt.buildReaderWithPartitionValues(spark, st,
-              new StructType(), st, Nil, rowOpts, freshNameConf)
-          Seq("orc" -> orcHistIds, "parquet-nm" -> nmHistIds)
-            .filter { case (n, _) => if (n == "orc") anyOrcFmt else formats(n) }
-            .flatMap { case (n, ids) =>
-              val base = ((n, -1) -> mk(n, stripIds(fullEq)))
-              val hist = ids.flatMap(id =>
-                table.meta.schemas.find(_.schemaId == id).map(h => (n, id) ->
-                  mk(n, GraftSparkTable.translateTopNames(
-                    stripIds(fullEq), table.schema, h))))
-              base +: hist
-            }.toMap
-        }
-      }
-      // same, for name-resolved imported parquet (field-id matching off)
-      val nmHistRow: Map[Int, (PartitionedFile => Iterator[InternalRow],
-          PartitionedFile => Iterator[InternalRow])] = {
-        val cur = table.schema
-        nmHistIds.flatMap { id =>
-          table.meta.schemas.find(_.schemaId == id)
-            .filter(GraftSparkTable.namesDiffer(cur, _)).map { hist =>
-            def tr(st: StructType): StructType =
-              GraftSparkTable.translateTopNames(st, cur, hist)
-            val f = fmt.buildReaderWithPartitionValues(spark,
-              tr(stripIds(fullSchema)), new StructType(),
-              tr(stripIds(dataRequiredBin)), Nil,
-              Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-                "enableVectorizedReader" -> "false"), freshNameConf)
-            val fNF = fmt.buildReaderWithPartitionValues(spark,
-              tr(stripIds(fullSchemaNF)), new StructType(),
-              tr(stripIds(dataReadNFBin)), Nil,
-              Map(FileFormat.OPTION_RETURNING_BATCH -> "false",
-                "enableVectorizedReader" -> "false"), freshNameConf)
-            id -> (f, fNF)
-          }
-        }.toMap
-      }
-      // avro data files: our own sync-splittable row reader (no spark-avro
-      // connector on this classpath); filters re-applied by Spark above.
-      // These broadcast nothing — cheap to construct when avro is present.
-      val needAvro = formats("avro")
-      val avroRowFunc = if (needAvro) GraftAvro.ReadFunc(dataRequiredBin.json) else null
-      val avroRowFuncNF = if (needAvro) GraftAvro.ReadFunc(dataReadNFBin.json) else null
-      // built when avro DATA files carry eq deletes
-      val avroFullFunc =
-        if (anyEq && needAvro) GraftAvro.ReadFunc(fullSchema.json)
-        else null
-      val avroFullLin =
-        if (needAvro && anyEq && wantLineage)
-          GraftAvro.ReadFunc(StructType(fullSchema.fields ++ lineageReadFields).json)
-        else avroFullFunc
-      new GraftReaderFactory(
-        if (allOrc) orcBatchFunc else batchFunc,
-        rowFunc, rowFuncNoFilter, deleteFunc,
-        columnarOk, metaCols, rowFuncFull, fullSchema, dataRequired,
-        table.schema.fields.map(f => f.id -> f.name).toMap,
-        nameRowFunc, nameRowFuncNoFilter,
-        if (allOrc) orcBatchFuncNoFilter else batchFuncNoFilter,
-        orcRowFunc, orcRowFuncNoFilter,
-        orcHistRow = orcHistRow,
-        nmHistRow = nmHistRow,
-        nameFullRow = nameFullRow,
+          .filterNot(n => dataRequired.fieldNames.contains(n) ||
+            shredMatFields.exists(_.name == n))
+          .map(n => fullSchema(fullSchema.fieldIndex(n)))
+      val facts = ScanFacts(fullSchema, dataRequired, metaCols, shredMatFields.toSeq,
+        shredMissingParents.toSeq, eqKeyFields, columnarOk, renamed)
+
+      // ------------------------------------------------ one reader per key
+      val descs = ts.map(toDesc(_, shredAll))
+      val readers = descs.map(ReadKey.of(_, facts)).distinct.map { k =>
+        // a file written under since-renamed names reads each column
+        // under its WRITE-TIME top-level name, position-aligned with the
+        // current schema; fields absent at write time read null under a
+        // placeholder. Filters are dropped: their names are current ones.
+        val names: StructType => StructType =
+          if (k.schemaId < 0) identity
+          else GraftSparkTable.translateTopNames(_, table.schema,
+            table.meta.schemas.find(_.schemaId == k.schemaId).get)
+        k -> buildReader(spark, conf, k.resolve, names(facts.dataSchema(k)),
+          names(facts.readSchema(k)),
+          if (k.shape == ReadKey.Split && k.schemaId < 0) v1Filters else Nil,
+          k.batch)
+      }.toMap
+      // delete files carry their OWN format independently of the data
+      // (reference DeleteFilter dispatches per DeleteFile.format()) —
+      // Flink-shaped external trees write Avro deletes over Parquet data
+      val deletes = deleteReaders(spark, conf,
+        descs.flatMap(ReadKey.deletesOf).distinct, fullSchema)
+      val formats = ts.iterator.map(_.file.format).toSet
+      new GraftReaderFactory(facts, readers, deletes,
+        fieldNamesById = fieldNameOfId,
         defaultSpecId = table.spec.specId,
         partTypes = table.spec.partitionType(table.schema).fields.map(_.tpe).toArray,
-        avroRowFunc = avroRowFunc, avroFullFunc = avroFullFunc,
-        avroRowFuncNF = avroRowFuncNF, lineageExt = wantLineage,
-        rowFuncFullLin = rowFuncFullLin,
-        avroFullLin = avroFullLin,
         partStruct = partStructT,
-        shredBatch = parquetBatch && shredReq.nonEmpty,
         shredReq = shredReq,
-        shredMatRowFunc = shredMatRowFunc, shredBinRowFunc = shredBinRowFunc,
-        shredMatRowFuncNF = shredMatRowFuncNF,
-        shredBinRowFuncNF = shredBinRowFuncNF,
         shredParentRel = shredParentRel, shredParentFull = shredParentFull,
-        batchFuncEq = batchFuncEq, eqBatchPos = eqBatchPos,
         crypto = graft.core.meta.TableCrypto.resolve(table.meta),
         footerCryptoConf = GraftParquetCrypto.readOptions(table.meta),
-        orcDeleteFunc = orcDeleteFunc, avroDeleteFunc = avroDeleteFunc,
-        eqDeleteFunc = eqDeleteFunc, avroEqDeleteFunc = avroEqDeleteFunc,
-        orcEqDeleteFunc = orcEqDeleteFunc,
         identityConsts = {
           // every spec's identity fields whose source resolves in the
           // CURRENT schema (a dropped source column has no projection
@@ -2034,14 +1764,7 @@ object GraftSparkTable {
           if (formats("parquet-nm") || formats("orc-nm") ||
               formats("parquet-im")) bySpec
           else Map.empty
-        },
-        nmRowSchema = stripIds(dataRequiredBin),
-        nmRowSchemaNF = stripIds(dataReadNFBin),
-        nmFullSchema = stripIds(
-          if (wantLineage) StructType(fullSchema.fields ++ lineageReadFields)
-          else fullSchema),
-        imRowFunc = imRowFunc,
-        imRowFuncNF = imRowFuncNF)
+        })
     }
 
     /** (parent, path) → materialized shred file-column name */
@@ -2098,110 +1821,69 @@ object GraftSparkTable {
     }
   }
 
-  /** Executor-side readers. Columnar fast path for delete-free partitions;
-    * row path applies position-delete masks by file row index and appends
-    * requested metadata columns (_file, _pos). */
+  /** Executor-side readers. Each task reads through the reader of its
+    * `ReadKey.of(task, facts)` — columnar batches when the scan is
+    * columnar, position-delete masks applied by file row index, equality
+    * deletes by key — and gets the requested metadata columns (_file,
+    * _pos, ...) appended. `readers` and `deleteReaders` hold one reader
+    * per key of the tasks (and their delete files) the factory was built
+    * for. */
   final class GraftReaderFactory(
-      batchFunc: PartitionedFile => Iterator[InternalRow],
-      rowFunc: PartitionedFile => Iterator[InternalRow],
-      rowFuncNoFilter: PartitionedFile => Iterator[InternalRow],
-      deleteFunc: PartitionedFile => Iterator[InternalRow],
-      vectorized: Boolean,
-      metaCols: Array[String],
-      rowFuncFull: PartitionedFile => Iterator[InternalRow],
-      fullSchema: StructType,
-      dataRequired: StructType,
+      private[spark] val facts: ScanFacts,
+      readers: Map[ReadKey, Reader],
+      deleteReaders: Map[ReadKey, Reader],
       fieldNamesById: Map[Int, String],
-      nameRowFunc: PartitionedFile => Iterator[InternalRow],
-      nameRowFuncNoFilter: PartitionedFile => Iterator[InternalRow],
-      batchFuncNoFilter: PartitionedFile => Iterator[InternalRow],
-      orcRowFunc: PartitionedFile => Iterator[InternalRow],
-      orcRowFuncNoFilter: PartitionedFile => Iterator[InternalRow],
-      // per-write-schema ORC readers (filtered / no-filter): files written
-      // before a rename resolve columns by their write-time names
-      orcHistRow: Map[Int, (PartitionedFile => Iterator[InternalRow],
-        PartitionedFile => Iterator[InternalRow])] = Map.empty,
-      nmHistRow: Map[Int, (PartitionedFile => Iterator[InternalRow],
-        PartitionedFile => Iterator[InternalRow])] = Map.empty,
-      // full-schema eq-masking readers for name-based formats, keyed by
-      // (format, writeSchemaId); (format, -1) = current names
-      nameFullRow: Map[(String, Int), PartitionedFile => Iterator[InternalRow]] =
-        Map.empty,
-      defaultSpecId: Int = 0,
-      partTypes: Array[GType] = Array.empty,
-      avroRowFunc: PartitionedFile => Iterator[InternalRow] = null,
-      avroFullFunc: PartitionedFile => Iterator[InternalRow] = null,
-      avroRowFuncNF: PartitionedFile => Iterator[InternalRow] = null,
-      // no-filter reads carry 2 extra trailing materialized-lineage columns
-      lineageExt: Boolean = false,
-      rowFuncFullLin: PartitionedFile => Iterator[InternalRow] = null,
-      avroFullLin: PartitionedFile => Iterator[InternalRow] = null,
-      partStruct: StructType = new StructType(),
-      // shredded-variant reads: requested specs (metaCols order), the
-      // mat/bin parquet readers, and parent ordinals for the binary
-      // fallback (rel = bin-extended row, full = fullSchema/eq path);
-      // shredBatch = the columnar funcs read the mat columns as trailing
-      // batch columns
-      shredBatch: Boolean = false,
-      shredReq: Array[GraftSparkTable.ShredSpec] = Array.empty,
-      shredMatRowFunc: PartitionedFile => Iterator[InternalRow] = null,
-      shredBinRowFunc: PartitionedFile => Iterator[InternalRow] = null,
-      shredMatRowFuncNF: PartitionedFile => Iterator[InternalRow] = null,
-      shredBinRowFuncNF: PartitionedFile => Iterator[InternalRow] = null,
-      shredParentRel: Array[Int] = Array.empty,
-      shredParentFull: Array[Int] = Array.empty,
-      // vectorized equality-delete masking: filtered batch reader with
-      // trailing delete-key columns (eq-only tasks), and fieldId →
-      // (batch column index, type) for key-tuple probing — both batch
-      // layouts (filtered-eq and no-filter) place the keys identically
-      batchFuncEq: PartitionedFile => Iterator[InternalRow] = null,
-      eqBatchPos: Map[Int, (Int, org.apache.spark.sql.types.DataType)] = Map.empty,
+      defaultSpecId: Int,
+      partTypes: Array[GType],
+      partStruct: StructType,
+      // shredded-variant reads: requested specs (metaCols order) and
+      // parent ordinals for the binary fallback (rel = bin-extended row,
+      // full = fullSchema/eq path)
+      shredReq: Array[GraftSparkTable.ShredSpec],
+      shredParentRel: Array[Int],
+      shredParentFull: Array[Int],
       // encrypted tables: table key for executor-side DV decryption
-      crypto: Option[graft.core.meta.TableCrypto] = None,
+      crypto: Option[graft.core.meta.TableCrypto],
       // parquet-crypto read options for executor-side footer reads
       // (split tasks derive their first-row index from the footer)
-      footerCryptoConf: Map[String, String] = Map.empty,
-      // per-delete-file format dispatch (reference DeleteFilter keys its
-      // readers on DeleteFile.format()): position delete files in formats
-      // other than the parquet default, and equality delete files in each
-      // format (see deleteReaders)
-      orcDeleteFunc: PartitionedFile => Iterator[InternalRow] = null,
-      avroDeleteFunc: PartitionedFile => Iterator[InternalRow] = null,
-      eqDeleteFunc: PartitionedFile => Iterator[InternalRow] = null,
-      avroEqDeleteFunc: PartitionedFile => Iterator[InternalRow] = null,
-      orcEqDeleteFunc: PartitionedFile => Iterator[InternalRow] = null,
+      footerCryptoConf: Map[String, String],
       // identity-partition constants for name-mapped/id-mapped imports
       // (reference PartitionUtil.constantsMap): specId -> (source column
       // name, partition tuple index). Delta-layout and hive-layout files
       // physically LACK their partition columns — the reader must serve
       // them from the task's partition tuple, or they read as null.
-      // Applied on the nm/im row paths (those never take the columnar
-      // path).
-      identityConsts: Map[Int, Seq[(String, Int)]] = Map.empty,
-      // exact output schemas of the parquet-nm readers (filtered /
-      // no-filter / full-eq), for positioning the constant projection
-      nmRowSchema: StructType = new StructType(),
-      nmRowSchemaNF: StructType = new StructType(),
-      nmFullSchema: StructType = new StructType(),
-      // id-mapped imports (column-mapped Delta): field-id-resolved row
-      // readers over the Bin-extended schemas, constant-filled like nm
-      imRowFunc: PartitionedFile => Iterator[InternalRow] = null,
-      imRowFuncNF: PartitionedFile => Iterator[InternalRow] = null)
+      // Applied on the import formats' row paths (those never take the
+      // columnar path).
+      identityConsts: Map[Int, Seq[(String, Int)]])
     extends PartitionReaderFactory {
 
-    /** wrap a parquet-nm row reader so identity-partition source columns
-      * come from the task's partition tuple instead of the (absent)
-      * file column. No-op for non-import formats and unpartitioned
-      * specs; a codegen'd UnsafeProjection per task otherwise. */
-    private def identityFill(t: TaskDesc, schema: StructType,
-        f: PartitionedFile => Iterator[InternalRow])
-        : PartitionedFile => Iterator[InternalRow] = {
-      if ((t.fileFormat != "parquet-nm" && t.fileFormat != "orc-nm" &&
-        t.fileFormat != "parquet-im") || f == null) return f
+    private def metaCols = facts.metaCols
+    private def fullSchema = facts.fullSchema
+    private def dataRequired = facts.dataRequired
+
+    /** the data-reader keys this factory holds */
+    private[spark] def keys: Set[ReadKey] = readers.keySet
+    /** the delete-reader keys this factory holds */
+    private[spark] def deleteKeys: Set[ReadKey] = deleteReaders.keySet
+
+    /** the key of task `t` and its reader, identity-filled for imports */
+    private def readerOf(t: TaskDesc): (ReadKey, Reader) = {
+      val k = ReadKey.of(t, facts)
+      (k, identityFill(t, k, ReadKey.lookup(readers, k, t.path)))
+    }
+
+    /** wrap an import's row reader `f` of key `k` so identity-partition
+      * source columns come from the task's partition tuple instead of the
+      * (absent) file column. No-op for non-import formats and
+      * unpartitioned specs; a codegen'd UnsafeProjection per task
+      * otherwise. */
+    private def identityFill(t: TaskDesc, k: ReadKey, f: Reader): Reader = {
+      if (t.fileFormat != "parquet-nm" && t.fileFormat != "orc-nm" &&
+        t.fileFormat != "parquet-im") return f
       val consts = identityConsts.getOrElse(t.specId, Nil)
       if (consts.isEmpty) return f
       GraftSparkTable.identityFillProjection(
-          schema, consts, t.partition.toSeq) match {
+          facts.readSchema(k), consts, t.partition.toSeq) match {
         case Some(proj) => pfile => f(pfile).map(proj)
         case None       => f
       }
@@ -2272,10 +1954,10 @@ object GraftSparkTable {
         deletePaths: Array[String], formats: Array[String])
         : org.roaringbitmap.longlong.Roaring64Bitmap =
       GraftSparkTable.deletedPositions(dataPath, deletePaths, formats, crypto,
-        deleteFunc, avroDeleteFunc, orcDeleteFunc)
+        deleteReaders)
 
     override def supportColumnarReads(partition: InputPartition): Boolean =
-      vectorized // scan-level decision: uniform across partitions
+      facts.columnar // scan-level decision: uniform across partitions
 
     /** key positions (fullSchema) + executor-cached deleted-key set of
       * one equality-delete file; keys are canonical values in the delete
@@ -2287,38 +1969,35 @@ object GraftSparkTable {
       val positions = ed.fieldIds.flatMap(id =>
         fieldNamesById.get(id).flatMap(posOf.get))
       (positions, equalityKeys(ed.path, ed.format, positions, fullSchema,
-        eqDeleteFunc, avroEqDeleteFunc, orcEqDeleteFunc))
+        deleteReaders))
     }
 
-    /** rows of `t` masked by its equality (and position) deletes,
-      * projected to the required data columns, with file positions */
-    private def eqMaskedRows(t: TaskDesc)
+    /** fieldId → (column index, type) in an equality-masked batch: the
+      * filtered and unfiltered layouts place the key columns identically */
+    @transient private lazy val eqBatchPos
+        : Map[Int, (Int, org.apache.spark.sql.types.DataType)] = {
+      val st = facts.readSchema(ReadKey(ReadKey.ParquetById, ReadKey.Split,
+        batch = true, eqKeys = true, shred = facts.shred))
+      fieldNamesById.flatMap { case (id, n) =>
+        Some(st.fieldNames.indexOf(n)).filter(_ >= 0).map(p => id -> (p, st(p).dataType))
+      }
+    }
+
+    /** rows of `t`, read in full through `dataFull`, masked by its
+      * equality (and position) deletes, projected to the required data
+      * columns, with file positions */
+    private def eqMaskedRows(t: TaskDesc, dataFull: Reader)
         : Iterator[(InternalRow, Long, java.lang.Long, java.lang.Long, Array[Any])] = {
       // per delete file: the key positions + the set of deleted keys
       val masks: Seq[(Array[Int], java.util.HashSet[Seq[Any]])] =
         t.eqDeletes.toSeq.map(eqKeySet)
       val posDeleted = deletedPositions(t.path, t.deletePaths, t.posDelFormats)
       val project = dataRequired.fields.map(f => fullSchema.fieldIndex(f.name))
-      // when lineage columns are requested, read the lineage-extended
-      // variant so compacted files' materialized _row_id wins over the
-      // firstRowId + pos fallback (mirrors withMetaExt on the pos path)
+      // with lineage requested, the full read carries the materialized
+      // lineage columns, so compacted files' _row_id wins over the
+      // firstRowId + pos fallback (as withMetaExt on the unfiltered path)
       val nFull = fullSchema.length
-      val dataFull =
-        if (t.fileFormat == "avro") { if (lineageExt) avroFullLin else avroFullFunc }
-        else if (t.fileFormat == "orc" || t.fileFormat == "orc-nm" ||
-            t.fileFormat == "parquet-nm") {
-          val key = if (t.fileFormat == "orc-nm") "orc" else t.fileFormat
-          identityFill(t, nmFullSchema,
-            nameFullRow.getOrElse((key, t.writeSchemaId),
-              nameFullRow((key, -1))))
-        }
-        else if (t.fileFormat == "parquet-im")
-          // field-id resolution is rename-proof: no per-write-schema
-          // translation needed, just the identity-constant fill
-          identityFill(t, nmFullSchema,
-            if (lineageExt) rowFuncFullLin else rowFuncFull)
-        else if (lineageExt) rowFuncFullLin
-        else rowFuncFull
+      val lineageExt = facts.lineage
       val posBase = posBaseOf(t)
       dataFull(pf(t.path, t.start, t.length)).zipWithIndex.collect {
         case (row, idx) if !posDeleted.contains(posBase + idx) &&
@@ -2442,11 +2121,11 @@ object GraftSparkTable {
 
     override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
       val tasks = partition.asInstanceOf[GraftInputPartition].tasks
-      val needPosV = metaCols.contains(MetaPosCol)
       // task metrics (reference SparkScan NumSplits/NumDeletes): rows
       // masked out of batches accumulate; read by currentMetricsValues
       var deletesApplied = 0L
       val it: Iterator[ColumnarBatch] = tasks.iterator.flatMap { t =>
+        val (key, batches) = readerOf(t)
         // equality-delete key probes for this task's batches (columns
         // were planned into the batch layout; missing would mis-read)
         val eqMasks: Array[(Array[(Int, org.apache.spark.sql.types.DataType)],
@@ -2463,19 +2142,19 @@ object GraftSparkTable {
             keys.contains(cols.map { case (p, dt) => canonical(r, p, dt) }.toSeq)
           }
         }
-        if (t.deletePaths.isEmpty && t.eqDeletes.isEmpty && !needPosV) {
+        if (key.shape == ReadKey.Split && !key.eqKeys) {
           // filtered split reads; metadata is task-constant except the
           // materialized shred columns, which ride along as trailing
           // batch columns and slot into their requested positions
           val nData = dataRequired.length
-          batchFunc(pf(t.path, t.start, t.length))
+          batches(pf(t.path, t.start, t.length))
             .asInstanceOf[Iterator[ColumnarBatch]].map { cb =>
               if (metaCols.isEmpty) cb
               else {
                 val n = cb.numRows()
                 var shredOrd = -1
                 val metaVecs = metaCols.map { c =>
-                  if (shredBatch && c.startsWith(ShredColPrefix)) {
+                  if (c.startsWith(ShredColPrefix)) {
                     shredOrd += 1
                     cb.column(nData + shredOrd)
                   } else constMetaVec(t, c, n)
@@ -2484,12 +2163,12 @@ object GraftSparkTable {
                 new ColumnarBatch((dataCols ++ metaVecs).toArray, n)
               }
             }
-        } else if (t.deletePaths.isEmpty && !needPosV && batchFuncEq != null) {
+        } else if (key.shape == ReadKey.Split) {
           // eq-only masking on filtered split reads: equality deletes
           // need no file positions, so split + pushdown survive; the
           // trailing key columns are dropped after the probe
           val nData = dataRequired.length
-          batchFuncEq(pf(t.path, t.start, t.length))
+          batches(pf(t.path, t.start, t.length))
             .asInstanceOf[Iterator[ColumnarBatch]].map { cb =>
               val n = cb.numRows()
               val map = new Array[Int](n)
@@ -2507,7 +2186,7 @@ object GraftSparkTable {
               val dataCols = (0 until nData).map(c => masked(cb.column(c)))
               var shredOrd = -1
               val metaVecs = metaCols.map { c =>
-                if (shredBatch && c.startsWith(ShredColPrefix)) {
+                if (c.startsWith(ShredColPrefix)) {
                   shredOrd += 1
                   masked(cb.column(nData + shredOrd))
                 } else constMetaVec(t, c, n) // constants: no mask
@@ -2526,7 +2205,7 @@ object GraftSparkTable {
           var base = posBaseOf(t)
           val nData = dataRequired.length
           val hasEq = eqMasks.nonEmpty
-          batchFuncNoFilter(pf(t.path, t.start, t.length))
+          batches(pf(t.path, t.start, t.length))
             .asInstanceOf[Iterator[ColumnarBatch]].map { cb =>
               val n = cb.numRows()
               val b0 = base
@@ -2548,7 +2227,7 @@ object GraftSparkTable {
               val dataCols = (0 until nData).map(c => masked(cb.column(c)))
               var shredOrd = -1
               val metaVecs = metaCols.map { c =>
-                if (shredBatch && c.startsWith(ShredColPrefix)) {
+                if (c.startsWith(ShredColPrefix)) {
                   shredOrd += 1
                   masked(cb.column(nData + shredOrd))
                 } else c match {
@@ -2575,8 +2254,9 @@ object GraftSparkTable {
 
     override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
       val tasks = partition.asInstanceOf[GraftInputPartition].tasks
-      val needPos = metaCols.contains(MetaPosCol) || lineageExt
+      val lineageExt = facts.lineage
       val it: Iterator[InternalRow] = tasks.iterator.flatMap { t =>
+        val (key, rows) = readerOf(t)
         // one reusable metadata suffix row per task (_file, _spec_id and
         // _partition are constant; _pos is set per row)
         val metaRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(metaCols.length)
@@ -2659,57 +2339,26 @@ object GraftSparkTable {
             withMeta(trimData(row), pos, matRowId, matSeq, shredVals)
           }
         val hasShred = shredReq.nonEmpty
-        if (t.eqDeletes.nonEmpty)
-          eqMaskedRows(t).map { case (row, idx, mRowId, mSeq, sv) =>
+        // mat fast path: parquet files carrying every materialized shred
+        // column serve _shred_* without touching the binary
+        val mat = key.shred
+        if (key.shape == ReadKey.EqMasked)
+          eqMaskedRows(t, rows).map { case (row, idx, mRowId, mSeq, sv) =>
             withMeta(row, idx, mRowId, mSeq, sv) }
-        else if (t.deletePaths.isEmpty && !needPos) {
-          // mat fast path: parquet files carrying every materialized
-          // shred column serve _shred_* without touching the binary
-          val mat = hasShred && t.shredMat && t.fileFormat == "parquet"
-          val f = t.fileFormat match {
-            case "orc" =>
-              orcHistRow.get(t.writeSchemaId).map(_._1).getOrElse(orcRowFunc)
-            case "orc-nm" =>
-              identityFill(t, nmRowSchema,
-                orcHistRow.get(t.writeSchemaId).map(_._1).getOrElse(orcRowFunc))
-            case "parquet-nm" =>
-              identityFill(t, nmRowSchema,
-                nmHistRow.get(t.writeSchemaId).map(_._1).getOrElse(nameRowFunc))
-            case "parquet-im" => identityFill(t, nmRowSchema, imRowFunc)
-            case "avro"       => avroRowFunc
-            case _ =>
-              if (!hasShred) rowFunc
-              else if (mat) shredMatRowFunc else shredBinRowFunc
-          }
-          if (!hasShred) f(pf(t.path, t.start, t.length)).map(withMeta(_, -1L))
-          else f(pf(t.path, t.start, t.length)).map { row =>
+        else if (key.shape == ReadKey.Split) {
+          if (!hasShred) rows(pf(t.path, t.start, t.length)).map(withMeta(_, -1L))
+          else rows(pf(t.path, t.start, t.length)).map { row =>
             val sv = shredValsOf(row, mat, nData, 0)
             withMeta(trimData(row), -1L, shredVals = sv)
           }
         } else {
           // positions deleted for THIS data file across its delete files
           val deleted = deletedPositions(t.path, t.deletePaths, t.posDelFormats)
-          val mat = hasShred && t.shredMat && t.fileFormat == "parquet"
           // unfiltered range read: row index + the split's first-row
           // index == file position (whole files read from 0)
           val posBase = posBaseOf(t)
-          val f = t.fileFormat match {
-            case "orc" =>
-              orcHistRow.get(t.writeSchemaId).map(_._2).getOrElse(orcRowFuncNoFilter)
-            case "orc-nm" =>
-              identityFill(t, nmRowSchemaNF,
-                orcHistRow.get(t.writeSchemaId).map(_._2).getOrElse(orcRowFuncNoFilter))
-            case "parquet-nm" =>
-              identityFill(t, nmRowSchemaNF,
-                nmHistRow.get(t.writeSchemaId).map(_._2).getOrElse(nameRowFuncNoFilter))
-            case "parquet-im" => identityFill(t, nmRowSchemaNF, imRowFuncNF)
-            case "avro"       => avroRowFuncNF
-            case _ =>
-              if (!hasShred) rowFuncNoFilter
-              else if (mat) shredMatRowFuncNF else shredBinRowFuncNF
-          }
           val lin = if (lineageExt) 2 else 0
-          f(pf(t.path, t.start, t.length)).zipWithIndex.collect {
+          rows(pf(t.path, t.start, t.length)).zipWithIndex.collect {
             case (row, idx) if !deleted.contains(posBase + idx) =>
               if (!hasShred) withMetaExt(row, posBase + idx)
               else withMetaExt(row, posBase + idx,

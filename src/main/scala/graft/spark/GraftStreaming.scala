@@ -19,12 +19,13 @@ import graft.core.meta._
   * streaming-skip-overwrite-snapshots opt into skipping them
   * (reference SparkMicroBatchStream + SparkReadOptions); `replace`
   * (compaction) passes silently. Admission control caps files per
-  * micro-batch.
+  * micro-batch. Each micro-batch's reader factory is built from that
+  * batch's own files, so each file reads in its own format.
   */
 final class GraftMicroBatchStream(
     table: GTable,
     maxFilesPerBatch: Option[Int],
-    readerFactory: () => PartitionReaderFactory,
+    readerFactory: Seq[FileScanTask] => PartitionReaderFactory,
     maxRecordsPerBatch: Option[Long] = None,
     branch: Option[String] = None,
     streamFromTs: Option[Long] = None,
@@ -94,7 +95,10 @@ final class GraftMicroBatchStream(
             snaps.foreach(addedFiles) // warm manifest cache off-trigger
             prefetched = snaps
             lastPoll = (System.nanoTime(), snaps) // arms the poll window
-          } catch { case _: Throwable => () /* next trigger falls back sync */ }
+          } catch {
+            // the next trigger plans synchronously and meets the error there
+            case scala.util.control.NonFatal(_) => ()
+          }
           finally prefetchPending.set(false)
         }
       })
@@ -147,11 +151,7 @@ final class GraftMicroBatchStream(
 
   private def addedFilesUncached(snap: Snapshot): Seq[FileScanTask] =
     if (snap.operation != "append") Nil
-    else ManifestIO.readList(snap.manifestListPath)
-      .filter(_.addedSnapshotId == snap.snapshotId)
-      .flatMap(mf => ManifestIO.readEntries(mf))
-      .filter(e => e.status == ManifestEntryStatus.Added &&
-        e.snapshotId == snap.snapshotId)
+    else ManifestIO.addedEntries(snap)
       .map(e => FileScanTask(e.file, 0L, e.file.fileSizeBytes,
         graft.core.expr.TrueE, Nil, e.dataSequenceNumber,
         writeSchemaId = e.writeSchemaId.orElse(snap.schemaId).getOrElse(-1)))
@@ -242,13 +242,19 @@ final class GraftMicroBatchStream(
         val until = if (snap.sequenceNumber == e.seq) e.fileIdx else fs.size
         fs.slice(from, until)
       }
-    // one file per partition; streaming batches are small by construction
+    // one file per partition; streaming batches are small by construction.
+    // Spark asks for the reader factory after the partitions, so the
+    // factory is built for exactly these files
+    planned = files
     val shreds = GraftSparkTable.shredSpecsOf(table.meta.properties, table.schema)
     files.map(t => GraftSparkTable.GraftInputPartition(
       Array(GraftSparkTable.toDesc(t, shreds))): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = readerFactory()
+  /** the files the latest planInputPartitions returned */
+  @volatile private var planned: Seq[FileScanTask] = Nil
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory(planned)
 
   override def deserializeOffset(json: String): Offset = GraftStreamingOffset.fromJson(json)
   override def commit(end: Offset): Unit = ()

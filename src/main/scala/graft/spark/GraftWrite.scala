@@ -655,7 +655,7 @@ object EqDeleteFiles {
     // min/max of the key columns (values are already in memory): the
     // delta conflict validation prunes concurrent operations by these
     // bounds — without them every pair of concurrent row-level ops on
-    // the table would conservatively abort
+    // the table would abort as a possible conflict
     val stats = eqSchema.fields.indices.flatMap { i =>
       val t = try Some(SparkBridge.gTypeOf(eqSchema.fields(i).dataType))
         catch { case _: IllegalArgumentException => None }

@@ -150,4 +150,77 @@ class MixedDeleteFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ids("gmd.db.mixed") == (0L until 24L).filter(_ % 4 == 3),
       "mixed-format deletes over one data file misapplied")
   }
+
+  test("one reader decision: a factory holds exactly its tasks' read keys") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import GraftSparkTable.{GraftInputPartition, GraftReaderFactory, ReadKey}
+    def set(props: String): Unit =
+      spark.sql(s"ALTER TABLE gmd.db.keys SET TBLPROPERTIES ($props)")
+    // one data file per insert
+    def insert(from: Long, until: Long): Unit =
+      spark.range(from, until).selectExpr("id", "concat('r', string(id)) AS w")
+        .coalesce(1).writeTo("gmd.db.keys").append()
+    spark.sql("""CREATE TABLE gmd.db.keys (id BIGINT, v STRING)
+      TBLPROPERTIES ('write.format.default'='orc',
+                     'write.delete.mode'='merge-on-read')""")
+    // ORC written before a rename, masked by an equality delete
+    spark.sql("SELECT id, concat('r', string(id)) AS v FROM range(1, 4)")
+      .coalesce(1).writeTo("gmd.db.keys").append()
+    spark.sql("ALTER TABLE gmd.db.keys RENAME COLUMN v TO w")
+    spark.sql("ALTER TABLE gmd.db.keys SET IDENTIFIER FIELDS id")
+    set("'write.delete.equality-enabled'='true'")
+    spark.sql("DELETE FROM gmd.db.keys WHERE id = 2")
+    // parquet masked by a position delete
+    set("'write.delete.equality-enabled'='false', 'write.format.default'='parquet'")
+    insert(4, 7)
+    spark.sql("DELETE FROM gmd.db.keys WHERE id = 5")
+    // a name-mapped parquet import (no field ids)
+    val ext = Files.createTempDirectory("mdf-keys").toString
+    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
+    spark.range(7, 9).selectExpr("id", "concat('i', string(id)) AS w")
+      .coalesce(1).write.parquet(s"$ext/imp")
+    spark.conf.unset("spark.sql.parquet.fieldId.write.enabled")
+    spark.sql(s"CALL gmd.system.add_files('db.keys', '$ext/imp')")
+    // Avro masked by a DV, then a clean parquet file
+    set("'write.format.default'='avro', 'write.delete.format'='dv'")
+    insert(10, 13)
+    spark.sql("DELETE FROM gmd.db.keys WHERE id = 11")
+    set("'write.format.default'='parquet'")
+    insert(13, 14)
+    assert(ids("gmd.db.keys") == Seq(1L, 3L, 4L, 6L, 7L, 8L, 10L, 12L, 13L))
+
+    def scanOf(table: String): BatchScanExec =
+      spark.table(table).queryExecution.sparkPlan
+        .collectFirst { case b: BatchScanExec => b }.get
+    val scan = scanOf("gmd.db.keys")
+    val factory = scan.readerFactory.asInstanceOf[GraftReaderFactory]
+    val tasks = scan.inputPartitions.flatMap(_.asInstanceOf[GraftInputPartition].tasks)
+    assert(tasks.map(_.fileFormat).toSet === Set("orc", "parquet", "parquet-nm", "avro"))
+    assert(tasks.exists(_.deletePaths.exists(graft.core.meta.DVIO.isDV)))
+    // nothing extra, nothing missing
+    assert(factory.keys === tasks.map(ReadKey.of(_, factory.facts)).toSet)
+    assert(factory.deleteKeys === tasks.flatMap(ReadKey.deletesOf).toSet)
+    // every resolution, every row shape, a write-time schema, both
+    // delete contents
+    assert(factory.keys.map(_.resolve) === Set(ReadKey.ParquetById,
+      ReadKey.ParquetByName, ReadKey.Orc, ReadKey.Avro))
+    assert(factory.keys.map(_.shape) === Set(ReadKey.Split, ReadKey.Unfiltered,
+      ReadKey.EqMasked))
+    assert(factory.keys.exists(k => k.resolve == ReadKey.Orc && k.schemaId >= 0))
+    assert(factory.deleteKeys.map(_.shape) ===
+      Set(ReadKey.PositionDeletes, ReadKey.EqualityDeletes))
+
+    // a task handed to a factory built without its key fails on the
+    // lookup, naming the key and the file
+    spark.sql("CREATE TABLE gmd.db.keys_pq (id BIGINT, w STRING)")
+    spark.sql("INSERT INTO gmd.db.keys_pq VALUES (1, 'a')")
+    val pqFactory = scanOf("gmd.db.keys_pq").readerFactory
+      .asInstanceOf[GraftReaderFactory]
+    val orcTask = tasks.find(_.fileFormat == "orc").get
+    val err = intercept[IllegalStateException] {
+      pqFactory.createReader(GraftInputPartition(Array(orcTask))).next()
+    }
+    assert(err.getMessage.contains(ReadKey.of(orcTask, pqFactory.facts).toString) &&
+      err.getMessage.contains(orcTask.path), err.getMessage)
+  }
 }

@@ -253,5 +253,31 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql("SELECT file_format FROM graft.db.stream_mixed.files")
       .collect().map(_.getString(0).toLowerCase).sorted.toSeq === Seq("orc", "parquet"))
     assert(streamIds("stream_mixed") === Seq(1L, 2L))
+    // a running stream whose next micro-batch brings a file of another
+    // format: each micro-batch builds its readers from its own files
+    def switchFormat(name: String, first: String, second: String): Seq[Long] = {
+      spark.sql(s"""CREATE TABLE graft.db.$name (id BIGINT, v STRING)
+        TBLPROPERTIES ('write.format.default'='$first')""")
+      spark.sql(s"CREATE TABLE graft.db.${name}_dst (id BIGINT, v STRING)")
+      spark.sql(s"INSERT INTO graft.db.$name VALUES (1, 'a')")
+      val q = spark.readStream.table(s"graft.db.$name")
+        .writeStream
+        .option("checkpointLocation",
+          Files.createTempDirectory(s"graft-ckpt-$name").toString)
+        .trigger(Trigger.ProcessingTime(200))
+        .toTable(s"graft.db.${name}_dst")
+      try {
+        q.processAllAvailable()
+        spark.sql(s"""ALTER TABLE graft.db.$name
+          SET TBLPROPERTIES ('write.format.default'='$second')""")
+        spark.sql(s"INSERT INTO graft.db.$name VALUES (2, 'b')")
+        q.processAllAvailable()
+      } finally q.stop()
+      spark.sql(s"SELECT id FROM graft.db.${name}_dst ORDER BY id")
+        .collect().map(_.getLong(0)).toSeq
+    }
+    assert(switchFormat("switch_pq_orc", "parquet", "orc") === Seq(1L, 2L))
+    assert(switchFormat("switch_orc_pq", "orc", "parquet") === Seq(1L, 2L))
+    assert(switchFormat("switch_pq_avro", "parquet", "avro") === Seq(1L, 2L))
   }
 }
