@@ -1071,7 +1071,7 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
       } else {
         // everything the tasks need, built once before the job: the live
         // data paths under both matching keys, the scan's delete readers
-        // and the DML delete writer's parquet output
+        // and the DML delete writer's delete-file output
         val liveByKey = liveData.map(p => GraftIO.stripScheme(p) -> p).toMap
         val liveBySuffix = liveData.toSeq.groupBy(GraftIO.dataSuffix).map {
           case (sfx, ps) => sfx -> (if (ps.size == 1) ps.headOption else None)
@@ -1090,9 +1090,10 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
         // OUTPUT is one DV per referenced data file
         val dvMode = t.meta.formatVersion >= 3 ||
           t.meta.properties.get("write.delete.format").contains("dv")
-        val (delOwf, delConf) =
-          if (dvMode) (null, Map.empty[String, String])
-          else GraftDeltaWriter.parquetDeleteOutput(spark, t.meta)
+        val deletes =
+          if (dvMode) null
+          else DeleteOutput(spark, t, GraftDeltaWriter.DeleteSchema,
+            GraftDeltaWriter.DeleteGSchema, "parquet")
         val loc = t.location
         // partial progress (reference partial-progress.enabled/
         // max-commits): deterministic group order → stable batches; each
@@ -1132,9 +1133,7 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
               val dels = mutable.ArrayBuffer.empty[(String, Long)]
               kept.foreach { case (dataPath, bm) =>
                 DVIO.positions(bm).foreach(p => dels += ((dataPath, p))) }
-              val conf = new org.apache.hadoop.conf.Configuration(false)
-              delConf.foreach { case (k, v) => conf.set(k, v) }
-              Seq(GraftDeltaWriter.writeDeleteFile(loc, "parquet", delOwf, conf,
+              Seq(GraftDeltaWriter.writeDeleteFile(deletes,
                 ctx.partitionId(), ctx.taskAttemptId(), specId, partition, dels))
             }
           }.collect()
@@ -2346,6 +2345,15 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
       val dvInfo = mutable.Map.empty[String, (String, Long, Long, Long)]
       // original path -> (staged, newFileSize)
       val posInfo = mutable.Map.empty[String, (String, Long)]
+      // parquet/ORC delete files rewrite in a session of their own whose
+      // field-id writing is forced on, so the rewritten tree stays
+      // externally readable whatever the caller's session says — and no
+      // other query of the caller's session sees a changed conf
+      lazy val idSession = {
+        val s = SparkSession.active.newSession()
+        s.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+        s
+      }
       if (tCrypto.isEmpty) {
         entriesByMf.values.flatten
           .filter(_.file.content == FileContent.PositionDeletes)
@@ -2394,7 +2402,7 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
               posInfo(f.path) = (staged, GraftIO.size(staged))
             } else if (f.format == "parquet" || f.format == "orc") {
               import org.apache.spark.sql.functions.{col, concat, expr, lit, when}
-              val spark = SparkSession.active
+              val spark = idSession
               val src =
                 if (f.format == "orc") spark.read.orc(f.path)
                 else spark.read.parquet(f.path)
@@ -2421,19 +2429,8 @@ final class GraftProcedure(pname: String, catalog: HadoopCatalog,
               val tmp = s"$staging/.tmp-${java.util.UUID.randomUUID}"
               val sorted = annotated.coalesce(1)
                 .sortWithinPartitions("file_path", "pos")
-              // id writing is governed by the session flag (default on);
-              // force it for this maintenance op so the rewritten tree
-              // stays externally readable regardless of session config
-              val flagKey = "spark.sql.parquet.fieldId.write.enabled"
-              val prior = spark.conf.getOption(flagKey)
-              spark.conf.set(flagKey, "true")
-              try {
-                if (f.format == "orc") sorted.write.orc(tmp)
-                else sorted.write.parquet(tmp)
-              } finally prior match {
-                case Some(v) => spark.conf.set(flagKey, v)
-                case None    => spark.conf.unset(flagKey)
-              }
+              if (f.format == "orc") sorted.write.orc(tmp)
+              else sorted.write.parquet(tmp)
               val ext = if (f.format == "orc") ".orc" else ".parquet"
               val part = GraftIO.list(tmp).filter(_.endsWith(ext)).head
               java.nio.file.Files.move(GraftIO.toPath(part), GraftIO.toPath(staged))
@@ -2912,7 +2909,7 @@ object RewriteDataFiles {
           org.apache.spark.TaskContext.get().taskAttemptId())
         try {
           rows.foreach(w.write)
-          Iterator(w.commit().asInstanceOf[GraftCommitMessage].files)
+          Iterator(w.commit().files)
         } catch {
           case e: Throwable => w.abort(); throw e
         } finally w.close()

@@ -4,6 +4,7 @@ import java.util.UUID
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
@@ -141,7 +142,7 @@ object SnapshotProps {
 object WapBranch {
   def resolve(): Option[String] =
     try SparkSession.active.conf.getOption("spark.wap.branch").filter(_.nonEmpty)
-    catch { case _: Throwable => None }
+    catch { case NonFatal(_) => None }
 
   /** Session WAP id (reference SparkWriteConf.wapId): always recorded in
     * the snapshot summary; when the table has `write.wap.enabled=true`
@@ -149,7 +150,7 @@ object WapBranch {
     * `publish_changes`. */
   def wapId(): Option[String] =
     try SparkSession.active.conf.getOption("spark.wap.id").filter(_.nonEmpty)
-    catch { case _: Throwable => None }
+    catch { case NonFatal(_) => None }
 
   /** Apply wap.id summary + stage-only to a producer; returns it. */
   def stage[P <: graft.core.meta.SnapshotProducer](
@@ -371,12 +372,17 @@ final class GraftBatchWrite(table: GTable, writeSchema: StructType, mode: WriteM
 }
 
 object GraftBatchWrite {
-  /** The data-file writer factory of every batch write, for files of
+  /** The data-file writer factory of every write, for files of
     * partition spec `spec`: format, codec, row-group and page size, bloom
     * filters, INT64 timestamps, field ids, shredded-variant columns and
-    * the encrypted-table format check. `lineage` appends the materialized
-    * `_row_id`/`_last_updated_sequence_number` columns (copy-on-write
-    * rewrites, compaction); `sortOrderId` is stamped on every file. */
+    * the encrypted-table format check. Its callers: appends, overwrites
+    * and copy-on-write rewrites (`GraftBatchWrite`), streaming appends and
+    * the streaming upsert's data files (`GraftWrite.toStreaming`),
+    * merge-on-read replacement and inserted rows (`GraftDeltaBatchWrite`,
+    * `GraftEqDeltaBatchWrite`) and `rewrite_data_files`. `lineage` appends
+    * the materialized `_row_id`/`_last_updated_sequence_number` columns
+    * (row-level writes, compaction); `sortOrderId` is stamped on every
+    * file. */
   def writerFactory(table: GTable, writeSchema: StructType, spec: PartitionSpec,
       lineage: Boolean, fileGBase: GSchema = null,
       formatOverride: Option[String] = None,
@@ -455,18 +461,8 @@ object GraftBatchWrite {
             fileSchema)
       case _ =>
         // table-level parquet tuning (reference TableProperties):
-        // write.parquet.compression-codec, row-group size, bloom filters
+        // row-group and page size, bloom filters
         val props = table.meta.properties
-        // per-write compression-codec / compression-level options
-        // (reference SparkWriteOptions) beat the table properties
-        val codec = codecOverride.getOrElse(
-          props.getOrElse("write.parquet.compression-codec",
-            spark.sessionState.conf
-              .getConfString("spark.sql.parquet.compression.codec", "snappy")))
-        codecLevel.orElse(props.get("write.parquet.compression-level")).foreach { lvl =>
-          job.getConfiguration.set("parquet.compression.codec.zstd.level", lvl)
-          job.getConfiguration.set("compression.level", lvl)
-        }
         props.get("write.parquet.row-group-size-bytes")
           .foreach(job.getConfiguration.set("parquet.block.size", _))
         props.get("write.parquet.page-size-bytes")
@@ -489,32 +485,55 @@ object GraftBatchWrite {
           case (k, v) if k == "write.parquet.bloom-filter-adaptive-enabled" =>
             job.getConfiguration.set("parquet.bloom.filter.adaptive.enabled", v)
         }
-        val w = new ParquetFileFormat().prepareWrite(spark, job,
-          Map("compression" -> codec), fileSchema)
-        // prepareWrite copies the SESSION field-id flag over ours —
-        // graft files must ALWAYS carry field ids, whatever the session
-        job.getConfiguration
-          .setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-        // timestamps as INT64 micros, never INT96 (format spec
-        // "Parquet: timestamp/timestamptz as int64 micros"; Spark's
-        // session default can still be legacy INT96, which also carries
-        // NO footer min/max — killing bound pruning and readable_metrics
-        // on every timestamp column)
-        job.getConfiguration.set(
-          "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        w
+        parquetOutput(spark, job, props, fileSchema, codecOverride, codecLevel)
     }
-    val confMap = job.getConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
     val metaJson = graft.core.meta.MetaJson
     new GraftWriterFactory(
       table.location,
       fileSchema.json,
       metaJson.writeSchema(fileGSchema).toString,
       metaJson.writeSpec(spec).toString,
-      owf, confMap, dataFormat, lineage = lineage, shredSpecs = shredSpecs,
+      owf, confMap(job), dataFormat, lineage = lineage, shredSpecs = shredSpecs,
       sortOrderId = sortOrderId)
   }
+
+  /** The parquet output of every file a write produces, data and delete
+    * files alike, configured into `job`: field ids always on (whatever
+    * the session says), timestamps as INT64 micros and the codec rule —
+    * the per-write `compression-codec` option, else
+    * `write.parquet.compression-codec`, else the session's codec; the
+    * compression level likewise from `compression-level`, else
+    * `write.parquet.compression-level`. */
+  private[spark] def parquetOutput(spark: SparkSession, job: Job,
+      props: Map[String, String], schema: StructType,
+      codecOverride: Option[String] = None,
+      codecLevel: Option[String] = None): OutputWriterFactory = {
+    val conf = job.getConfiguration
+    val codec = codecOverride.getOrElse(
+      props.getOrElse("write.parquet.compression-codec",
+        spark.sessionState.conf
+          .getConfString("spark.sql.parquet.compression.codec", "snappy")))
+    codecLevel.orElse(props.get("write.parquet.compression-level")).foreach { lvl =>
+      conf.set("parquet.compression.codec.zstd.level", lvl)
+      conf.set("compression.level", lvl)
+    }
+    val w = new ParquetFileFormat().prepareWrite(spark, job,
+      Map("compression" -> codec), schema)
+    // prepareWrite copies the SESSION field-id flag over ours —
+    // graft files must ALWAYS carry field ids, whatever the session
+    conf.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
+    // timestamps as INT64 micros, never INT96 (format spec
+    // "Parquet: timestamp/timestamptz as int64 micros"; Spark's
+    // session default can still be legacy INT96, which also carries
+    // NO footer min/max — killing bound pruning and readable_metrics
+    // on every timestamp column)
+    conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    w
+  }
+
+  /** a job conf as the serializable map the tasks rebuild it from */
+  private[spark] def confMap(job: Job): Map[String, String] =
+    job.getConfiguration.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
 }
 
 final case class GraftCommitMessage(files: Seq[DataFile]) extends WriterCommitMessage
@@ -527,63 +546,29 @@ final case class GraftCommitMessage(files: Seq[DataFile]) extends WriterCommitMe
 object GraftUpsertWriterFactory {
   def create(table: GTable, writeSchema: StructType,
       inner: DataWriterFactory): GraftUpsertWriterFactory = {
-    val spark = SparkSession.active
-    val eqIds = table.schema.identifierFieldIds.toSeq.sorted
-    val eqFields = eqIds.map(id => table.schema.fields.find(_.id == id).getOrElse(
-      throw new IllegalArgumentException(s"identifier field $id not in schema")))
-    // identifier sub-schema WITH parquet field ids so full-schema
-    // field-id reads bind the key columns (absent columns read null)
-    val eqStruct = SparkTypes.toSparkStruct(graft.core.types.GStruct(eqFields))
-    val conf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
-    conf.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    GraftParquetCrypto.configure(conf, table.meta)
-    val job = Job.getInstance(conf)
-    val owf = new ParquetFileFormat().prepareWrite(spark, job,
-      Map("compression" -> "snappy"), eqStruct)
-    // re-force after prepareWrite (it copies the session flag)
-    job.getConfiguration
-      .setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    val confMap = job.getConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    new GraftUpsertWriterFactory(inner, table.location, eqStruct.json,
-      confMap, eqFields.map(f => writeSchema.fieldIndex(f.name)).toArray,
-      eqIds.toArray, owf,
-      // eq deletes can't be DVs; only 'avro' switches the file format
-      if (table.meta.properties.get("write.delete.format").contains("avro")) "avro"
-      else "parquet")
+    val deletes = EqDeleteFiles.output(table)
+    new GraftUpsertWriterFactory(inner, deletes,
+      deletes.gSchema.fields.map(f => writeSchema.fieldIndex(f.name)).toArray)
   }
 }
 
 final class GraftUpsertWriterFactory(
     inner: DataWriterFactory,
-    location: String,
-    eqSchemaJson: String,
-    confMap: Map[String, String],
-    keyPos: Array[Int],
-    eqIds: Array[Int],
-    owf: OutputWriterFactory,
-    deleteFormat: String = "parquet") extends DataWriterFactory {
+    deletes: DeleteOutput,
+    keyPos: Array[Int]) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new GraftUpsertWriter(inner.createWriter(partitionId, taskId),
-      location, eqSchemaJson, confMap, keyPos, eqIds, owf, partitionId, taskId,
-      deleteFormat)
+      deletes, keyPos, partitionId, taskId)
 }
 
 final class GraftUpsertWriter(
     inner: DataWriter[InternalRow],
-    location: String,
-    eqSchemaJson: String,
-    confMap: Map[String, String],
+    deletes: DeleteOutput,
     keyPos: Array[Int],
-    eqIds: Array[Int],
-    owf: OutputWriterFactory,
     partitionId: Int,
-    taskId: Long,
-    deleteFormat: String = "parquet") extends DataWriter[InternalRow] {
+    taskId: Long) extends DataWriter[InternalRow] {
 
-  private val eqSchema = org.apache.spark.sql.types.DataType.fromJson(eqSchemaJson)
-    .asInstanceOf[StructType]
   // last row per key, insertion-ordered: the epoch's equality-delete file
   // shares its sequence number with the data files (eq deletes apply only
   // to LOWER sequences), so same-epoch duplicates must be resolved
@@ -591,7 +576,7 @@ final class GraftUpsertWriter(
   private val byKey = mutable.LinkedHashMap.empty[Seq[Any], InternalRow]
 
   override def write(row: InternalRow): Unit = {
-    val key = keyPos.zip(eqSchema.fields).map { case (p, f) =>
+    val key = keyPos.zip(deletes.schema.fields).map { case (p, f) =>
       SparkBridge.valueAt(row, p, f.dataType)
     }.toSeq
     byKey.put(key, row.copy())
@@ -602,10 +587,7 @@ final class GraftUpsertWriter(
     val keys = byKey.keys
     val dataMsg = inner.commit().asInstanceOf[GraftCommitMessage]
     if (keys.isEmpty) return GraftDeltaCommitMessage(dataMsg.files, Nil)
-    val conf = new Configuration(false)
-    confMap.foreach { case (k, v) => conf.set(k, v) }
-    val eqFile = EqDeleteFiles.write(location, eqSchema, eqIds, 0, Nil,
-      keys, owf, conf, partitionId, taskId, deleteFormat)
+    val eqFile = EqDeleteFiles.write(deletes, 0, Nil, keys, partitionId, taskId)
     GraftDeltaCommitMessage(dataMsg.files, Seq(eqFile))
   }
 
@@ -613,20 +595,29 @@ final class GraftUpsertWriter(
   override def close(): Unit = inner.close()
 }
 
-/** Writes one equality-delete parquet file: rows are identifier-key
-  * tuples; readers drop any lower-sequence data row whose key matches
+/** Writes one equality-delete file: rows are identifier-key tuples;
+  * readers drop any lower-sequence data row whose key matches
   * (format/spec.md equality deletes). Shared by the streaming-upsert
   * writer (global scope) and the SQL DELETE equality path
   * (partition-scoped). */
 object EqDeleteFiles {
-  def write(location: String, eqSchema: StructType, eqIds: Array[Int],
+  /** the equality-delete output of `table`: its identifier fields in id
+    * order, WITH field ids so full-schema field-id reads bind the key
+    * columns (absent columns read null) */
+  def output(table: GTable): DeleteOutput = {
+    val eqFields = table.schema.identifierFieldIds.toSeq.sorted.map(id =>
+      table.schema.fields.find(_.id == id).getOrElse(
+        throw new IllegalArgumentException(s"identifier field $id not in schema")))
+    val gEq = GSchema(GStruct(eqFields))
+    DeleteOutput(SparkSession.active, table,
+      SparkTypes.toSparkStruct(gEq.struct), gEq, DeleteOutput.formatOf(table.meta))
+  }
+
+  def write(deletes: DeleteOutput,
       specId: Int, partition: Seq[Any], keys: Iterable[Seq[Any]],
-      owf: OutputWriterFactory, conf: Configuration,
-      partitionId: Int, taskId: Long, format: String = "parquet"): DataFile = {
-    val dir = s"$location/data"
-    java.nio.file.Files.createDirectories(GraftIO.toPath(dir))
-    val ext = if (format == "avro") "avro" else "parquet"
-    val path = s"$dir/eq-delete-$partitionId-$taskId-${UUID.randomUUID}.$ext"
+      partitionId: Int, taskId: Long): DataFile = {
+    val eqSchema = deletes.schema
+    val eqIds = deletes.gSchema.fields.map(_.id)
     val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       eqSchema.length)
     def fill(key: Seq[Any]): InternalRow = {
@@ -637,21 +628,8 @@ object EqDeleteFiles {
       }
       out
     }
-    if (format == "avro") {
-      // field ids ride as avro field-id props (eqSchema carries them in
-      // its Spark metadata), matching Flink's eq-delete file shape
-      val gEq = graft.core.types.GSchema(graft.core.types.GStruct(
-        eqSchema.fields.zip(eqIds).map { case (f, id) =>
-          graft.core.types.GField(id, f.name, SparkBridge.gTypeOf(f.dataType))
-        }.toSeq))
-      GraftAvro.writeFile(path, eqSchema, gEq, keys.iterator.map(fill))
-    } else {
-      val ctx = new TaskAttemptContextImpl(conf,
-        new TaskAttemptID(new TaskID("graft-eq", partitionId, TaskType.MAP, taskId.toInt), 0))
-      val w = owf.newInstance(path, eqSchema, ctx)
-      keys.foreach(k => w.write(fill(k)))
-      w.close()
-    }
+    val path = deletes.write("eq-delete", partitionId, taskId,
+      keys.iterator.map(fill))
     // min/max of the key columns (values are already in memory): the
     // delta conflict validation prunes concurrent operations by these
     // bounds — without them every pair of concurrent row-level ops on
@@ -672,10 +650,10 @@ object EqDeleteFiles {
           Some((keys.size - vals.size).toLong), None, lo, hi)
       }
     }.toMap
-    DataFile(path, ext, specId, partition, keys.size.toLong,
+    DataFile(path, deletes.format, specId, partition, keys.size.toLong,
       GraftIO.size(path), stats,
       content = graft.core.meta.FileContent.EqualityDeletes,
-      equalityIds = eqIds.toSeq)
+      equalityIds = eqIds)
   }
 
   def toInternal(v: Any, dt: org.apache.spark.sql.types.DataType): Any = v match {
@@ -700,7 +678,7 @@ final class GraftWriterFactory(
     shredSpecs: Seq[GraftSparkTable.ShredSpec] = Nil,
     sortOrderId: Option[Int] = None) extends DataWriterFactory {
 
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
+  override def createWriter(partitionId: Int, taskId: Long): GraftFanoutWriter = {
     val writeSchema = org.apache.spark.sql.types.DataType.fromJson(writeSchemaJson)
       .asInstanceOf[StructType]
     val gSchema = MetaJson.readSchema(MetaJson.mapper.readTree(gSchemaJson))
@@ -717,10 +695,10 @@ final class GraftWriterFactory(
   * the parquet footer on close (reference FanoutDataWriter +
   * SparkFileWriterFactory). */
 final class GraftFanoutWriter(
-    location: String,
+    val location: String,
     writeSchema: StructType,
-    gSchema: GSchema,
-    spec: PartitionSpec,
+    val gSchema: GSchema,
+    val spec: PartitionSpec,
     owf: OutputWriterFactory,
     conf: Configuration,
     partitionId: Int,
@@ -764,7 +742,7 @@ final class GraftFanoutWriter(
         .variantGet(row.get(ord, org.apache.spark.sql.types.VariantType)
           .asInstanceOf[org.apache.spark.unsafe.types.VariantVal],
           path, dt, shredCastArgs, "variant_shred")
-      catch { case _: Throwable => null }
+      catch { case NonFatal(_) => null }
   }
 
   private final class ShredAcc {
@@ -950,7 +928,7 @@ final class GraftFanoutWriter(
     }
   }
 
-  override def commit(): WriterCommitMessage = {
+  override def commit(): GraftCommitMessage = {
     open.foreach { case (key, f) =>
       f.writer.close()
       closed += ((key, f.path, f.rows, f.geo, f.shred))
@@ -973,7 +951,7 @@ final class GraftFanoutWriter(
   }
 
   override def abort(): Unit = {
-    open.values.foreach(f => try f.writer.close() catch { case _: Throwable => () })
+    open.values.foreach(f => try f.writer.close() catch { case NonFatal(_) => () })
     open.keys.toSeq.foreach(open.remove)
     closed.result().foreach { case (_, path, _, _, _) => GraftIO.delete(path) }
   }
@@ -1025,45 +1003,21 @@ final class GraftDeltaBatchWrite(table: GTable, branchPin: Option[String] = None
   extends DeltaBatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val spark = SparkSession.active
-    // replacement rows materialize lineage (UPDATE keeps _row_id; the
-    // nulled last-updated seq falls back to the new commit's sequence)
-    val writeSchema = StructType(SparkTypes.toSparkSchema(table.schema).fields ++
-      GraftSparkTable.lineageReadFields)
-    val gSchemaForFile = table.schema.copy(struct = graft.core.types.GStruct(
-      table.schema.fields ++ GraftSparkTable.lineageGFields))
-    val conf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
-    conf.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    GraftParquetCrypto.configure(conf, table.meta)
-    val codec = Map("compression" -> spark.sessionState.conf
-      .getConfString("spark.sql.parquet.compression.codec", "snappy"))
-    val dataJob = Job.getInstance(conf)
-    table.meta.properties.get("write.target-file-rows")
-      .foreach(dataJob.getConfiguration.set("graft.write.target-file-rows", _))
-    val dataOwf = new ParquetFileFormat().prepareWrite(spark, dataJob, codec, writeSchema)
-    dataJob.getConfiguration
-      .setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    val confMap = dataJob.getConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    // the delete writer needs the conf prepareWrite populated with the
-    // DELETE schema, not the data schema
-    val (delOwf, delConfMap) =
-      GraftDeltaWriter.parquetDeleteOutput(spark, table.meta)
+    val props = table.meta.properties
     new GraftDeltaWriterFactory(
-      table.location, writeSchema.json,
-      MetaJson.writeSchema(gSchemaForFile).toString,
-      MetaJson.writeSpec(table.spec).toString,
-      dataOwf, delOwf, confMap, delConfMap,
+      GraftDeltaBatchWrite.dataWriterFactory(table),
+      DeleteOutput(SparkSession.active, table, GraftDeltaWriter.DeleteSchema,
+        GraftDeltaWriter.DeleteGSchema, DeleteOutput.formatOf(table.meta)),
       // v3+ tables default to deletion vectors (reference v3: DVs replace
       // position-delete files); explicit write.delete.format still wins
-      table.meta.properties.getOrElse("write.delete.format",
-        if (table.meta.formatVersion >= 3) "dv" else "parquet"),
+      dvs = props.getOrElse("write.delete.format",
+        if (table.meta.formatVersion >= 3) "dv" else "parquet") == "dv",
       // position-delete scoping (reference DeleteGranularity): 'file'
       // rolls one delete file per referenced data file — prunable by the
       // delete index and droppable one-for-one when the data file is
       // rewritten; 'partition' (default) packs a task's deletes per
       // partition. DVs are inherently file-granular.
-      deleteGranularity.getOrElse(table.meta.properties
+      deleteGranularity.getOrElse(props
         .getOrElse("write.delete.granularity", "partition")).toLowerCase,
       crypto = graft.core.meta.TableCrypto.resolve(table.meta))
   }
@@ -1088,40 +1042,32 @@ final class GraftDeltaBatchWrite(table: GTable, branchPin: Option[String] = None
       .foreach(m => (m.dataFiles ++ m.deleteFiles).foreach(f => GraftIO.delete(f.path)))
 }
 
+object GraftDeltaBatchWrite {
+  /** the data writers of a row-level delta: the table's own writer
+    * factory, with lineage materialized so replacement rows keep their
+    * `_row_id` (the nulled last-updated seq falls back to the new
+    * commit's sequence). No sort order id is stamped: delta rows arrive
+    * ordered by `_file, _pos`, not by the table's sort order. */
+  def dataWriterFactory(table: GTable): GraftWriterFactory =
+    GraftBatchWrite.writerFactory(table, SparkTypes.toSparkSchema(table.schema),
+      table.spec, lineage = true)
+}
+
 final case class GraftDeltaCommitMessage(dataFiles: Seq[DataFile],
     deleteFiles: Seq[DataFile]) extends WriterCommitMessage
 
 final class GraftDeltaWriterFactory(
-    location: String,
-    writeSchemaJson: String,
-    gSchemaJson: String,
-    specJson: String,
-    dataOwf: OutputWriterFactory,
-    delOwf: OutputWriterFactory,
-    confMap: Map[String, String],
-    delConfMap: Map[String, String],
-    deleteFormat: String = "parquet",
-    deleteGranularity: String = "partition",
+    data: GraftWriterFactory,
+    deletes: DeleteOutput,
+    dvs: Boolean,
+    deleteGranularity: String,
     // encrypted tables: resolved table key ships serialized to executors
     // so DV content files encrypt with derived per-file keys
-    crypto: Option[graft.core.meta.TableCrypto] = None) extends DeltaWriterFactory {
+    crypto: Option[graft.core.meta.TableCrypto]) extends DeltaWriterFactory {
 
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] = {
-    val writeSchema = org.apache.spark.sql.types.DataType.fromJson(writeSchemaJson)
-      .asInstanceOf[StructType]
-    val gSchema = MetaJson.readSchema(MetaJson.mapper.readTree(gSchemaJson))
-    val spec = MetaJson.readSpec(MetaJson.mapper.readTree(specJson))
-    val conf = new Configuration(false)
-    confMap.foreach { case (k, v) => conf.set(k, v) }
-    val dataWriter = new GraftFanoutWriter(location, writeSchema, gSchema, spec,
-      dataOwf, conf, partitionId, taskId, lineage = true)
-    val delConf = new Configuration(false)
-    delConfMap.foreach { case (k, v) => delConf.set(k, v) }
-    new GraftDeltaWriter(location, spec.specId,
-      spec.partitionType(gSchema).fields.map(f => SparkTypes.toSpark(f.tpe)).toArray,
-      dataWriter, delOwf, delConf, partitionId, taskId, deleteFormat,
-      deleteGranularity, crypto)
-  }
+  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
+    new GraftDeltaWriter(data.createWriter(partitionId, taskId), deletes,
+      partitionId, taskId, dvs, deleteGranularity, crypto)
 }
 
 object GraftDeltaWriter {
@@ -1144,11 +1090,9 @@ object GraftDeltaWriter {
         "pos", graft.core.types.GLong, required = true))))
 
   /** partition tuple (internal rep) from a (_spec_id, _partition)
-    * metadata projection row, or Nil when it doesn't apply cleanly —
-    * Nil means the delete file attaches globally, which is always
-    * correct, just less prunable */
-  /** Some(tuple) when the row belongs to the CURRENT spec (the empty
-    * tuple for an unpartitioned current spec); None for rows of OTHER
+    * metadata projection row: Some(tuple) when the row belongs to the
+    * CURRENT spec (the empty tuple for an unpartitioned current spec);
+    * None for rows of OTHER
     * specs — their delete files must go GLOBAL (the _partition metadata
     * column is typed by the current spec, so an old spec's tuple is
     * unreadable here; the reference reads a unified struct instead). */
@@ -1168,59 +1112,35 @@ object GraftDeltaWriter {
       case scala.util.control.NonFatal(_) => None
     }
 
-  /** Parquet writer factory and job conf for position-delete files
-    * (field ids on, the table's parquet encryption set, the session's
-    * compression codec); built once per write, both ship to the tasks
-    * that call `writeDeleteFile`. */
-  def parquetDeleteOutput(spark: SparkSession, meta: TableMetadata)
-      : (OutputWriterFactory, Map[String, String]) = {
-    val conf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
-    conf.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    GraftParquetCrypto.configure(conf, meta)
-    val codec = Map("compression" -> spark.sessionState.conf
-      .getConfString("spark.sql.parquet.compression.codec", "snappy"))
-    val job = Job.getInstance(conf)
-    val owf = new ParquetFileFormat().prepareWrite(spark, job, codec, DeleteSchema)
-    job.getConfiguration.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    (owf, job.getConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap)
-  }
+  /** the delete group of a deleted row: its (spec id, value-hashable
+    * partition tuple) key and the partition tuple itself — current-spec
+    * rows fan out per partition so the delete files prune at scan time;
+    * rows of OTHER specs group under the GLOBAL sentinel (empty tuple,
+    * resolved to an unpartitioned spec at commit) */
+  def deleteGroup(meta: InternalRow, specId: Int,
+      partSparkTypes: Array[org.apache.spark.sql.types.DataType])
+      : ((Int, Seq[Any]), Seq[Any]) =
+    partitionOf(meta, specId, partSparkTypes) match {
+      case Some(t) =>
+        ((specId, t.map { case b: Array[Byte] => b.toSeq; case x => x }), t)
+      case None => ((graft.core.meta.GlobalDeletes.SpecSentinel, Nil), Nil)
+    }
 
-  /** one position-delete file for `dels` (sorted (file,pos)) under
-    * `location`/data; format is `write.delete.format` — parquet (default,
-    * through `delOwf`/`conf` from `parquetDeleteOutput`) or avro (the
-    * shape Flink CDC pipelines write; reference core delete writers take
-    * any FileFormat). The DML delete writer and
-    * rewrite_position_delete_files both write through here. */
-  def writeDeleteFile(location: String, deleteFormat: String,
-      delOwf: OutputWriterFactory, conf: Configuration,
+  /** one position-delete file for `dels` (sorted (file,pos)), through
+    * `deletes`. The DML delete writer and rewrite_position_delete_files
+    * both write through here. */
+  def writeDeleteFile(deletes: DeleteOutput,
       partitionId: Int, taskId: Long, sid: Int, partition: Seq[Any],
       dels: mutable.ArrayBuffer[(String, Long)]): DataFile = {
-    val dir = s"$location/data"
-    java.nio.file.Files.createDirectories(GraftIO.toPath(dir))
-    val ext = if (deleteFormat == "avro") "avro" else "parquet"
-    val path = s"$dir/delete-$partitionId-$taskId-${UUID.randomUUID}.$ext"
     // sorted by (file, pos) so per-file runs are contiguous
     dels.sortInPlace()
     val rowOut = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
-    if (deleteFormat == "avro") {
-      GraftAvro.writeFile(path, DeleteSchema, DeleteGSchema,
-        dels.iterator.map { case (f, p) =>
-          rowOut.update(0, org.apache.spark.unsafe.types.UTF8String.fromString(f))
-          rowOut.setLong(1, p)
-          rowOut: InternalRow
-        })
-    } else {
-      val ctx = new TaskAttemptContextImpl(conf,
-        new TaskAttemptID(new TaskID("graft-del", partitionId, TaskType.MAP, taskId.toInt), 0))
-      val w = delOwf.newInstance(path, DeleteSchema, ctx)
-      dels.foreach { case (f, p) =>
+    val path = deletes.write("delete", partitionId, taskId,
+      dels.iterator.map { case (f, p) =>
         rowOut.update(0, org.apache.spark.unsafe.types.UTF8String.fromString(f))
         rowOut.setLong(1, p)
-        w.write(rowOut)
-      }
-      w.close()
-    }
+        rowOut: InternalRow
+      })
     val refs = dels.map(_._1).distinct
     // file_path range of the RELOCATION-STABLE suffix keys: the delete
     // index uses it to skip data files this delete can't reference
@@ -1230,7 +1150,7 @@ object GraftDeltaWriter {
       graft.core.expr.ColStats(valueCount = Some(dels.size.toLong),
         nullCount = Some(0L), nanCount = None,
         lower = Some(keys.min), upper = Some(keys.max)))
-    DataFile(path, ext, sid, partition, dels.size.toLong,
+    DataFile(path, deletes.format, sid, partition, dels.size.toLong,
       GraftIO.size(path), pathStats, content = FileContent.PositionDeletes,
       referencedDataFile = if (refs.size == 1) Some(refs.head) else None)
   }
@@ -1249,34 +1169,91 @@ object GraftDeltaWriter {
   }
 }
 
+/** Everything a task needs to write one kind of delete file into a
+  * table: its location, the row schema (with its graft field ids), the
+  * file format (`parquet` or `avro`) and, for parquet, the output writer
+  * factory and job conf. Built once per write on the driver by
+  * `DeleteOutput.apply`; ships to the tasks. */
+final class DeleteOutput(location: String, val schema: StructType,
+    val gSchema: GSchema, val format: String, owf: OutputWriterFactory,
+    confMap: Map[String, String]) extends Serializable {
+
+  @transient private lazy val conf = {
+    val c = new Configuration(false)
+    confMap.foreach { case (k, v) => c.set(k, v) }
+    c
+  }
+
+  /** writes `rows` to a new `<prefix>-<partitionId>-<taskId>-<uuid>`
+    * file under the table's data directory; returns its path */
+  def write(prefix: String, partitionId: Int, taskId: Long,
+      rows: Iterator[InternalRow]): String = {
+    val dir = s"$location/data"
+    java.nio.file.Files.createDirectories(GraftIO.toPath(dir))
+    val path = s"$dir/$prefix-$partitionId-$taskId-${UUID.randomUUID}.$format"
+    // avro carries the field ids as field-id props (the shape Flink CDC
+    // pipelines write; reference core delete writers take any FileFormat)
+    if (format == "avro") GraftAvro.writeFile(path, schema, gSchema, rows)
+    else {
+      val ctx = new TaskAttemptContextImpl(conf,
+        new TaskAttemptID(new TaskID("graft-del", partitionId, TaskType.MAP, taskId.toInt), 0))
+      val w = owf.newInstance(path, schema, ctx)
+      rows.foreach(w.write)
+      w.close()
+    }
+    path
+  }
+}
+
+object DeleteOutput {
+  /** the table's delete-file format: `avro` only when write.delete.format
+    * says so, else parquet (equality deletes can't be DVs; the position
+    * delete writer checks `dv` before it gets here) */
+  def formatOf(meta: TableMetadata): String =
+    if (meta.properties.get("write.delete.format").contains("avro")) "avro"
+    else "parquet"
+
+  /** The one builder of delete-file output: position deletes, SQL and
+    * streaming-upsert equality deletes, and rewrite_position_delete_files.
+    * Parquet delete files are written like data files
+    * (`GraftBatchWrite.parquetOutput`): field ids on, the table's parquet
+    * encryption, INT64 timestamps, and the data-file codec rule —
+    * `write.parquet.compression-codec`, else the session's codec (the
+    * reference's delete codec also defaults to the data codec). */
+  def apply(spark: SparkSession, table: GTable, schema: StructType,
+      gSchema: GSchema, format: String): DeleteOutput = {
+    val conf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
+    GraftParquetCrypto.configure(conf, table.meta)
+    val job = Job.getInstance(conf)
+    val owf =
+      if (format == "avro") null
+      else GraftBatchWrite.parquetOutput(spark, job, table.meta.properties, schema)
+    new DeleteOutput(table.location, schema, gSchema, format, owf,
+      GraftBatchWrite.confMap(job))
+  }
+}
+
 final class GraftDeltaWriter(
-    location: String,
-    specId: Int,
-    partSparkTypes: Array[org.apache.spark.sql.types.DataType],
     dataWriter: GraftFanoutWriter,
-    delOwf: OutputWriterFactory,
-    conf: Configuration,
+    deletes: DeleteOutput,
     partitionId: Int,
     taskId: Long,
-    deleteFormat: String = "parquet",
-    deleteGranularity: String = "partition",
-    crypto: Option[graft.core.meta.TableCrypto] = None) extends DeltaWriter[InternalRow] {
+    dvs: Boolean,
+    deleteGranularity: String,
+    crypto: Option[graft.core.meta.TableCrypto]) extends DeltaWriter[InternalRow] {
+
+  private val specId = dataWriter.spec.specId
+  private val partSparkTypes = dataWriter.spec.partitionType(dataWriter.gSchema)
+    .fields.map(f => SparkTypes.toSpark(f.tpe)).toArray
 
   // position deletes grouped by (specId, referenced file's partition
-  // tuple): current-spec rows fan out per partition so the delete files
-  // prune at scan time; rows of OTHER specs group under the GLOBAL
-  // sentinel (empty tuple, resolved to an unpartitioned spec at commit)
+  // tuple), see GraftDeltaWriter.deleteGroup
   private val deleted = mutable.Map
     .empty[(Int, Seq[Any]), (Seq[Any], mutable.ArrayBuffer[(String, Long)])]
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
-    val (sid, raw) =
-      GraftDeltaWriter.partitionOf(meta, specId, partSparkTypes) match {
-        case Some(t) => (specId, t)
-        case None    => (graft.core.meta.GlobalDeletes.SpecSentinel, Nil)
-      }
-    val key = (sid, raw.map { case b: Array[Byte] => b.toSeq; case x => x })
-    deleted.getOrElseUpdate(key, (raw, mutable.ArrayBuffer.empty))
+    val (key, partition) = GraftDeltaWriter.deleteGroup(meta, specId, partSparkTypes)
+    deleted.getOrElseUpdate(key, (partition, mutable.ArrayBuffer.empty))
       ._2 += ((id.getUTF8String(0).toString, id.getLong(1)))
   }
 
@@ -1291,13 +1268,13 @@ final class GraftDeltaWriter(
 
   private def writeDeleteFile(sid: Int, partition: Seq[Any],
       dels: mutable.ArrayBuffer[(String, Long)]): DataFile =
-    GraftDeltaWriter.writeDeleteFile(location, deleteFormat, delOwf, conf,
+    GraftDeltaWriter.writeDeleteFile(deletes,
       partitionId, taskId, sid, partition, dels)
 
   override def commit(): WriterCommitMessage = {
-    val dataMsg = dataWriter.commit().asInstanceOf[GraftCommitMessage]
+    val dataFiles = dataWriter.commit().files
     val deleteFiles =
-      if (deleteFormat == "dv") commitDVs()
+      if (dvs) commitDVs()
       else if (deleteGranularity == "file")
         // file granularity (reference DeleteGranularity.FILE): one delete
         // file per referenced data file — the delete index prunes it to
@@ -1312,7 +1289,7 @@ final class GraftDeltaWriter(
       else deleted.toSeq.map { case ((sid, _), (partition, dels)) =>
         writeDeleteFile(sid, partition, dels)
       }
-    GraftDeltaCommitMessage(dataMsg.files, deleteFiles)
+    GraftDeltaCommitMessage(dataFiles, deleteFiles)
   }
 
   /** deletion vectors: one Roaring bitmap file per referenced data file
@@ -1320,7 +1297,7 @@ final class GraftDeltaWriter(
   private def commitDVs(): Seq[DataFile] =
     deleted.toSeq.flatMap { case ((sid, _), (partition, dels)) =>
       dels.groupBy(_._1).toSeq.map { case (dataPath, posRows) =>
-        GraftDeltaWriter.writeDV(location, partitionId, taskId, sid,
+        GraftDeltaWriter.writeDV(dataWriter.location, partitionId, taskId, sid,
           partition, dataPath, posRows.iterator.map(_._2), crypto)
       }
     }
@@ -1372,51 +1349,11 @@ final class GraftEqDeltaBatchWrite(table: GTable, branchPin: Option[String] = No
   // commit/abort are identical to the position-delta path: one RowDelta
   private val delegate = new GraftDeltaBatchWrite(table, branchPin, conflict, serializable)
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val spark = SparkSession.active
-    val eqIds = table.schema.identifierFieldIds.toSeq.sorted
-    val eqFields = eqIds.map(id => table.schema.fields.find(_.id == id).getOrElse(
-      throw new IllegalArgumentException(s"identifier field $id not in schema")))
-    // identifier sub-schema WITH parquet field ids so full-schema
-    // field-id reads bind the key columns
-    val eqStruct = SparkTypes.toSparkStruct(graft.core.types.GStruct(eqFields))
-    val conf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
-    conf.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    GraftParquetCrypto.configure(conf, table.meta)
-    val job = Job.getInstance(conf)
-    val owf = new ParquetFileFormat().prepareWrite(spark, job,
-      Map("compression" -> "snappy"), eqStruct)
-    // re-force after prepareWrite (it copies the session flag)
-    job.getConfiguration
-      .setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    val confMap = job.getConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    // UPDATE/MERGE also write replacement rows: a full-schema data
-    // writer with the same codec + roll-size handling the position-delta
-    // path uses (not a hardcoded codec); lineage columns materialize so
-    // replacements keep their _row_id
-    val writeSchema = StructType(SparkTypes.toSparkSchema(table.schema).fields ++
-      GraftSparkTable.lineageReadFields)
-    val gSchemaForFile = table.schema.copy(struct = graft.core.types.GStruct(
-      table.schema.fields ++ GraftSparkTable.lineageGFields))
-    val codec = Map("compression" -> spark.sessionState.conf
-      .getConfString("spark.sql.parquet.compression.codec", "snappy"))
-    val dataJob = Job.getInstance(conf)
-    table.meta.properties.get("write.target-file-rows")
-      .foreach(dataJob.getConfiguration.set("graft.write.target-file-rows", _))
-    val dataOwf = new ParquetFileFormat().prepareWrite(spark, dataJob, codec, writeSchema)
-    dataJob.getConfiguration
-      .setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    val dataConfMap = dataJob.getConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    new GraftEqDeltaWriterFactory(table.location, eqStruct.json, confMap,
-      eqIds.toArray, MetaJson.writeSpec(table.spec).toString,
-      MetaJson.writeSchema(gSchemaForFile).toString, owf,
-      writeSchema.json, dataOwf, dataConfMap,
-      // eq deletes can't be DVs; only 'avro' switches the file format
-      if (table.meta.properties.get("write.delete.format").contains("avro")) "avro"
-      else "parquet")
-  }
+  // UPDATE/MERGE also write replacement rows, through the same data
+  // writers as the position-delta path
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
+    new GraftEqDeltaWriterFactory(GraftDeltaBatchWrite.dataWriterFactory(table),
+      EqDeleteFiles.output(table))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     delegate.commit(messages)
@@ -1426,49 +1363,24 @@ final class GraftEqDeltaBatchWrite(table: GTable, branchPin: Option[String] = No
 }
 
 final class GraftEqDeltaWriterFactory(
-    location: String,
-    eqSchemaJson: String,
-    confMap: Map[String, String],
-    eqIds: Array[Int],
-    specJson: String,
-    gSchemaJson: String,
-    owf: OutputWriterFactory,
-    writeSchemaJson: String,
-    dataOwf: OutputWriterFactory,
-    dataConfMap: Map[String, String],
-    deleteFormat: String = "parquet") extends DeltaWriterFactory {
+    data: GraftWriterFactory,
+    deletes: DeleteOutput) extends DeltaWriterFactory {
 
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] = {
-    val eqSchema = org.apache.spark.sql.types.DataType.fromJson(eqSchemaJson)
-      .asInstanceOf[StructType]
-    val gSchema = MetaJson.readSchema(MetaJson.mapper.readTree(gSchemaJson))
-    val spec = MetaJson.readSpec(MetaJson.mapper.readTree(specJson))
-    val conf = new Configuration(false)
-    confMap.foreach { case (k, v) => conf.set(k, v) }
-    val writeSchema = org.apache.spark.sql.types.DataType.fromJson(writeSchemaJson)
-      .asInstanceOf[StructType]
-    val dataConf = new Configuration(false)
-    dataConfMap.foreach { case (k, v) => dataConf.set(k, v) }
-    val dataWriter = new GraftFanoutWriter(location, writeSchema, gSchema, spec,
-      dataOwf, dataConf, partitionId, taskId, lineage = true)
-    new GraftEqDeltaWriter(location, spec.specId,
-      spec.partitionType(gSchema).fields.map(f => SparkTypes.toSpark(f.tpe)).toArray,
-      eqSchema, eqIds, owf, conf, partitionId, taskId, dataWriter, deleteFormat)
-  }
+  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
+    new GraftEqDeltaWriter(data.createWriter(partitionId, taskId), deletes,
+      partitionId, taskId)
 }
 
 final class GraftEqDeltaWriter(
-    location: String,
-    specId: Int,
-    partSparkTypes: Array[org.apache.spark.sql.types.DataType],
-    eqSchema: StructType,
-    eqIds: Array[Int],
-    owf: OutputWriterFactory,
-    conf: Configuration,
-    partitionId: Int,
-    taskId: Long,
     dataWriter: GraftFanoutWriter,
-    deleteFormat: String = "parquet") extends DeltaWriter[InternalRow] {
+    deletes: DeleteOutput,
+    partitionId: Int,
+    taskId: Long) extends DeltaWriter[InternalRow] {
+
+  private val specId = dataWriter.spec.specId
+  private val partSparkTypes = dataWriter.spec.partitionType(dataWriter.gSchema)
+    .fields.map(f => SparkTypes.toSpark(f.tpe)).toArray
+  private val eqSchema = deletes.schema
 
   // distinct identifier tuples per (specId, referenced partition tuple):
   // a key deleted twice in one task writes once (equality deletes are
@@ -1478,19 +1390,15 @@ final class GraftEqDeltaWriter(
     .empty[(Int, Seq[Any]), (Seq[Any], mutable.LinkedHashSet[Seq[Any]])]
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
-    val (sid, raw) =
-      GraftDeltaWriter.partitionOf(meta, specId, partSparkTypes) match {
-        case Some(t) => (specId, t)
-        case None    => (graft.core.meta.GlobalDeletes.SpecSentinel, Nil)
-      }
-    val partKey = (sid, raw.map { case b: Array[Byte] => b.toSeq; case x => x })
+    val (partKey, partition) =
+      GraftDeltaWriter.deleteGroup(meta, specId, partSparkTypes)
     val key = eqSchema.fields.indices.map { i =>
       SparkBridge.valueAt(id, i, eqSchema.fields(i).dataType) match {
         case b: Array[Byte] => b.toSeq // value-hashable for the set
         case x              => x
       }
     }
-    deleted.getOrElseUpdate(partKey, (raw, mutable.LinkedHashSet.empty))._2 += key
+    deleted.getOrElseUpdate(partKey, (partition, mutable.LinkedHashSet.empty))._2 += key
   }
 
   // UPDATE: eq-delete the OLD key, write the replacement row. Both land
@@ -1507,12 +1415,11 @@ final class GraftEqDeltaWriter(
   override def insert(row: InternalRow): Unit = dataWriter.write(row)
 
   override def commit(): WriterCommitMessage = {
-    val dataMsg = dataWriter.commit().asInstanceOf[GraftCommitMessage]
+    val dataFiles = dataWriter.commit().files
     val files = deleted.toSeq.map { case ((sid, _), (partition, keys)) =>
-      EqDeleteFiles.write(location, eqSchema, eqIds, sid, partition,
-        keys, owf, conf, partitionId, taskId, deleteFormat)
+      EqDeleteFiles.write(deletes, sid, partition, keys, partitionId, taskId)
     }
-    GraftDeltaCommitMessage(dataMsg.files, files)
+    GraftDeltaCommitMessage(dataFiles, files)
   }
 
   override def abort(): Unit = dataWriter.abort()

@@ -13,6 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * configured threshold, and rewrite-all is the explicit everything
   * escape hatch. */
 class RewriteOptionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+  import RewriteOptionsSpec.footer
 
   private var spark: SparkSession = _
 
@@ -134,18 +135,87 @@ class RewriteOptionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(files.head.getMap[Int, String](1).contains(2) &&
       files.head.getMap[Int, String](2).contains(2),
       s"no ts bounds on the compacted file: ${files.head}")
+    val (types, codecs) = footer(files.head.getString(0))
+    assert(types("ts") === "INT64")
+    assert(codecs.nonEmpty && codecs.forall(_ === "ZSTD"), s"codecs: $codecs")
+  }
+
+  test("merge-on-read UPDATEs write through the table's writers: format, codec, INT64 timestamps, bounds") {
+    def create(name: String, props: String): Unit = {
+      spark.sql(s"""CREATE TABLE graft.db.$name (id BIGINT, ts TIMESTAMP)
+        TBLPROPERTIES ('format-version'='2',
+                       'write.update.mode'='merge-on-read'$props)""")
+      spark.range(0, 10)
+        .selectExpr("id", "timestamp_seconds(1700000000 + id) AS ts")
+        .coalesce(1).writeTo(s"graft.db.$name").append()
+    }
+    def dataFiles(name: String) = spark.sql(
+      s"SELECT file_path, file_format, lower_bounds, upper_bounds FROM graft.db.$name.data_files")
+      .collect().toSeq
+    // shifts rows 0..2 one day later; returns the data files it added
+    def update(name: String) = {
+      val before = dataFiles(name).map(_.getString(0)).toSet
+      spark.sql(s"""UPDATE graft.db.$name
+        SET ts = timestamp_seconds(unix_seconds(ts) + 86400) WHERE id < 3""")
+      val rows = spark.sql(s"SELECT id, unix_seconds(ts) FROM graft.db.$name ORDER BY id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(rows === (0L until 10L).map(id =>
+        (id, 1700000000L + id + (if (id < 3) 86400L else 0L))), name)
+      dataFiles(name).filterNot(r => before(r.getString(0)))
+    }
+
+    // position deletes, then equality deletes keyed by the identifier
+    Seq("morpos" -> "", "moreq" -> ", 'write.update.equality-enabled'='true'")
+      .foreach { case (name, props) =>
+        create(name, ", 'write.parquet.compression-codec'='zstd'" + props)
+        if (props.nonEmpty)
+          spark.sql(s"CALL graft.system.set_identifier_fields('db.$name', 'id')")
+        val added = update(name)
+        assert(added.length === 1, s"$name: replacement files $added")
+        added.foreach { r =>
+          // field id 2 is `ts`: INT96 carries no footer statistics
+          assert(r.getMap[Int, String](2).contains(2) &&
+            r.getMap[Int, String](3).contains(2), s"$name: no ts bounds: $r")
+          val (types, codecs) = footer(r.getString(0))
+          assert(types("ts") === "INT64", name)
+          assert(codecs.nonEmpty && codecs.forall(_ === "ZSTD"), s"$name codecs: $codecs")
+        }
+        val deletes = spark.sql(
+          s"SELECT content, file_path FROM graft.db.$name.delete_files").collect()
+        assert(deletes.map(_.getInt(0)).toSet === Set(if (props.isEmpty) 1 else 2), name)
+        deletes.foreach { r =>
+          val codecs = footer(r.getString(1))._2
+          assert(codecs.nonEmpty && codecs.forall(_ === "ZSTD"),
+            s"$name delete file codecs: $codecs")
+        }
+      }
+
+    // the table's data-file format
+    create("mororc", ", 'write.format.default'='orc'")
+    val added = update("mororc")
+    assert(added.map(_.getString(1).toLowerCase) === Seq("orc") &&
+      added.head.getString(0).endsWith(".orc"), added)
+  }
+}
+
+object RewriteOptionsSpec {
+  /** the footer facts of the parquet file at `path` that say which
+    * writer wrote it: each top-level primitive column's physical type
+    * (INT96 vs INT64 timestamps) and the codec of every column chunk */
+  def footer(path: String): (Map[String, String], Seq[String]) = {
+    import scala.jdk.CollectionConverters._
     val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path("file://" + files.head.getString(0)),
+        new org.apache.hadoop.fs.Path("file://" + path),
         new org.apache.hadoop.conf.Configuration()))
     try {
-      val footer = rd.getFooter
-      assert(footer.getFileMetaData.getSchema.getType(Array("ts"): _*).asPrimitiveType
-        .getPrimitiveTypeName.name === "INT64")
-      val codecs = footer.getBlocks.get(0).getColumns.toArray.toSeq
-        .map(_.asInstanceOf[org.apache.parquet.hadoop.metadata.ColumnChunkMetaData]
-          .getCodec.name)
-      assert(codecs.nonEmpty && codecs.forall(_ === "ZSTD"), s"codecs: $codecs")
+      val meta = rd.getFooter
+      val types = meta.getFileMetaData.getSchema.getFields.asScala
+        .filter(_.isPrimitive)
+        .map(t => t.getName -> t.asPrimitiveType.getPrimitiveTypeName.name).toMap
+      val codecs = meta.getBlocks.asScala.toSeq
+        .flatMap(_.getColumns.asScala.map(_.getCodec.name))
+      (types, codecs)
     } finally rd.close()
   }
 }

@@ -2286,7 +2286,8 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming upsert: equality deletes replace prior key versions") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     spark.sql("""CREATE TABLE graft.db.upsrt (id BIGINT, v STRING)
-      TBLPROPERTIES ('write.upsert.enabled'='true')""")
+      TBLPROPERTIES ('write.upsert.enabled'='true',
+                     'write.parquet.compression-codec'='zstd')""")
     spark.sql("ALTER TABLE graft.db.upsrt SET IDENTIFIER FIELDS id")
     val s = spark
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
@@ -2311,6 +2312,12 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     val eq = coreTable("upsrt").newScan().planFiles().flatMap(_.deletes)
       .filter(_.content == graft.core.meta.FileContent.EqualityDeletes)
     assert(eq.nonEmpty, "no equality-delete files written")
+    // written like the table's data files: its parquet codec
+    eq.foreach { f =>
+      val codecs = RewriteOptionsSpec.footer(
+        graft.core.meta.GraftIO.toPath(f.path).toString)._2
+      assert(codecs.nonEmpty && codecs.forall(_ === "ZSTD"), s"${f.path}: $codecs")
+    }
     // compaction applies the equality deletes and drops them
     spark.sql("CALL graft.system.rewrite_data_files('db.upsrt')")
     val eqAfter = coreTable("upsrt").newScan().planFiles().flatMap(_.deletes)
